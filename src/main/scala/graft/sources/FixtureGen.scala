@@ -26,7 +26,7 @@ object FixtureGen {
     spark.sparkContext.setLogLevel("WARN")
 
     val ids = spark.read.parquet(
-      "/root/reference/tests/embedders/hex2vec/test_files/poz_8_regions.parquet")
+      ReferenceFixtures("tests/embedders/hex2vec/test_files/poz_8_regions.parquet"))
       .select("region_id").collect().map(_.getString(0)).sorted
     val origin = H3.fromHexString(ids.head)
     val cells = ids.map(H3.fromHexString)

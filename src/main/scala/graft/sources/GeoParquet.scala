@@ -2,8 +2,6 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** GeoParquet-aware reader (L1; reference:
@@ -39,22 +37,17 @@ object GeoParquet {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     val status = fs.getFileStatus(p)
-    val files = scala.collection.mutable.ArrayBuffer.empty[Path]
-    if (status.isFile) files += p
-    else {
-      val it = fs.listFiles(p, true)
-      while (it.hasNext && (files.isEmpty || checkAllFooters)) {
-        val f = it.next().getPath
-        if (f.getName.endsWith(".parquet") && !f.getName.startsWith("_") &&
-          !f.getName.startsWith(".")) files += f
+    val files =
+      if (status.isFile) Iterator.single(status)
+      else {
+        val parts = ParquetFiles.visible(fs, p)
+          .filter(_.getPath.getName.endsWith(".parquet"))
+        if (checkAllFooters) parts else parts.take(1)
       }
-    }
+    val footers = new ParquetFiles.Footers(conf)
     for (file <- files) {
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-      val geo =
-        try reader.getFooter.getFileMetaData.getKeyValueMetaData.get("geo")
-        finally reader.close()
-      if (geo != null) validateGeoMeta(geo, file.toString)
+      val geo = footers(file)(_.getFooter.getFileMetaData.getKeyValueMetaData.get("geo"))
+      if (geo != null) validateGeoMeta(geo, file.getPath.toString)
     }
   }
 

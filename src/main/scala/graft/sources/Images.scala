@@ -67,10 +67,14 @@ object Images {
     * `k` — the prunable synthesizer. Caption index math uses the identity
     * (k/10)%10 == floor((k%100)/10) (k ≥ 0) so every index is exact column
     * arithmetic; the expensive columns (bytes, phash) are the img_synth /
-    * img_synth_phash kernels, byte-identical to [[row]]. */
+    * img_synth_phash kernels, byte-identical to [[row]]. Every column reads
+    * the key through the same `raise_error` guard as [[row]]'s `require`,
+    * so a negative key fails whichever columns survive pruning. */
   private def projected(keys: DataFrame, patterns: Int): DataFrame = {
     graft.functions.Gf.register(keys.sparkSession)
-    val k = col("k")
+    val k = when(col("k") < 0, raise_error(concat(
+      lit("image key must be non-negative, got "), col("k").cast("string"))))
+      .otherwise(col("k"))
     val pat = k % patterns
     keys.select(
       format_string("img_%09d", k).as("image_id"),

@@ -3,8 +3,6 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
@@ -33,8 +31,10 @@ import org.apache.spark.sql.types._
   * or scan of the historical table — an Iceberg-style metadata commit):
   *   1. acquire the job lease (one empty file);
   *   2. write `df` into `staging/<jobId>/` (invisible to readers);
-  *   3. list that one directory; read row counts from the new files'
-  *      parquet FOOTERS (metadata only, no data scan);
+  *   3. walk that one directory with plain `listStatus` (no block
+  *      locations); read row counts from the new files' parquet FOOTERS
+  *      (metadata only, no data scan), each opened from its listed status
+  *      with read options built once per commit ([[ParquetFiles]]);
   *   4. write the `pending/<jobId>` marker naming every final path;
   *   5. rename each staged file into `data/`;
   *   6. land the manifest rows as `commit-<jobId>.parquet` (written to a
@@ -93,9 +93,11 @@ import org.apache.spark.sql.types._
   * All filesystem access goes through Hadoop [[FileSystem]] (works on HDFS /
   * object stores, not only local disk). On object stores without atomic
   * rename the per-file move in step 5 is a copy — still O(new); swap in a
-  * real Iceberg catalog for a pure-metadata commit. At cluster scale the
-  * driver-side footer loop in step 3 would come from task commit messages;
-  * per job it is one footer read per new file.
+  * real Iceberg catalog for a pure-metadata commit. Step 3 is a serial
+  * driver-side loop of one footer open per new file, with no status lookup,
+  * block-location lookup or options build per file, so its cost is the
+  * opens themselves. At cluster scale the row counts would come from task
+  * commit messages instead.
   *
   * Bucket column choice: a coarse cell prefix (e.g. S2 token at level 4-6 or
   * slippy z4 tile). Coarse-cell bucketing gives (a) partition pruning for
@@ -131,20 +133,6 @@ object LineageSink {
 
   /** Scheme-less normalized path, the single file-identity encoding. */
   private def key(p: Path): String = p.toUri.getPath
-
-  /** Visible files under `root` (recursive, skips `_temporary`/`_SUCCESS`/
-    * hidden entries). Callers only ever pass job-scoped directories. */
-  private def listFilesUnder(fs: FileSystem, root: Path): Seq[Path] = {
-    if (!fs.exists(root)) return Nil
-    val out = scala.collection.mutable.ArrayBuffer.empty[Path]
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val n = f.getPath.getName
-      if (!n.startsWith("_") && !n.startsWith(".")) out += f.getPath
-    }
-    out.toSeq
-  }
 
   // ------------------------------------------------------------- leases ---
 
@@ -455,7 +443,8 @@ object LineageSink {
     val tmp = new Path(s"${manifestDir(dir)}/.mtmp-$attempt")
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), manifestSchema)
       .write.mode(SaveMode.ErrorIfExists).parquet(tmp.toString)
-    val parts = listFilesUnder(fs, tmp).filter(_.getName.endsWith(".parquet"))
+    val parts = ParquetFiles.visible(fs, tmp).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet")).toVector
     require(parts.size == 1, s"expected one manifest part file, got $parts")
     val target = new Path(s"${manifestDir(dir)}/commit-$jobId.parquet")
     // defensive: rename-to-existing OVERWRITES on LocalFileSystem/S3A, so
@@ -495,18 +484,17 @@ object LineageSink {
          w.option("maxRecordsPerFile", maxRecordsPerFile)
        else w).parquet(staging.toString)
 
-      val staged = listFilesUnder(fs, staging)
+      val staged = ParquetFiles.visible(fs, staging).toVector
       if (staged.isEmpty) { fs.delete(staging, true); return }
 
       // per-bucket rows from the NEW files' footers only (metadata, no scan)
-      val perBucket = staged.groupBy(_.getParent.getName).toSeq.sortBy(_._1)
-        .map { case (partDirName, files) =>
-          val rows = files.map { p =>
-            val r = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
-            try r.getRecordCount finally r.close()
-          }.sum
+      val footers = new ParquetFiles.Footers(conf)
+      val perBucket = staged.groupBy(_.getPath.getParent.getName).toSeq.sortBy(_._1)
+        .map { case (partDirName, statuses) =>
+          val rows = statuses.map(st => footers(st)(_.getRecordCount)).sum
           val bucketValue = ExternalCatalogUtils.unescapePathName(
             partDirName.stripPrefix(bucketCol + "="))
+          val files = statuses.map(_.getPath)
           val finalKeys = files.map(p =>
             key(new Path(s"${dataDir(dir)}/$partDirName/${p.getName}")))
           (bucketValue, rows, partDirName, files, finalKeys)
@@ -1297,22 +1285,9 @@ object LineageSink {
         } catch { case _: java.io.IOException => Nil }
       }.toSet
     val now = System.currentTimeMillis()
-    val listed = {
-      val root = new Path(dataDir(dir))
-      if (!fs.exists(root)) Nil
-      else {
-        val out = scala.collection.mutable.ArrayBuffer.empty[String]
-        val it = fs.listFiles(root, true)
-        while (it.hasNext) {
-          val f = it.next()
-          val n = f.getPath.getName
-          if (!n.startsWith("_") && !n.startsWith(".") &&
-              now - f.getModificationTime > horizon &&
-              !inFlight(key(f.getPath))) out += key(f.getPath)
-        }
-        out.toSeq
-      }
-    }
+    val listed = ParquetFiles.visible(fs, new Path(dataDir(dir)))
+      .filter(f => now - f.getModificationTime > horizon)
+      .map(f => key(f.getPath)).filterNot(inFlight).toVector
     if (listed.isEmpty) return 0
     val committed = m.select(explode(col("files")).as("path")).distinct()
     val orphans = listed.toDF("path").join(committed, Seq("path"), "left_anti")
@@ -1334,7 +1309,7 @@ object LineageSink {
     val staging = new Path(s"${stagingRoot(dir)}/$jobId")
     df.write.mode(SaveMode.ErrorIfExists).partitionBy(bucketCol)
       .parquet(staging.toString)
-    val staged = listFilesUnder(fs, staging)
+    val staged = ParquetFiles.visible(fs, staging).map(_.getPath).toVector
     val finals = staged.map { p =>
       (p, new Path(s"${dataDir(dir)}/${p.getParent.getName}/${p.getName}"))
     }

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.GeoParquet
+import graft.sources.{GeoParquet, ReferenceFixtures}
 
 /** CRS guard on (Geo)Parquet reads — VERDICT r2 "missing" #6. */
 class GeoParquetSpec extends AnyFunSuite {
@@ -10,9 +10,9 @@ class GeoParquetSpec extends AnyFunSuite {
 
   test("real GeoParquet fixtures with WGS84 metadata load (EPSG:4326 + OGC:CRS84)") {
     val files = Seq(
-      "/root/reference/tests/embedders/hex2vec/test_files/poz_8_regions.parquet",
-      "/root/reference/tests/embedders/geovex/test_files/wro_9_regions.parquet",
-      "/root/reference/tests/loaders/test_files/example.parquet") // OGC:CRS84
+      "tests/embedders/hex2vec/test_files/poz_8_regions.parquet",
+      "tests/embedders/geovex/test_files/wro_9_regions.parquet",
+      "tests/loaders/test_files/example.parquet").map(ReferenceFixtures(_)) // last: OGC:CRS84
     for (f <- files) assert(GeoParquet.read(spark, f).count() > 0, f)
   }
 

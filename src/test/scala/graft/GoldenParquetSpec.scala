@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{Geo, H3}
 import graft.operators._
+import graft.sources.ReferenceFixtures
 
 /** Cross-checks against the reference's golden parquet snapshots
   * (tests/embedders/hex2vec/test_files — real OSM data over Poznań res-8
@@ -14,22 +15,23 @@ import graft.operators._
 class GoldenParquetSpec extends AnyFunSuite {
   import SparkTestSession.spark
 
-  val dir = "/root/reference/tests/embedders/hex2vec/test_files"
+  def hex2vec(name: String): String =
+    ReferenceFixtures(s"tests/embedders/hex2vec/test_files/$name")
 
   def regions(prefix: String): DataFrame =
-    spark.read.parquet(s"$dir/${prefix}_regions.parquet")
+    spark.read.parquet(hex2vec(s"${prefix}_regions.parquet"))
       .select(col("region_id"), col("geometry").as(Tables.Geometry))
   def features(prefix: String): DataFrame =
-    spark.read.parquet(s"$dir/${prefix}_features.parquet")
+    spark.read.parquet(hex2vec(s"${prefix}_features.parquet"))
       .select(col("feature_id"), col("geometry").as(Tables.Geometry))
   def goldenJoint(prefix: String): Set[(String, String)] =
-    spark.read.parquet(s"$dir/${prefix}_joint.parquet")
+    spark.read.parquet(hex2vec(s"${prefix}_joint.parquet"))
       .select("region_id", "feature_id").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
 
   test("wro_s2_14: stored S2 region geometries match our from-scratch boundaries") {
     val rows = spark.read.parquet(
-      "/root/reference/tests/embedders/s2vec/test_files/wro_s2_14_regions.parquet")
+      ReferenceFixtures("tests/embedders/s2vec/test_files/wro_s2_14_regions.parquet"))
       .select("region_id", "geometry").collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>

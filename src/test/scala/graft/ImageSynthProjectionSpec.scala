@@ -73,4 +73,18 @@ class ImageSynthProjectionSpec extends AnyFunSuite {
     val fullPlan = full.queryExecution.executedPlan.toString
     assert(fullPlan.contains("img_synth"))
   }
+
+  test("a negative key fails loudly, also on a pruned image_id/caption read") {
+    import spark.implicits._
+    for (k <- Seq(-1L, -25L)) {
+      val df = Images.synthesizeKeys(Seq(k).toDF("k")).toDF()
+        .select(col("image_id"), col("caption"))
+      // the guard must not cost the pruning
+      assert(!df.queryExecution.executedPlan.toString.contains("img_synth"))
+      val e = intercept[Exception](df.collect())
+      val messages = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString("\n")
+      assert(messages.contains(s"image key must be non-negative, got $k"), messages)
+    }
+  }
 }

@@ -2,14 +2,15 @@ package graft
 
 import java.net.URI
 
-import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{BlockLocation, FileStatus, Path, RawLocalFileSystem}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.LineageSink
 
 /** Local filesystem that records every directory LISTING (the operation
-  * whose count must not grow with table age — VERDICT r2 "what's wrong" #1).
+  * whose count must not grow with table age — VERDICT r2 "what's wrong" #1)
+  * and every block-location lookup (what a located listing pays per file).
   * Registered under the `counted://` scheme; all other behavior is
   * RawLocalFileSystem. */
 class CountingFileSystem extends RawLocalFileSystem {
@@ -22,10 +23,16 @@ class CountingFileSystem extends RawLocalFileSystem {
     super.listStatus(f).map(s => new FileStatus(s.getLen, s.isDirectory,
       s.getReplication, s.getBlockSize, s.getModificationTime, s.getPath))
   }
+  override def getFileBlockLocations(file: FileStatus, start: Long,
+                                     len: Long): Array[BlockLocation] = {
+    CountingFileSystem.located.add(file.getPath.toUri.getPath)
+    super.getFileBlockLocations(file, start, len)
+  }
 }
 
 object CountingFileSystem {
   val listed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  val located = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
 
 /** Commit cost is O(files written by the job): across many appends, no
@@ -51,12 +58,12 @@ class LineageListingSpec extends AnyFunSuite {
 
     // the probe: 2 more commits (incl. one resume) must not touch data/
     CountingFileSystem.listed.clear()
+    CountingFileSystem.located.clear()
     LineageSink.write(slice(6), dir, "bucket")
     LineageSink.resumeWrite(slice(6).union(slice(7)), dir, "bucket")
-    val touched = {
-      import scala.jdk.CollectionConverters._
-      CountingFileSystem.listed.asScala.toList
-    }
+    import scala.jdk.CollectionConverters._
+    val touched = CountingFileSystem.listed.asScala.toList
+    val located = CountingFileSystem.located.asScala.toList
 
     val dataRoot = s"$local/data"
     val offenders =
@@ -65,6 +72,14 @@ class LineageListingSpec extends AnyFunSuite {
       s"commit listed the committed data tree:\n${offenders.mkString("\n")}")
     // sanity: the probe did observe the job-scoped listings
     assert(touched.exists(_.contains("/staging/")), "probe saw no staging listing")
+    // the sink's own walks (staging, manifest temp dir) never ask for block
+    // locations; a located listing pays one lookup per staged file. Only
+    // Spark's file index, planning the read of the landed manifest files,
+    // still looks them up.
+    val landed = Seq("commit-", "v-").map(n => s"$local/manifest/$n")
+    val locatedBySink = located.filterNot(p => landed.exists(p.startsWith))
+    assert(locatedBySink.isEmpty,
+      s"commit looked up block locations:\n${locatedBySink.mkString("\n")}")
 
     // and the table is exactly-once complete
     val data = spark.read.parquet(s"$dir/data")
@@ -72,5 +87,33 @@ class LineageListingSpec extends AnyFunSuite {
     assert(data.select("id").distinct().count() === 800)
     assert(LineageSink.manifest(spark, dir)
       .agg(sum("rows")).collect()(0).getLong(0) === 800)
+  }
+
+  test("a _-prefixed bucket column with a null bucket commits every file") {
+    val dir = java.nio.file.Files.createTempDirectory("lineage-underscore").toString
+    // bucket dirs are `_cell=<v>` and `_cell=__HIVE_DEFAULT_PARTITION__`: a
+    // walk that skipped `_`-prefixed directories would stage nothing and
+    // the commit would return without a manifest row
+    val df = (0 until 300).map(i => (i.toLong, if (i % 7 == 0) null else s"c${i % 5}"))
+      .toDF("id", "_cell")
+    LineageSink.write(df, dir, "_cell")
+
+    val m = LineageSink.manifest(spark, dir)
+    assert(m.columns.contains("rows"), "the commit registered nothing")
+    assert(m.agg(sum("rows")).collect()(0).getLong(0) === 300L)
+    assert(LineageSink.snapshot(spark, dir).count() === 300L)
+    assert(m.where(col("bucket") === "__HIVE_DEFAULT_PARTITION__").count() === 1L)
+
+    val registered = m.select(explode(col("files"))).collect().map(_.getString(0)).toSet
+    val onDisk = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "data"))
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator.asScala.filter(_.getFileName.toString.endsWith(".parquet"))
+          .map(_.toAbsolutePath.toString).toSet
+      } finally s.close()
+    }
+    assert(onDisk.nonEmpty && onDisk === registered,
+      s"unregistered: ${onDisk -- registered}, missing: ${registered -- onDisk}")
   }
 }
