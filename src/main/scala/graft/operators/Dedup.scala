@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.Gf
 
@@ -11,10 +11,10 @@ import graft.functions.Gf
   *    high-cardinality groupBy, no special handling needed;
   *  - MinHash+LSH: signature is a per-row projection; banding explodes each
   *    row into `bands` NARROW rows (id, band, band_hash) — no shingle/text
-  *    payload rides the band shuffle. Candidate generation is a self-join on
-  *    (band, band_hash) — only rows sharing a bucket meet, so the join is
-  *    linear in bucket sizes, never all-pairs. Shingles are joined back ONCE
-  *    per unique candidate pair, and exact Jaccard verification runs only on
+  *    payload rides the band shuffle. Candidates are paired inside each
+  *    (band, band_hash) bucket by one aggregate ([[bucketPairs]]) — linear
+  *    in bucket sizes, never all-pairs. Shingles are joined back ONCE per
+  *    unique candidate pair, and exact Jaccard verification runs only on
   *    those pairs;
   *  - SimHash: same banding trick over 4×16-bit chunks of the 64-bit hash
   *    (two near-dup hashes with hamming ≤ 3 share ≥ 1 exact chunk by
@@ -49,51 +49,58 @@ object Dedup {
       col(idCol).as("id"),
       TextOps.shingles(col(textCol), shingleK).as("sh"))
 
-  /** Drop blocking buckets larger than `maxBucketSize` BEFORE the
-    * self-join: a bucket of n identical-signature rows yields n²/2
-    * candidate pairs, so one boilerplate/empty-document cluster of 10⁵
-    * rows would already materialize 5·10⁹ join rows and sink the stage.
-    * Such clusters are (near-)exact duplicates the exact-dedup pass
-    * ([[Dedup.exact]]) collapses upstream — the documented pipeline order.
-    * The cap is explicit (not silent): a parameter on every pair
-    * generator, defaulted far above any genuine near-dup neighbourhood
-    * (10⁴ rows ≈ 5·10⁷ pairs in ONE bucket is already pathological).
-    * Implemented as a count window over the bucket keys — ONE evaluation
-    * of the (expensive, signature-bearing) banded input and one exchange,
-    * not a build/probe pair that would run the signature stage twice.
+  /** Candidate pairs of a banded frame in ONE pass, for every pair
+    * generator here. Rows with a null bucket key are dropped (a null key
+    * matches nothing; a null group would square). One `groupBy(keys)`
+    * lists each bucket's narrow `struct(payload)` members — one exchange
+    * with partial aggregation, so the banded input is evaluated and
+    * shuffled once whatever its leaf (AQE reuses a repeated exchange only
+    * over file scans, not over a cache or `spark.range`). Members sorted
+    * by id (`payload` starts with "id") pair with the ones after them:
+    * `keys ++ <p>_a ++ <p>_b` rows, id_a < id_b, once per shared bucket.
     *
-    * UNCAPPED mode (`maxBucketSize <= 0`, the exhaustive-recall setting)
-    * keeps every bucket but is no longer silent about degenerate ones:
-    * when `warnTag` is set, the same count window feeds a pass-through
-    * [[graft.functions.WarnLargeBucket]] on the id column, logging (once
-    * per JVM per tag) any block over `warnOver` rows — the n² blowup of a
-    * boilerplate cluster becomes diagnosable in the executor logs instead
-    * of an anonymous stage sink. The window's (keys) exchange+sort is the
-    * same shape the self-join needs next, so the added cost is one sorted
-    * pass, not a new join. */
+    * `maxBucketSize > 0` drops larger buckets: n identical-signature rows
+    * yield n²/2 pairs, so a boilerplate cluster of 10⁵ rows would emit
+    * 5·10⁹ — such clusters are for [[Dedup.exact]] upstream. Uncapped with
+    * `warnTag` set, the member list passes through
+    * [[graft.functions.WarnLargeBucket]], logging (once per JVM per tag) a
+    * bucket over 10⁴ rows so the n² blowup is diagnosable. A bucket's pairs
+    * come from the one task holding its group: AQE's skew-join splitting
+    * does not apply to an aggregate, so a hot uncapped bucket is one task. */
+  private def bucketPairs(banded: DataFrame, keys: Seq[String],
+                          payload: Seq[String], maxBucketSize: Int,
+                          warnTag: String = null): DataFrame = {
+    val m = col("__m")
+    val n = size(m)
+    // sort_array orders the structs by their first field, the id
+    val buckets = banded.where(keys.map(col(_).isNotNull).reduce(_ && _))
+      .groupBy(keys.map(col): _*)
+      .agg(sort_array(collect_list(struct(payload.map(col): _*))).as("__m"))
+      .where(n >= 2)
+    val kept =
+      if (maxBucketSize > 0) buckets.where(n <= maxBucketSize)
+      else if (warnTag == null) buckets
+      else buckets.withColumn("__m", call_function("warn_large_bucket",
+        m, n.cast("long"), lit(10000L), lit(warnTag)))
+    def side(s: String) = payload.map(p => col(s"$s.$p").as(s"${p}_$s"))
+    // slice is 1-based: the members after 0-based position p start at p + 2
+    kept.select(keys.map(col) :+ m :+ posexplode(m).as(Seq("__p", "a")): _*)
+      .select(keys.map(col) :+ col("a") :+
+        explode(slice(m, col("__p") + 2, n)).as("b"): _*)
+      .where(col("a.id") < col("b.id"))
+      .select(keys.map(col) ++ side("a") ++ side("b"): _*)
+  }
+
+  /** Drop buckets over `maxBucketSize` rows (if > 0) by a count window over
+    * the keys — for [[Similarity.cosineNearDupPairs]] only, whose capped
+    * exactly-once mask needs the surviving rows per id. */
   private[operators] def capBuckets(banded: DataFrame, keys: Seq[String],
-                                    maxBucketSize: Int,
-                                    warnTag: String = null,
-                                    warnOver: Int = 10000,
-                                    warnOn: String = "id"): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)
-    if (maxBucketSize <= 0) {
-      if (warnTag == null || warnOver <= 0) return banded
-      // the diagnostic must ride a column the downstream join consumes
-      // (column pruning would drop a side-channel) — `warnOn` names it,
-      // loudly, instead of assuming every caller's frame has an "id"
-      require(banded.columns.contains(warnOn),
-        s"capBuckets(warnTag=$warnTag): warn column '$warnOn' not in " +
-          s"${banded.columns.mkString("[", ",", "]")}")
-      return banded.withColumn("__bsz", count(lit(1)).over(w))
-        .withColumn(warnOn, call_function("warn_large_bucket",
-          col(warnOn), col("__bsz"), lit(warnOver.toLong), lit(warnTag)))
-        .drop("__bsz")
-    }
-    banded.withColumn("__bsz", count(lit(1)).over(w))
+                                    maxBucketSize: Int): DataFrame =
+    if (maxBucketSize <= 0) banded
+    else banded.withColumn("__bsz",
+        count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)))
       .where(col("__bsz") <= maxBucketSize)
       .drop("__bsz")
-  }
 
   /** The LOSSLESS size prefilter: Jaccard(A, B) ≥ t implies |A∩B| ≤ min and
     * |A∪B| ≥ max, hence min(|A|,|B|) ≥ t·max(|A|,|B|) — so the filter can
@@ -103,7 +110,7 @@ object Dedup {
     * candidate drags two multi-KB arrays through the verify join (probe:
     * 6.56M → 1.18M candidates, verify 37 s → 8 s at local[8], identical
     * output). The sizes ride the band shuffle as one int per row. */
-  private def sizeCompatible(threshold: Double): org.apache.spark.sql.Column =
+  private def sizeCompatible(threshold: Double): Column =
     least(col("n_a"), col("n_b")).cast("double") >=
       lit(threshold) * greatest(col("n_a"), col("n_b"))
 
@@ -146,13 +153,9 @@ object Dedup {
         posexplode(array((0 until bands).map(b =>
           xxhash64(lit(b), slice(col("sig"), lit(b * rows + 1), lit(rows)))): _*)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
-    val capped = capBuckets(banded, Seq("band", "band_hash"), maxBucketSize)
-    val a = capped.select(col("band"), col("band_hash"), col("id").as("id_a"),
-      col("n").as("n_a"))
-    val b = capped.select(col("band"), col("band_hash"), col("id").as("id_b"),
-      col("n").as("n_b"))
-    val candidates = a.join(b, Seq("band", "band_hash"))
-      .where(col("id_a") < col("id_b") && sizeCompatible(threshold))
+    val candidates = bucketPairs(banded, Seq("band", "band_hash"),
+        Seq("id", "n"), maxBucketSize)
+      .where(sizeCompatible(threshold))
       .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
     verifyJaccard(candidates, sh, threshold)
   }
@@ -171,50 +174,55 @@ object Dedup {
     Seq(8, 4, 2, 1).find(b =>
       n.toDouble * b / math.pow(2.0, 64.0 / b) <= budgetPerRow).getOrElse(1)
 
-  /** Explode a 64-bit hash column into `bands` equal-width (band, chunk)
-    * blocking rows, carrying every other column of `hashed` through.
-    * Pigeonhole: any pair with hamming < bands shares a chunk. The ONE
-    * home of the chunk bit-math — both simhash pair generators band
-    * through here. */
+  /** Chunk `b` of a 64-bit hash cut into `bands` equal-width chunks: the
+    * ONE home of the chunk bit-math (banding and the lowest-shared-chunk
+    * test of [[hammingPairs]]). */
+  private def chunk(h: Column, b: Int, bands: Int): Column = {
+    val width = 64 / bands
+    val mask = if (width == 64) -1L else (1L << width) - 1
+    shiftrightunsigned(h, b * width).bitwiseAND(lit(mask))
+  }
+
+  /** Explode a 64-bit hash column into `bands` (band, chunk) blocking rows,
+    * carrying every other column of `hashed` through. Pigeonhole: any pair
+    * with hamming < bands shares a chunk. */
   private def bandChunks(hashed: DataFrame, hashCol: String,
                          bands: Int): DataFrame = {
     require(64 % bands == 0, "bands must divide 64")
-    val width = 64 / bands
-    val mask = if (width == 64) -1L else (1L << width) - 1
-    val chunks = array((0 until bands).map(b => struct(
-      lit(b).as("band"),
-      shiftrightunsigned(col(hashCol), b * width).bitwiseAND(lit(mask)).as("chunk"))): _*)
-    val carried = hashed.columns.map(col)
-    hashed.select(carried :+ explode(chunks).as("bc"): _*)
-      .select(carried :+ col("bc.band").as("band") :+ col("bc.chunk").as("chunk"): _*)
+    hashed.select(hashed.columns.toSeq.map(col) :+ posexplode(array(
+      (0 until bands).map(chunk(col(hashCol), _, bands)): _*)).as(Seq("band", "chunk")): _*)
   }
 
-  /** Hamming-banded near-dup pairs over ANY precomputed 64-bit hash column:
-    * the ONE home of chunk-block → self-join → hamming-verify (round-6 —
-    * generalized out of [[simhashPairs]] so the image phash path shares the
-    * exact layout instead of duplicating it). `hashed` must be (id, h).
-    * Pigeonhole recall: a pair with hamming < bands shares ≥ 1 chunk, so
-    * for the default 4×16-bit layout every pair at hamming ≤ 3 is a
-    * candidate — recall 1.0 at the threshold, not probabilistic. Bands = 0
-    * picks the volume-aware width ([[suggestSimhashBands]]); note finer
-    * widths strengthen the pigeonhole bound while SHRINKING the chunk key
-    * space (collision mass), the trade documented on
-    * [[simhashJaccardPairs]]. The hash payload is one long — it rides the
-    * band shuffle (8 bytes × bands, cheaper than a join back). */
+  /** `bands`, or for 0 the logged [[suggestSimhashBands]] choice from
+    * `nHint`, else from `df.count()` (one more pass over the input: callers
+    * with an expensive derived input pass any rough row count). */
+  private def chooseBands(bands: Int, nHint: Long, df: DataFrame,
+                          tag: String): Int =
+    if (bands > 0) bands
+    else {
+      val b = suggestSimhashBands(if (nHint > 0L) nHint else df.count())
+      org.slf4j.LoggerFactory.getLogger(getClass).info(
+        s"$tag: auto-selected $b band(s) of ${64 / b} bits" +
+          (if (nHint > 0L) s" from nHint=$nHint" else " from df.count()"))
+      b
+    }
+
+  /** Hamming-banded near-dup pairs over ANY precomputed 64-bit hash column
+    * `hashed` = (id, h), one row per id — shared by [[simhashPairs]] and the
+    * phash paths. Pigeonhole recall: a pair with hamming < bands shares a
+    * chunk, so at the default 4×16 bits every pair at hamming ≤ 3 is a
+    * candidate — recall 1.0, not probabilistic. Bands = 0 picks the
+    * volume-aware width; finer widths strengthen that bound while
+    * SHRINKING the chunk key space, the trade documented on
+    * [[simhashJaccardPairs]]. The one-long hash rides the band shuffle.
+    * Uncapped, a pair is emitted only at its LOWEST band whose chunks
+    * agree (read off `h_a XOR h_b`): exactly once per pair of rows, with no
+    * pair-dedup exchange. Capped runs dedupe instead — a later bucket
+    * cannot see that an earlier shared one was dropped. */
   private def hammingPairs(hashed: DataFrame, maxHamming: Int, bands: Int,
                            maxBucketSize: Int, warnTag: String,
                            nHint: Long): DataFrame = {
-    val chosenBands =
-      if (bands > 0) bands
-      else {
-        val b = suggestSimhashBands(if (nHint > 0L) nHint else hashed.count())
-        // volume-aware width changes the pigeonhole bound with corpus size
-        // — observable, like simhashJaccardPairs' auto path (ADVICE round 5)
-        org.slf4j.LoggerFactory.getLogger(getClass).info(
-          s"$warnTag: auto-selected $b band(s) of ${64 / b} bits" +
-            (if (nHint > 0L) s" from nHint=$nHint" else " from df.count()"))
-        b
-      }
+    val chosenBands = chooseBands(bands, nHint, hashed, warnTag)
     // the pigeonhole guarantee holds only for maxHamming < bands (and
     // uncapped buckets); wider chunks are a legitimate volume-aware
     // degraded mode (identical-copy recall survives at every width) but
@@ -224,14 +232,19 @@ object Dedup {
         s"hammingPairs: maxHamming=$maxHamming >= bands=$chosenBands — the " +
           "pigeonhole recall guarantee at this threshold is void; only " +
           "pairs sharing a full chunk (e.g. identical hashes) are candidates")
-    val banded = capBuckets(bandChunks(hashed, "h", chosenBands),
-      Seq("band", "chunk"), maxBucketSize, warnTag = warnTag)
-    val a = banded.select(col("band"), col("chunk"), col("id").as("id_a"), col("h").as("h_a"))
-    val b = banded.select(col("band"), col("chunk"), col("id").as("id_b"), col("h").as("h_b"))
-    a.join(b, Seq("band", "chunk"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b", "h_a", "h_b").dropDuplicates("id_a", "id_b")
-      .withColumn("hamming", Gf.hamming64(col("h_a"), col("h_b")))
+    val pairs = bucketPairs(bandChunks(hashed, "h", chosenBands),
+      Seq("band", "chunk"), Seq("id", "h"), maxBucketSize, warnTag)
+    val unique =
+      if (maxBucketSize > 0)
+        pairs.select("id_a", "id_b", "h_a", "h_b").dropDuplicates("id_a", "id_b")
+      else {
+        // literal-index OR chain, not a higher-order function: HOFs
+        // evaluate interpreted per row (see Similarity.cosineNearDupPairs)
+        val x = col("h_a").bitwiseXOR(col("h_b"))
+        pairs.where(!(0 until chosenBands - 1).map(b => col("band") > b &&
+          chunk(x, b, chosenBands) === 0L).foldLeft(lit(false))(_ || _))
+      }
+    unique.withColumn("hamming", Gf.hamming64(col("h_a"), col("h_b")))
       .where(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming")
   }
@@ -247,7 +260,8 @@ object Dedup {
     * bound on degenerate blocks (boilerplate clusters), as
     * [[simhashJaccardPairs]] does by default. Uncapped blocks beyond the
     * old 10k bound log a loud executor-side warning (round-5, see
-    * [[capBuckets]]) so the n² blowup is diagnosable, never silent. */
+    * [[bucketPairs]]) so the n² blowup is diagnosable, never silent.
+    * Contract: one row per id — uncapped, a repeated id repeats its pairs. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 3,
                    maxBucketSize: Int = 0): DataFrame =
@@ -268,8 +282,10 @@ object Dedup {
     * precomputed int64 phash — the input contract ships one
     * (BASELINE.json input_hint `phash:int64`); use [[phashPairsFromBytes]]
     * when only bytes are at hand. Scale shape: blocking touches ONLY
-    * (id, phash) — 16 bytes/row — never the image bytes; at 10¹² images the
-    * band shuffle is the narrow one the 100-TB plan needs. */
+    * (id, phash) — 16 bytes/row — never the image bytes, in one bucket
+    * aggregate; at 10¹² images the band shuffle is the narrow one the
+    * 100-TB plan needs. Rows with a null hash pair with nothing. Contract:
+    * one row per id — uncapped, a repeated id repeats its pairs. */
   def phashPairs(df: DataFrame, idCol: String, hashCol: String,
                  maxHamming: Int = 3, bands: Int = 4,
                  maxBucketSize: Int = 0, nHint: Long = 0L): DataFrame =
@@ -280,7 +296,8 @@ object Dedup {
   /** [[phashPairs]] computing the phash from an image-bytes column (one
     * codegen decode+hash projection — [[graft.functions.Gf.imgPhash]]);
     * [[spread]] widens a small single-file input so the decode kernel
-    * parallelizes. */
+    * parallelizes. The decode runs once per row whatever the input's leaf.
+    * Contract: one row per id — uncapped, a repeated id repeats its pairs. */
   def phashPairsFromBytes(df: DataFrame, idCol: String, bytesCol: String,
                           maxHamming: Int = 3, bands: Int = 4,
                           maxBucketSize: Int = 0, nHint: Long = 0L): DataFrame =
@@ -318,36 +335,17 @@ object Dedup {
                           bands: Int = 0,
                           maxBucketSize: Int = 10000,
                           nHint: Long = 0L): DataFrame = {
-    // bands = 0 needs the corpus size; counting `df` materializes its
-    // upstream plan once more, so callers with an expensive derived input
-    // should pass `nHint` (any rough row count — the band walk only cares
-    // about order of magnitude) or an explicit `bands`
-    val chosenBands =
-      if (bands > 0) bands
-      else {
-        val b = suggestSimhashBands(if (nHint > 0L) nHint else df.count())
-        // the auto choice changes blocking sensitivity with corpus size —
-        // make it observable to callers (ADVICE round 5)
-        org.slf4j.LoggerFactory.getLogger(getClass).info(
-          s"simhashJaccardPairs: auto-selected $b band(s) of ${64 / b} bits" +
-            (if (nHint > 0L) s" from nHint=$nHint" else " from df.count()"))
-        b
-      }
+    val chosenBands = chooseBands(bands, nHint, df, "simhashJaccardPairs")
     // one projection computes the simhash AND the shingle count, so the
     // lossless size prefilter can ride the band shuffle (one int per row)
     val proj = spread(df).select(col(idCol).as("id"),
       Gf.simhash64(TextOps.tokens(col(textCol))).as("hash"),
       TextOps.shingles(col(textCol), shingleK).as("sh"))
-    val banded = capBuckets(
-      bandChunks(proj.select(col("id"), col("hash"), size(col("sh")).as("n")),
-        "hash", chosenBands).drop("hash"),
-      Seq("band", "chunk"), maxBucketSize)
-    val a = banded.select(col("band"), col("chunk"), col("id").as("id_a"),
-      col("n").as("n_a"))
-    val b = banded.select(col("band"), col("chunk"), col("id").as("id_b"),
-      col("n").as("n_b"))
-    val candidates = a.join(b, Seq("band", "chunk"))
-      .where(col("id_a") < col("id_b") && sizeCompatible(threshold))
+    val candidates = bucketPairs(
+        bandChunks(proj.select(col("id"), col("hash"), size(col("sh")).as("n")),
+          "hash", chosenBands),
+        Seq("band", "chunk"), Seq("id", "n"), maxBucketSize)
+      .where(sizeCompatible(threshold))
       .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
     verifyJaccard(candidates, proj.select(col("id"), col("sh")), threshold)
   }

@@ -49,29 +49,78 @@ class ImagePhashSpec extends AnyFunSuite {
     assert(fromCol.nonEmpty, "pattern-sharing images must pair at hamming 0")
   }
 
-  test("far pairs are rejected and pigeonhole recall is exhaustive vs brute force") {
-    Gf.register(spark)
-    val n = 80
-    val df = images(n, patterns = 40).select(col("image_id"), col("phash"))
-    val rows = df.collect().map(r => (r.getString(0), r.getLong(1)))
-    // brute-force truth at the threshold
-    val truth = (for {
+  /** Brute-force (id_a, id_b) pairs at hamming <= maxHamming, id_a < id_b. */
+  private def bruteForce(rows: Seq[(String, Long)], maxHamming: Int) =
+    (for {
       i <- rows.indices; j <- (i + 1) until rows.length
-      if java.lang.Long.bitCount(rows(i)._2 ^ rows(j)._2) <= 3
+      if java.lang.Long.bitCount(rows(i)._2 ^ rows(j)._2) <= maxHamming
     } yield {
       val (a, b) = if (rows(i)._1 < rows(j)._1) (rows(i), rows(j)) else (rows(j), rows(i))
       (a._1, b._1)
     }).toSet
-    val got = Dedup.phashPairs(df, "image_id", "phash", maxHamming = 3)
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(got === truth, "banded pairs must equal brute-force hamming<=3 truth")
-    // and the emitted hamming is the true distance
-    val hs = Dedup.phashPairs(df, "image_id", "phash", maxHamming = 3).collect()
+
+  test("far pairs are rejected and pigeonhole recall is exhaustive vs brute force") {
+    Gf.register(spark)
+    val n = 80
+    val df = images(n, patterns = 40).select(col("image_id"), col("phash"))
+    val rows = df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    val truth = bruteForce(rows, 3)
     val byId = rows.toMap
-    hs.foreach { r =>
-      assert(r.getInt(2) ===
-        java.lang.Long.bitCount(byId(r.getString(0)) ^ byId(r.getString(1))))
+    for (bands <- Seq(4, 8)) {
+      val hs = Dedup.phashPairs(df, "image_id", "phash", maxHamming = 3,
+        bands = bands).collect()
+      val got = hs.map(r => (r.getString(0), r.getString(1)))
+      assert(got.toSet === truth,
+        s"bands=$bands: banded pairs must equal brute-force hamming<=3 truth")
+      // pattern twins share EVERY chunk: each pair must still come out once
+      assert(got.length === got.distinct.length,
+        s"bands=$bands: ${got.length - got.distinct.length} duplicate pair rows")
+      // and the emitted hamming is the true distance
+      hs.foreach { r =>
+        assert(r.getInt(2) ===
+          java.lang.Long.bitCount(byId(r.getString(0)) ^ byId(r.getString(1))))
+      }
     }
+  }
+
+  test("capped: a pair whose EARLIEST shared chunk bucket is capped is found later, once") {
+    import spark.implicits._
+    val a = 0x123456789ABCDEF0L
+    val b = a ^ (1L << 40) // 1 bit apart in chunk 2: shares chunks 0, 1 and 3
+    // fillers share only chunk 0 with the pair (their upper 48 bits are
+    // splitmix-scrambled), so the chunk-0 bucket holds 7 rows
+    val fillers = (1 to 5).map { i =>
+      var z = i * 0x9E3779B97F4A7C15L
+      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+      (f"f$i", ((z ^ (z >>> 31)) & ~0xFFFFL) | (a & 0xFFFFL))
+    }
+    val rows = Seq(("a", a), ("b", b)) ++ fillers
+    assert(bruteForce(rows, 3) === Set(("a", "b")), "fillers must be far apart")
+    val df = rows.toDF("id", "phash")
+    val capped = Dedup.phashPairs(df, "id", "phash", maxBucketSize = 3)
+      .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2)))
+    // chunk 0 (7 rows) is capped; chunks 1 and 3 both hold only the pair
+    assert(capped.toSeq === Seq(("a", "b", 1)))
+    val uncapped = Dedup.phashPairs(df, "id", "phash")
+      .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2)))
+    assert(uncapped.toSeq === Seq(("a", "b", 1)))
+  }
+
+  test("null hashes pair with nothing; the non-null rows' pairs are unchanged") {
+    Gf.register(spark)
+    val df = images(80, patterns = 40)
+      .select(col("image_id"),
+        when(Images.key(col("image_id")) % 4 =!= 0, col("phash")).as("phash"))
+    val nonNull = df.where(col("phash").isNotNull)
+    assert(df.count() - nonNull.count() === 20)
+    def pairs(d: org.apache.spark.sql.DataFrame) =
+      Dedup.phashPairs(d, "image_id", "phash").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getInt(2))).sorted.toSeq
+    val got = pairs(df)
+    assert(got === pairs(nonNull))
+    assert(got.map(p => (p._1, p._2)).toSet === bruteForce(
+      nonNull.collect().map(r => (r.getString(0), r.getLong(1))).toSeq, 3))
   }
 
   test("bands=0 volume-aware width still finds identical-hash pairs") {

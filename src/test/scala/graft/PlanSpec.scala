@@ -127,6 +127,41 @@ class PlanSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
+  test("phash near-dup over a cached input: one img_phash pass, no self-join, window or pair dedup") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import graft.functions.{Gf, ImgPhash}
+    Gf.register(spark)
+    // a cached leaf: AQE reuses a repeated exchange only over file scans,
+    // so a self-join here evaluates the banded input once per side
+    val imgs = graft.sources.Images.synthesize(spark, 60L, 30).toDF()
+      .select(col("image_id"), col("bytes")).cache()
+    try {
+      imgs.count()
+      val pairs = graft.operators.Dedup.phashPairsFromBytes(imgs, "image_id", "bytes")
+      assert(pairs.collect().nonEmpty, "pattern twins must pair")
+      val plan = pairs.queryExecution.executedPlan
+      // descends into AQE query stages, which a plain tree collect does not
+      def nodes(pf: PartialFunction[SparkPlan, SparkPlan]) =
+        new AdaptiveSparkPlanHelper {}.collect(plan)(pf)
+      val phash = nodes {
+        case p if p.expressions.exists(_.exists(_.isInstanceOf[ImgPhash])) => p
+      }
+      assert(phash.size === 1, s"img_phash evaluated in ${phash.size} nodes:\n$plan")
+      assert(nodes { case j: SortMergeJoinExec => j }.isEmpty, s"self-join:\n$plan")
+      assert(nodes { case w: WindowExec => w }.isEmpty, s"bucket window:\n$plan")
+      val pairDedup = "hashpartitioning\\(id_a#\\d+, id_b#\\d+".r
+      val dedupEx = nodes {
+        case s: ShuffleExchangeExec
+          if pairDedup.findFirstIn(s.outputPartitioning.toString).nonEmpty => s
+      }
+      assert(dedupEx.isEmpty, s"pair-dedup exchange:\n$plan")
+    } finally imgs.unpersist()
+  }
+
   test("ANN top-k and patch grid plans contain no Window operator") {
     for (q <- Seq("q20_ann_topk", "q21_ann_lsh", "q12_patch_grid")) {
       val df = SparkEntry.queries(q)(spark, dir)
