@@ -135,9 +135,15 @@ object Gf {
       new ExpressionInfo("graft.functions", name), builder))
   }
 
-  /** Imperative registration for an existing session (idempotent). */
-  def register(spark: SparkSession): Unit = defs.foreach { case (name, builder) =>
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "scala_udf")
+  /** Imperative registration for an existing session (idempotent): only
+    * names the session lacks are registered, so a session GraftExtensions
+    * already populated — and every repeated call — is left untouched. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    defs.foreach { case (name, builder) =>
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
   }
 
   // ---- Column API ----

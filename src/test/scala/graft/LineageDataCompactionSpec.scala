@@ -293,4 +293,42 @@ class LineageDataCompactionSpec extends AnyFunSuite {
     lease.setLastModified(System.currentTimeMillis() - 24L * 3600 * 1000)
     assert(LineageSink.compactData(spark, dir) === 4)
   }
+
+  test("expiry plans under the maintenance lease: a fresh foreign holder fails it, nothing deleted") {
+    val dir = freshDir("expire-lease")
+    for (k <- 0 until 3) LineageSink.write(slice(k), dir, "bucket")
+    assert(LineageSink.compactData(spark, dir) === 4)
+    def dataFiles: Set[String] = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "data"))
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator.asScala.map(_.toString).filter(_.endsWith(".parquet")).toSet
+      } finally s.close()
+    }
+    val before = dataFiles
+    val lease = new java.io.File(s"$dir/leases/__maintenance")
+    java.nio.file.Files.write(lease.toPath, "someone-else".getBytes)
+    val e = intercept[IllegalStateException](
+      LineageSink.expireSuperseded(spark, dir, olderThanMs = 0L))
+    assert(e.getMessage.contains("maintenance lease"))
+    assert(dataFiles === before, "expiry deleted files without the lease")
+    assert(!new java.io.File(s"$dir/manifest/_expire_watermark").exists())
+    // once the foreign lease is stale, expiry proceeds
+    lease.setLastModified(System.currentTimeMillis() - 24L * 3600 * 1000)
+    val deleted = LineageSink.expireSuperseded(spark, dir, olderThanMs = 0L)
+    assert(deleted > 0 && dataFiles.size === before.size - deleted)
+    assert(ids(LineageSink.snapshot(spark, dir)) === (0L until 120L).toSet)
+  }
+
+  test("the compaction job id is a fixed digest of its inventory") {
+    val dir = freshDir("compact-digest")
+    for ((job, k) <- Seq("j1" -> 0, "j2" -> 1))
+      LineageSink.writeBatch(slice(k, buckets = 2), dir, "bucket", job)
+    assert(LineageSink.compactData(spark, dir) === 2)
+    val compactIds = LineageSink.manifest(spark, dir)
+      .where(col("replaces").isNotNull).select("job_id").distinct()
+      .collect().map(_.getString(0)).toSet
+    // SHA-256 of "b0\u0000j1\u0001j2\u0002b1\u0000j1\u0001j2", first 16 bytes
+    assert(compactIds === Set("compact-d460b89f2da5682be206efffd5fb15d9"))
+  }
 }

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.LineageSink
+import graft.sources.LineageSink.Lease
 
 /** Round-5 lease lifecycle: a live commit heartbeats its lease so no single
   * long step can make it look dead to a concurrent recover(), and ownership
@@ -22,15 +23,15 @@ class LineageLeaseSpec extends AnyFunSuite {
     // 8 s horizon / 2 s beat: ~6 s of slack for this host's documented
     // multi-second CPU-steal stalls (a 3 s horizon flaked on paper)
     val horizon = 8000L
-    LineageSink.acquireLease(f, dir, attempt)
-    val hb = LineageSink.startHeartbeat(f, dir, attempt, horizon)
+    val lease = Lease.acquire(f, dir, attempt, "commit", horizon)
+    val hb = lease.heartbeat(horizon)
     try {
       Thread.sleep(horizon + 1500)
-      assert(LineageSink.leaseLive(f, dir, attempt, horizon),
+      assert(Lease.live(f, dir, attempt, horizon),
         "heartbeat failed to keep the lease fresh past the horizon")
-    } finally LineageSink.stopHeartbeat(hb)
+    } finally { hb.interrupt(); hb.join(2000) }
     Thread.sleep(horizon + 500)
-    assert(!LineageSink.leaseLive(f, dir, attempt, horizon),
+    assert(!Lease.live(f, dir, attempt, horizon),
       "lease stayed live after the heartbeat stopped")
   }
 
@@ -41,20 +42,20 @@ class LineageLeaseSpec extends AnyFunSuite {
     val marker = new Path(s"$dir/pending/job")
     f.mkdirs(marker.getParent)
     f.create(marker, false).close()
-    LineageSink.acquireLease(f, dir, attempt)
+    val lease = Lease.acquire(f, dir, attempt, "commit", 600000L)
     // both present: no abort
-    LineageSink.verifyOwned(f, dir, attempt, marker)
+    LineageSink.verifyOwned(f, lease, marker)
     // lease reaped
     f.delete(new Path(s"$dir/leases/$attempt"), false)
     val e1 = intercept[IllegalStateException] {
-      LineageSink.verifyOwned(f, dir, attempt, marker)
+      LineageSink.verifyOwned(f, lease, marker)
     }
     assert(e1.getMessage.contains("ownership lost"))
     // marker reaped (lease back)
-    LineageSink.acquireLease(f, dir, attempt)
+    val lease2 = Lease.acquire(f, dir, attempt, "commit", 600000L)
     f.delete(marker, false)
     intercept[IllegalStateException] {
-      LineageSink.verifyOwned(f, dir, attempt, marker)
+      LineageSink.verifyOwned(f, lease2, marker)
     }
   }
 

@@ -116,4 +116,84 @@ class LineageListingSpec extends AnyFunSuite {
     assert(onDisk.nonEmpty && onDisk === registered,
       s"unregistered: ${onDisk -- registered}, missing: ${registered -- onDisk}")
   }
+
+  /** Plant a pre-registry manifest commit (no `files`, `commit_seq` or
+    * `replaces` column) for job `job-legacy`, bucket `lg`, next to the
+    * current commits of `dir`. */
+  private def plantLegacyCommit(dir: String, rows: Long): Unit = {
+    val legacy = Seq(("lg", rows, "job-legacy", new java.sql.Timestamp(1000L)))
+      .toDF("bucket", "rows", "job_id", "written_at")
+    val tmp = s"$dir/manifest/.legacy-stage"
+    legacy.coalesce(1).write.parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    assert(part.renameTo(new java.io.File(s"$dir/manifest/commit-job-legacy.parquet")))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  }
+
+  test("manifest reads with the declared schema; legacy columns read as null") {
+    val dir = java.nio.file.Files.createTempDirectory("lineage-schema").toString
+    LineageSink.write(
+      (0 until 20).map(i => (i.toLong, s"b${i % 2}")).toDF("id", "bucket"), dir, "bucket")
+    plantLegacyCommit(dir, 7L)
+
+    val m = LineageSink.manifest(spark, dir)
+    assert(m.schema === LineageSink.manifestSchema)
+    val legacy = m.where(col("job_id") === "job-legacy").collect()
+    assert(legacy.length === 1)
+    val r = legacy.head
+    assert(r.getAs[String]("bucket") === "lg" && r.getAs[Long]("rows") === 7L)
+    Seq("files", "commit_seq", "replaces").foreach(c =>
+      assert(r.isNullAt(r.fieldIndex(c)), s"legacy $c not null"))
+    val current = m.where(col("job_id") =!= "job-legacy")
+    assert(current.count() === 2L)
+    assert(current.where(col("files").isNull || col("commit_seq").isNull).isEmpty)
+    // an empty sink reads as an empty frame of the same schema
+    val empty = java.nio.file.Files.createTempDirectory("lineage-empty").toString
+    assert(LineageSink.manifest(spark, empty).schema === LineageSink.manifestSchema)
+    assert(LineageSink.manifest(spark, empty).isEmpty)
+  }
+
+  test("recover rolls a dead marker of a pre-registry commit forward whole") {
+    val dir = java.nio.file.Files.createTempDirectory("lineage-legacy-marker").toString
+    LineageSink.write(
+      (0 until 20).map(i => (i.toLong, s"b${i % 2}")).toDF("id", "bucket"), dir, "bucket")
+    // the legacy job's data file, committed before manifests listed files
+    val legacyData = s"$dir/data/bucket=lg"
+    (0 until 7).map(i => Tuple1(i.toLong)).toDF("id").coalesce(1).write.parquet(legacyData)
+    val files = new java.io.File(legacyData).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).toSeq
+    assert(files.size === 1)
+    plantLegacyCommit(dir, 7L)
+    // a dead pending marker of that committed job: its attempt holds no lease
+    new java.io.File(s"$dir/pending").mkdirs()
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/pending/job-legacy"),
+      ("#attempt=job-legacy--dead\n" + files.mkString("\n")).getBytes("UTF-8"))
+
+    LineageSink.recover(spark, dir)
+    assert(!new java.io.File(s"$dir/pending/job-legacy").exists(), "dead marker kept")
+    files.foreach(f => assert(new java.io.File(f).exists(), s"committed file deleted: $f"))
+  }
+
+  test("manifest() on a committed sink launches no Spark job") {
+    val dir = java.nio.file.Files.createTempDirectory("lineage-nojob").toString
+    for (k <- 0 until 2)
+      LineageSink.write(
+        (k * 20 until (k + 1) * 20).map(i => (i.toLong, s"b${i % 2}")).toDF("id", "bucket"),
+        dir, "bucket")
+    val sc = spark.sparkContext
+    org.apache.spark.graft.ListenerBusDrain(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val m = LineageSink.manifest(spark, dir)
+      assert(m.schema === LineageSink.manifestSchema)
+      org.apache.spark.graft.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get === 0, s"manifest() launched ${jobs.get} Spark job(s)")
+  }
 }

@@ -26,6 +26,23 @@ class SqlSurfaceSpec extends AnyFunSuite {
     assert(r.getAs[Int]("ham") === 2)
   }
 
+  test("Gf.register is idempotent: it keeps what GraftExtensions injected") {
+    val registry = spark.sessionState.functionRegistry
+    def injected: Set[String] = registry.listFunction()
+      .flatMap(registry.lookupFunction).filter(_.getClassName == "graft.functions")
+      .map(_.getName).toSet
+    val before = injected
+    assert(before.contains("st_intersects") && before.contains("hamming64"))
+    graft.functions.Gf.register(spark)
+    assert(injected === before, "register replaced injected functions")
+    // a session missing a function gets it registered
+    val other = spark.newSession()
+    other.sessionState.functionRegistry.dropFunction(
+      org.apache.spark.sql.catalyst.FunctionIdentifier("hamming64"))
+    graft.functions.Gf.register(other)
+    assert(other.sql("SELECT hamming64(7L, 1L)").collect()(0).getInt(0) === 2)
+  }
+
   test("typed-imperative aggregates work in SQL GROUP BY") {
     spark.range(100).select(
       (col("id") % 4).as("g"),
