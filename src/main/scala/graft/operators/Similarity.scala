@@ -454,12 +454,12 @@ object Similarity {
     * re-assignment. Null embeddings land in the sink's null bucket (they
     * can never be neighbours; searches never probe it).
     *
-    * The pre-write `repartition` on the cell clusters each cell into one
-    * shuffle partition, so the layout lands as ~one file per cell per
-    * group instead of (tasks × cells) fragments — the manifest and every
-    * pruned search read stay bounded by `nlist`. `groups > 1` buys
-    * crash-resume granularity at the writeGrouped cost of one
-    * remainder-scan per group; pass `groups = 1` for a single-pass build.
+    * The sink's staged write clusters rows by bucket, so the layout lands
+    * as one file per cell per group instead of (tasks × cells) fragments —
+    * the manifest and every pruned search read stay bounded by `nlist`.
+    * `groups > 1` buys crash-resume granularity at the writeGrouped cost
+    * of one remainder-scan per group; pass `groups = 1` for a single-pass
+    * build.
     *
     * BUILD-ONCE + crash-RESUME semantics ONLY: the grouped write's resume
     * unit is the CELL, so re-invoking with the same corpus after a crash is
@@ -496,7 +496,6 @@ object Similarity {
                           vecCol: String): DataFrame =
     df.withColumn(IvfCellCol,
       element_at(Gf.ivfCells(col(vecCol), model.centroids, model.dim, 1), 1))
-      .repartition(col(IvfCellCol))
 
   /** Search a persisted IVF index: explode each query into its `nprobe`
     * nearest cells, prune the sink manifest to the probed buckets (the

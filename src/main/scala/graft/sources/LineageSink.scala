@@ -17,7 +17,8 @@ import org.apache.spark.sql.types._
   * with a two-phase move:
   * {{{
   *   dir/data/<bucket>=<v>/      committed data files — what readers scan
-  *   dir/staging/<jobId>/        this job's files, partitioned by bucket
+  *   dir/staging/<jobId>/        this job's files, one per bucket (split
+  *                               only by maxRecordsPerFile)
   *   dir/pending/<jobId>         commit intent: the final paths about to appear
   *   dir/leases/<attempt>        liveness lease of an IN-FLIGHT commit attempt
   *   dir/leases/__maintenance    the per-sink maintenance lease
@@ -31,7 +32,12 @@ import org.apache.spark.sql.types._
   * Commit protocol (all steps O(files written by THIS job), never a listing
   * or scan of the historical table — an Iceberg-style metadata commit):
   *   1. acquire the job lease (one file holding its holder's uuid);
-  *   2. write `df` into `staging/<jobId>/` (invisible to readers);
+  *   2. hash-partition `df` by the bucket column into
+  *      `defaultParallelism` partitions and write it into
+  *      `staging/<jobId>/` (invisible to readers): each bucket lands as one
+  *      file, and the files spread over min(buckets, cores) writer tasks.
+  *      The caveat is the hash distribution's: ONE task writes all of a
+  *      bucket's rows, so a hot bucket is as slow as its own size;
   *   3. walk that one directory with plain `listStatus` (no block
   *      locations); read row counts from the new files' parquet FOOTERS
   *      (metadata only, no data scan), each opened from its listed status
@@ -571,7 +577,15 @@ object LineageSink {
     val staging = new Path(s"${stagingRoot(dir)}/$attempt")
 
     Lease.hold(fs, dir, attempt, "commit", staleMs(spark)) { lease =>
-      val w = df.write.mode(SaveMode.ErrorIfExists).partitionBy(bucketCol)
+      // cluster by bucket (Iceberg's hash distribution mode): every bucket's
+      // rows reach one writer task, so the commit lands one file per bucket
+      // (maxRecordsPerFile-split) instead of one per (input task, bucket).
+      // The explicit count is what keeps the writers parallel: AQE never
+      // coalesces a repartition-by-number exchange, while a bare
+      // repartition(col) of a small input folds into ONE writer task.
+      val clustered =
+        df.repartition(spark.sparkContext.defaultParallelism, col(bucketCol))
+      val w = clustered.write.mode(SaveMode.ErrorIfExists).partitionBy(bucketCol)
       (if (maxRecordsPerFile > 0L)
          w.option("maxRecordsPerFile", maxRecordsPerFile)
        else w).parquet(staging.toString)
@@ -1037,9 +1051,10 @@ object LineageSink {
   }
 
   /** Bin-pack the committed data files (round-6 — the judged top gap): each
-    * eligible bucket's CURRENT files are rewritten into ~one file (or
+    * eligible bucket's CURRENT files are rewritten into one file (or
     * `maxRecordsPerFile`-bounded files) through the SAME two-phase staged
-    * commit as any write, landing ONE manifest row per bucket whose
+    * commit as any write — its bucket clustering is what packs a bucket
+    * into one file — landing ONE manifest row per bucket whose
     * `replaces` column supersedes the inputs. Readers racing the compaction
     * see either the old rows (commit not yet visible; old files still
     * exist — nothing is deleted here) or the new row (supersede filter
@@ -1105,11 +1120,10 @@ object LineageSink {
         // copies
         val data = readData(spark, dir, files)
         val bucketCol = data.columns.last
-        // one shuffle keyed by the bucket so each bucket lands as one task's
-        // output (~one file, or maxRecordsPerFile-sized splits)
+        // the staged write clusters by bucket, so each bucket lands as one
+        // file (or maxRecordsPerFile-sized splits)
         lease.verify()
-        stageAndCommit(data.repartition(col(bucketCol)), dir, bucketCol,
-          jobId, replaces, maxRecordsPerFile)
+        stageAndCommit(data, dir, bucketCol, jobId, replaces, maxRecordsPerFile)
       }
       byBucket.size
     }
@@ -1256,7 +1270,11 @@ object LineageSink {
     * write the pending marker, move only ~half of the staged files into the
     * table, then "die" — exactly the state a job killed between commit
     * phases 5 and 6 leaves behind. No lease is written (the simulated
-    * process is gone), so [[recover]] must roll it back immediately. */
+    * process is gone), so [[recover]] must roll it back immediately.
+    * The staging write is deliberately NOT clustered by bucket (unlike
+    * [[stageAndCommit]]): one file per (input task, bucket) leaves several
+    * files per bucket, so the half-move splits buckets and the wreck
+    * stays half-moved even for an input with few buckets. */
   private[graft] def injectCrashMidCommit(df: DataFrame, dir: String,
                                           bucketCol: String): Unit = {
     val spark = df.sparkSession
@@ -1280,7 +1298,8 @@ object LineageSink {
   }
 
   /** Fault injection: a job that died while still writing its staging
-    * directory (no marker, no lease). */
+    * directory (no marker, no lease). Its write is unclustered like
+    * [[injectCrashMidCommit]]'s: several files per bucket. */
   private[graft] def injectCrashMidStaging(df: DataFrame, dir: String,
                                            bucketCol: String): Unit = {
     val jobId = "staged-" + java.util.UUID.randomUUID().toString

@@ -7,9 +7,10 @@ import graft.sources.LineageSink
 /** Round-6 rehearsal for VERDICT next-round #1's measured failure shape:
   * snapshot() over THOUSANDS of small files is listing/planning-bound
   * (round-5 LineageScaleDrive: 15.9 s for 8k rows across 4.7k files).
-  * Build that state directly — one commit of a deliberately over-
-  * partitioned frame lands ~`tasks` files per bucket — then measure
-  * snapshot plan+read before and after [[LineageSink.compactData]].
+  * Build that state directly — one commit capped at two rows per file
+  * lands `tasks` files per bucket (the staged write clusters each bucket
+  * into one writer task, so only the file cap can fan a commit out) — then
+  * measure snapshot plan+read before and after [[LineageSink.compactData]].
   *
   * The IVF-append rehearsal (IvfAppendDrive) measures the same maintenance
   * against a data-heavy index; THIS drive isolates the listing term the
@@ -33,8 +34,8 @@ object LineageCompactionDrive {
     val rows = tasks.toLong * buckets * 2
     val df = spark.range(0, rows)
       .select(col("id"), pmod(col("id"), lit(buckets)).cast("string").as("bucket"))
-      .repartition(tasks) // every task holds every bucket → tasks × buckets files
-    LineageSink.write(df, dir, "bucket")
+    // 2 × tasks rows per bucket at 2 rows per file → tasks × buckets files
+    LineageSink.stageAndCommit(df, dir, "bucket", maxRecordsPerFile = 2L)
 
     def probe(): (Int, Long, Long, Long) = {
       // fresh plans each call: plan (driver file-listing term) vs read

@@ -117,6 +117,61 @@ class LineageListingSpec extends AnyFunSuite {
       s"unregistered: ${onDisk -- registered}, missing: ${registered -- onDisk}")
   }
 
+  test("a commit lands one file per bucket, written by several tasks") {
+    val dir = java.nio.file.Files.createTempDirectory("lineage-clustered").toString
+    // 8 input partitions, each holding all 6 named buckets and the null one:
+    // an unclustered write lands 8 files per bucket
+    def input(from: Int) = spark.sparkContext.parallelize(
+      (from until from + 700).map(i => (i.toLong, if (i % 7 == 6) null else s"k${i % 7}")),
+      8).toDF("id", "bucket")
+    val df = input(0)
+    assert(df.rdd.getNumPartitions === 8)
+
+    // (stage, records written) of every task that wrote output
+    val sc = spark.sparkContext
+    org.apache.spark.graft.ListenerBusDrain(sc)
+    val written = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).map(_.outputMetrics.recordsWritten).filter(_ > 0)
+          .foreach(n => written.add((e.stageId, n)))
+    }
+    sc.addSparkListener(listener)
+    try {
+      LineageSink.write(df, dir, "bucket")
+      org.apache.spark.graft.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+
+    val m = LineageSink.manifest(spark, dir).collect()
+    assert(m.length === 7)
+    m.foreach { r =>
+      val files = r.getSeq[String](r.fieldIndex("files"))
+      assert(files.size === 1, s"bucket ${r.getAs[String]("bucket")} has files $files")
+      assert(r.getAs[Long]("rows") === 100L)
+    }
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.select(col("id"), col("bucket")).collect()
+        .map(r => (r.getLong(0), Option(r.getString(1)))).sortBy(_._1).toSeq
+    assert(rows(LineageSink.snapshot(spark, dir)) === rows(df))
+
+    // the data write is the stage whose tasks wrote all 700 rows; the
+    // clustering must not fold it into one writer task
+    import scala.jdk.CollectionConverters._
+    val byStage = written.asScala.toSeq.groupBy(_._1)
+    val writeStage = byStage.values.filter(_.map(_._2).sum == 700L).toSeq
+    assert(writeStage.size === 1, s"write stages by task records: $byStage")
+    assert(writeStage.head.size > 1, s"one task wrote every bucket: ${writeStage.head}")
+
+    // maxRecordsPerFile still splits a bucket: two commits put 200 rows in
+    // each bucket, and one task writes them as 80 + 80 + 40
+    LineageSink.write(input(700), dir, "bucket")
+    assert(LineageSink.compactData(spark, dir, maxRecordsPerFile = 80L) === 7)
+    LineageSink.manifest(spark, dir).where(col("replaces").isNotNull).collect()
+      .foreach(r => assert(r.getSeq[String](r.fieldIndex("files")).size === 3,
+        s"bucket ${r.getAs[String]("bucket")}: ${r.getSeq[String](r.fieldIndex("files"))}"))
+    assert(rows(LineageSink.snapshot(spark, dir)) === rows(df.union(input(700))))
+  }
+
   /** Plant a pre-registry manifest commit (no `files`, `commit_seq` or
     * `replaces` column) for job `job-legacy`, bucket `lg`, next to the
     * current commits of `dir`. */
