@@ -44,9 +44,9 @@ import org.apache.spark.sql.types._
   *      with read options built once per commit ([[ParquetFiles]]);
   *   4. write the `pending/<jobId>` marker naming every final path;
   *   5. rename each staged file into `data/`;
-  *   6. land the manifest rows as `commit-<jobId>.parquet` (written to a
-  *      job-private temp dir, then ONE rename — concurrent committers never
-  *      share a Spark `_temporary` directory);
+  *   6. land the manifest rows as `commit-<jobId>.parquet`: the driver
+  *      writes them as one attempt-private temp file
+  *      ([[ParquetFiles.write]], no Spark job), then ONE rename;
   *   7. delete the marker, staging dir and lease.
   *
   * MULTI-WRITER SAFETY (round-4): concurrent jobs writing one sink are safe
@@ -412,8 +412,8 @@ object LineageSink {
         }
       }
     }
-    // staging dirs and manifest temp dirs of non-live jobs belong to dead
-    // jobs; a live concurrent writer's are left alone
+    // staging dirs and manifest temps of non-live jobs belong to dead jobs;
+    // a live concurrent writer's are left alone
     val sroot = new Path(stagingRoot(dir))
     if (fs.exists(sroot))
       fs.listStatus(sroot)
@@ -437,6 +437,8 @@ object LineageSink {
     if (fs.exists(mroot)) {
       fs.listStatus(mroot).foreach { s =>
         val n = s.getPath.getName
+        // a manifest temp is a file (the driver-written commit) or, left
+        // by a crash of an older version, a Spark output dir
         if (n.startsWith(".mtmp-") &&
             !Lease.live(fs, dir, n.stripPrefix(".mtmp-"), horizon))
           fs.delete(s.getPath, true)
@@ -534,18 +536,15 @@ object LineageSink {
       case r => Some(r.getLong(0))
     }
 
-  /** Land one job's manifest rows as `commit-<jobId>.parquet`: Spark-write
-    * into a job-private temp dir, then a single rename. Concurrent
-    * committers touch disjoint paths (no shared `_temporary`). */
+  /** Land one job's manifest rows as `commit-<jobId>.parquet`: the driver
+    * writes them as the attempt-private file `.mtmp-<attempt>` (no Spark
+    * job: the rows are already here), then a single rename. Concurrent
+    * committers touch disjoint paths. */
   private def appendManifestRows(spark: SparkSession, dir: String,
       jobId: String, attempt: String, rows: Seq[Row]): Unit = {
     val fs = fileSystem(spark, dir)
     val tmp = new Path(s"${manifestDir(dir)}/.mtmp-$attempt")
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), manifestSchema)
-      .write.mode(SaveMode.ErrorIfExists).parquet(tmp.toString)
-    val parts = ParquetFiles.visible(fs, tmp).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).toVector
-    require(parts.size == 1, s"expected one manifest part file, got $parts")
+    ParquetFiles.write(spark, tmp, manifestSchema, rows)
     val target = new Path(s"${manifestDir(dir)}/commit-$jobId.parquet")
     // defensive: rename-to-existing OVERWRITES on LocalFileSystem/S3A, so
     // never rely on it failing — the marker re-check in stageAndCommit
@@ -553,8 +552,7 @@ object LineageSink {
     // non-atomic-marker window loudly instead of clobbering the winner
     require(!fs.exists(target),
       s"manifest commit already exists: $target (duplicate jobId commit)")
-    require(fs.rename(parts.head, target), s"manifest commit rename failed: $target")
-    fs.delete(tmp, true)
+    require(fs.rename(tmp, target), s"manifest commit rename failed: $target")
   }
 
   /** Stage `df` and run the two-phase commit. The STAGING dir and LEASE are
@@ -771,15 +769,24 @@ object LineageSink {
 
   /** The one manifest reader: `paths` read with the declared
     * [[manifestSchema]] (no schema-inference job; columns a legacy file
-    * lacks read as null), dedup'd on (job_id, bucket) — so overlap between
-    * a snapshot and the commits it covers (the lock-free compaction window)
-    * never double-counts. No paths reads as the empty frame of that
-    * schema. */
+    * lacks read as null), then [[dedupManifest]]. No paths reads as the
+    * empty frame of that schema. */
   private def readManifest(spark: SparkSession, paths: Seq[Path]): DataFrame =
     if (paths.isEmpty)
       spark.createDataFrame(java.util.Collections.emptyList[Row](), manifestSchema)
-    else spark.read.schema(manifestSchema).option("ignoreMissingFiles", "true")
-      .parquet(paths.map(_.toString): _*).dropDuplicates("job_id", "bucket")
+    else dedupManifest(readManifestRows(spark, paths))
+
+  /** [[readManifest]] of non-empty `paths` without the dedup: every row,
+    * duplicates kept. */
+  private def readManifestRows(spark: SparkSession, paths: Seq[Path]): DataFrame =
+    spark.read.schema(manifestSchema).option("ignoreMissingFiles", "true")
+      .parquet(paths.map(_.toString): _*)
+
+  /** One row per (job_id, bucket), so overlap between a snapshot and the
+    * commits it covers (the lock-free compaction window) never
+    * double-counts. */
+  private def dedupManifest(rows: DataFrame): DataFrame =
+    rows.dropDuplicates("job_id", "bucket")
 
   /** All committed manifest rows ([[readManifest]] of the flat commit files
     * and complete snapshot dirs; empty if nothing committed yet). A file
@@ -803,7 +810,12 @@ object LineageSink {
   /** Rewrite the manifest into ONE snapshot and retire what it covers.
     * Explicit maintenance (like Iceberg's rewrite_manifests) — run it
     * periodically on long-lived sinks; cost is one read+write of the
-    * manifest rows, independent of the data tree.
+    * manifest rows, independent of the data tree. One task reads, dedups
+    * and writes the snapshot: the rows are coalesced to one partition
+    * BEFORE the dedup, which that partitioning already satisfies, so no
+    * shuffle is planned. The snapshot stays a Spark write rather than a
+    * driver-side one, which would `collect()` the whole manifest onto the
+    * driver heap.
     *
     * Lock-free: the snapshot dir name is unique (`v-<uuid>`), the `_covers`
     * file records exactly what it subsumed, and covered items are deleted
@@ -837,7 +849,7 @@ object LineageSink {
     if (flats2.isEmpty && versions2.size <= 1) return manifest(spark, dir)
     val covered = (flats2 ++ versions2).map(_.getPath)
     val target = s"${manifestDir(dir)}/v-${java.util.UUID.randomUUID()}"
-    readManifest(spark, covered).coalesce(1)
+    dedupManifest(readManifestRows(spark, covered).coalesce(1))
       .write.mode(SaveMode.ErrorIfExists).parquet(target)
     createText(fs, new Path(s"$target/_covers"), covered.map(_.getName).mkString("\n"))
     manifest(spark, dir)

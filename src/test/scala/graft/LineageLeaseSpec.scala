@@ -3,7 +3,7 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.LineageSink
+import graft.sources.{LineageSink, ParquetFiles}
 import graft.sources.LineageSink.Lease
 
 /** Round-5 lease lifecycle: a live commit heartbeats its lease so no single
@@ -69,5 +69,38 @@ class LineageLeaseSpec extends AnyFunSuite {
     assert(live.isEmpty, s"leaked heartbeat threads: ${live.map(_.getName).toSeq}")
     // and the committed table reads back whole
     assert(LineageSink.snapshot(spark, dir).count() === 40)
+  }
+
+  test("recover reaps a dead attempt's manifest temp, file or dir, and keeps a live one's") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("lease-mtmp").toString
+    LineageSink.write((0 until 20).map(i => (i.toLong, s"b${i % 2}")).toDF("id", "bucket"),
+      dir, "bucket")
+    val f = fs(dir)
+    val row = org.apache.spark.sql.Row("b9", 1L, Seq("/x"), "job", new java.sql.Timestamp(0L),
+      9L, null)
+    def mtmp(attempt: String) = new Path(s"$dir/manifest/.mtmp-$attempt")
+    // a driver-written temp file whose attempt's lease went stale
+    val staleFile = "job-a--stale"
+    ParquetFiles.write(spark, mtmp(staleFile), LineageSink.manifestSchema, Seq(row))
+    f.create(new Path(s"$dir/leases/$staleFile"), false).close()
+    f.setTimes(new Path(s"$dir/leases/$staleFile"), System.currentTimeMillis() - 3600000L, -1)
+    // a Spark-written temp dir from a crash of an older version, no lease
+    val deadDir = "job-b--dead"
+    spark.createDataFrame(java.util.List.of(row), LineageSink.manifestSchema)
+      .write.parquet(mtmp(deadDir).toString)
+    // a live attempt's temp file
+    val live = "job-c--live"
+    val lease = Lease.acquire(f, dir, live, "commit", 600000L)
+    ParquetFiles.write(spark, mtmp(live), LineageSink.manifestSchema, Seq(row))
+    assert(f.getFileStatus(mtmp(staleFile)).isFile && f.getFileStatus(mtmp(deadDir)).isDirectory)
+
+    LineageSink.recover(spark, dir)
+    assert(!f.exists(mtmp(staleFile)), "stale attempt's temp file kept")
+    assert(!f.exists(mtmp(deadDir)), "dead attempt's temp dir kept")
+    assert(f.exists(mtmp(live)), "live attempt's temp file reaped")
+    lease.verify()
+    // the temps never read as commits
+    assert(LineageSink.manifest(spark, dir).count() === 2L)
   }
 }

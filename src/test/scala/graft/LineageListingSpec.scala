@@ -72,7 +72,7 @@ class LineageListingSpec extends AnyFunSuite {
       s"commit listed the committed data tree:\n${offenders.mkString("\n")}")
     // sanity: the probe did observe the job-scoped listings
     assert(touched.exists(_.contains("/staging/")), "probe saw no staging listing")
-    // the sink's own walks (staging, manifest temp dir) never ask for block
+    // the sink's own walk of its staging dir never asks for block
     // locations; a located listing pays one lookup per staged file. Only
     // Spark's file index, planning the read of the landed manifest files,
     // still looks them up.
@@ -250,5 +250,112 @@ class LineageListingSpec extends AnyFunSuite {
       org.apache.spark.graft.ListenerBusDrain(sc)
     } finally sc.removeSparkListener(listener)
     assert(jobs.get === 0, s"manifest() launched ${jobs.get} Spark job(s)")
+  }
+
+  test("a commit runs no Spark job after its staging write; its manifest file reads like a Spark-written one") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    import graft.sources.ParquetFiles
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files.createTempDirectory("lineage-driver-manifest").toString
+    // bucket values that URI-escape; non-ASCII text joins the rows below,
+    // since the JVM's file-name encoding may not map it to a local path
+    val buckets = Seq("a%b", "c d", "plain")
+    val df = (0 until 90).map(i => (i.toLong, buckets(i % 3))).toDF("id", "bucket")
+
+    // job of every stage, the jobs in start order, and (stage, records
+    // written) of every task that wrote output
+    val sc = spark.sparkContext
+    org.apache.spark.graft.ListenerBusDrain(sc)
+    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val written = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.add(e.jobId)
+        e.stageIds.foreach(stageJob.put(_, e.jobId))
+      }
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).map(_.outputMetrics.recordsWritten).filter(_ > 0)
+          .foreach(n => written.add((e.stageId, n)))
+    }
+    val jobId = "driver-manifest"
+    sc.addSparkListener(listener)
+    try {
+      LineageSink.stageAndCommit(df, dir, "bucket", jobId,
+        replaces = Map("c d" -> Seq("old-1", "old-2")))
+      org.apache.spark.graft.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+
+    // the staging write is the job whose tasks wrote all 90 rows
+    val byJob = written.asScala.toSeq.groupBy(w => stageJob.get(w._1))
+      .map { case (j, ws) => j -> ws.map(_._2).sum }
+    val stagingJob = byJob.collect { case (j, 90L) => j }.toSeq
+    assert(stagingJob.size === 1, s"records written by job: $byJob")
+    val after = jobs.asScala.filter(_ > stagingJob.head).toSeq
+    assert(after.isEmpty, s"the commit ran Spark job(s) $after after its staging write")
+
+    val manifestDir = new java.io.File(s"$dir/manifest")
+    assert(new java.io.File(manifestDir, s"commit-$jobId.parquet").isFile)
+    val temps = manifestDir.listFiles().map(_.getName).filter(_.contains(".mtmp-"))
+    assert(temps.isEmpty, s"temp files left: ${temps.toSeq}")
+
+    // every field of the landed rows, against the files on disk
+    val onDisk: Map[String, Seq[String]] = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "data"))
+      try s.iterator.asScala.filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+        .groupBy(p => ExternalCatalogUtils.unescapePathName(
+          p.getParent.getFileName.toString.stripPrefix("bucket=")))
+        .map { case (b, ps) => b -> ps.map(_.toAbsolutePath.toString) }
+      finally s.close()
+    }
+    val landed = LineageSink.manifest(spark, dir).collect().sortBy(_.getAs[String]("bucket"))
+    assert(landed.map(_.getAs[String]("bucket")).toSeq === buckets.sorted)
+    landed.foreach { r =>
+      val b = r.getAs[String]("bucket")
+      assert(r.getAs[Long]("rows") === 30L)
+      assert(r.getSeq[String](r.fieldIndex("files")) === onDisk(b), s"bucket $b")
+      assert(r.getAs[String]("job_id") === jobId)
+      assert(r.getAs[Long]("commit_seq") === 1L)
+      if (b == "c d") assert(r.getSeq[String](r.fieldIndex("replaces")) === Seq("old-1", "old-2"))
+      else assert(r.isNullAt(r.fieldIndex("replaces")), s"bucket $b replaces")
+    }
+
+    // the same rows plus a non-ASCII one, with a microsecond timestamp,
+    // landed by the driver writer and, as commits were before it, by a
+    // Spark write
+    val ts = java.sql.Timestamp.valueOf("2026-03-04 05:06:07.123456")
+    def rowsOf(job: String) = landed.toSeq.map(r =>
+      Row(r.get(0), r.get(1), r.get(2), job, ts, r.get(5), r.get(6))) :+
+      Row("zé東", 4L, Seq(s"$dir/data/bucket=zé東/part-0.parquet"), job, ts, 2L, null)
+    val driverFile = new org.apache.hadoop.fs.Path(s"$dir/manifest/commit-driver.parquet")
+    ParquetFiles.write(spark, driverFile, LineageSink.manifestSchema, rowsOf("driver"))
+    val tmp = s"$dir/manifest/.spark-stage"
+    spark.createDataFrame(rowsOf("spark").asJava, LineageSink.manifestSchema)
+      .coalesce(1).write.parquet(tmp)
+    val part = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
+    val sparkFile = new java.io.File(s"$dir/manifest/commit-spark.parquet")
+    assert(part.renameTo(sparkFile))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+
+    val m = LineageSink.manifest(spark, dir)
+    def read(job: String) = m.where(col("job_id") === job).drop("job_id").collect()
+      .sortBy(_.getAs[String]("bucket")).toSeq
+    val driverRows = read("driver")
+    assert(driverRows.size === 4 && driverRows.last.getAs[String]("bucket") === "zé東")
+    assert(driverRows === read("spark"))
+    driverRows.foreach { r =>
+      val t = r.getAs[java.sql.Timestamp]("written_at")
+      assert(t === ts && t.getNanos === 123456000, s"written_at $t")
+    }
+    // same parquet schema, Spark metadata and codec as the Spark-written file
+    val footers = new ParquetFiles.Footers(sc.hadoopConfiguration)
+    val fsys = driverFile.getFileSystem(sc.hadoopConfiguration)
+    def footer(p: org.apache.hadoop.fs.Path) = footers(fsys.getFileStatus(p)) { r =>
+      val f = r.getFooter
+      (f.getFileMetaData.getSchema, f.getFileMetaData.getKeyValueMetaData.asScala.toMap,
+        f.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec)).toSet)
+    }
+    assert(footer(driverFile) === footer(new org.apache.hadoop.fs.Path(sparkFile.getPath)))
   }
 }
