@@ -769,24 +769,15 @@ object LineageSink {
 
   /** The one manifest reader: `paths` read with the declared
     * [[manifestSchema]] (no schema-inference job; columns a legacy file
-    * lacks read as null), then [[dedupManifest]]. No paths reads as the
-    * empty frame of that schema. */
+    * lacks read as null), dedup'd on (job_id, bucket) — so overlap between
+    * a snapshot and the commits it covers (the lock-free compaction window)
+    * never double-counts. No paths reads as the empty frame of that
+    * schema. */
   private def readManifest(spark: SparkSession, paths: Seq[Path]): DataFrame =
     if (paths.isEmpty)
       spark.createDataFrame(java.util.Collections.emptyList[Row](), manifestSchema)
-    else dedupManifest(readManifestRows(spark, paths))
-
-  /** [[readManifest]] of non-empty `paths` without the dedup: every row,
-    * duplicates kept. */
-  private def readManifestRows(spark: SparkSession, paths: Seq[Path]): DataFrame =
-    spark.read.schema(manifestSchema).option("ignoreMissingFiles", "true")
-      .parquet(paths.map(_.toString): _*)
-
-  /** One row per (job_id, bucket), so overlap between a snapshot and the
-    * commits it covers (the lock-free compaction window) never
-    * double-counts. */
-  private def dedupManifest(rows: DataFrame): DataFrame =
-    rows.dropDuplicates("job_id", "bucket")
+    else spark.read.schema(manifestSchema).option("ignoreMissingFiles", "true")
+      .parquet(paths.map(_.toString): _*).dropDuplicates("job_id", "bucket")
 
   /** All committed manifest rows ([[readManifest]] of the flat commit files
     * and complete snapshot dirs; empty if nothing committed yet). A file
@@ -810,12 +801,13 @@ object LineageSink {
   /** Rewrite the manifest into ONE snapshot and retire what it covers.
     * Explicit maintenance (like Iceberg's rewrite_manifests) — run it
     * periodically on long-lived sinks; cost is one read+write of the
-    * manifest rows, independent of the data tree. One task reads, dedups
-    * and writes the snapshot: the rows are coalesced to one partition
-    * BEFORE the dedup, which that partitioning already satisfies, so no
-    * shuffle is planned. The snapshot stays a Spark write rather than a
-    * driver-side one, which would `collect()` the whole manifest onto the
-    * driver heap.
+    * manifest rows, independent of the data tree. The covered files are
+    * scanned in parallel and dedup'd through a shuffle; only the snapshot
+    * write runs as one task. Coalescing before the dedup would drop the
+    * shuffle but read every covered file serially in that one task, which
+    * is slower once a long-lived sink has hundreds of commit files. The
+    * snapshot stays a Spark write rather than a driver-side one, which
+    * would `collect()` the whole manifest onto the driver heap.
     *
     * Lock-free: the snapshot dir name is unique (`v-<uuid>`), the `_covers`
     * file records exactly what it subsumed, and covered items are deleted
@@ -849,7 +841,7 @@ object LineageSink {
     if (flats2.isEmpty && versions2.size <= 1) return manifest(spark, dir)
     val covered = (flats2 ++ versions2).map(_.getPath)
     val target = s"${manifestDir(dir)}/v-${java.util.UUID.randomUUID()}"
-    dedupManifest(readManifestRows(spark, covered).coalesce(1))
+    readManifest(spark, covered).coalesce(1)
       .write.mode(SaveMode.ErrorIfExists).parquet(target)
     createText(fs, new Path(s"$target/_covers"), covered.map(_.getName).mkString("\n"))
     manifest(spark, dir)

@@ -11,7 +11,7 @@ import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetWriteSupport}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
@@ -69,12 +69,14 @@ private[graft] object ParquetFiles {
       new ParquetWriteSupport()
   }
 
-  /** Write `rows` of `schema` from the driver as ONE snappy parquet file at
+  /** Write `rows` of `schema` from the driver as ONE parquet file at
     * `path`, failing if it exists. Spark's own `ParquetWriteSupport` does
     * the encoding, so the file schema and the Spark footer metadata are
     * what a Spark write of the same rows produces; the write support reads
     * its format settings from the Hadoop conf, copied here from the
-    * session's SQL conf as Spark's parquet write does. */
+    * session's SQL conf as Spark's parquet write does. The codec is the
+    * session's `spark.sql.parquet.compression.codec`, resolved through
+    * Spark's own `ParquetOptions`. */
   def write(spark: SparkSession, path: Path, schema: StructType, rows: Seq[Row]): Unit = {
     val sql = spark.sessionState.conf
     val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
@@ -87,7 +89,8 @@ private[graft] object ParquetFiles {
     val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
     val internal = rows.map(r => toInternal(r).asInstanceOf[InternalRow])
     val w = new RowWriter(HadoopOutputFile.fromPath(path, conf)).withConf(conf)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .withCompressionCodec(CompressionCodecName.valueOf(
+        new ParquetOptions(Map.empty[String, String], sql).compressionCodecClassName))
       .withWriteMode(ParquetFileWriter.Mode.CREATE).build()
     try internal.foreach(w.write) finally w.close()
   }

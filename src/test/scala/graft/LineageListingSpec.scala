@@ -358,4 +358,34 @@ class LineageListingSpec extends AnyFunSuite {
     }
     assert(footer(driverFile) === footer(new org.apache.hadoop.fs.Path(sparkFile.getPath)))
   }
+
+  test("the driver's manifest writer follows the session's parquet codec, as a Spark write does") {
+    import org.apache.hadoop.fs.{Path => HPath}
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    import graft.sources.ParquetFiles
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files.createTempDirectory("lineage-driver-codec").toString
+    val rows = Seq(org.apache.spark.sql.Row("b", 1L, Seq("f.parquet"), "j",
+      java.sql.Timestamp.valueOf("2026-03-04 05:06:07"), 1L, null))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val footers = new ParquetFiles.Footers(conf)
+    def codecs(p: HPath) = footers(p.getFileSystem(conf).getFileStatus(p)) { r =>
+      r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec)).toSet
+    }
+    val key = "spark.sql.parquet.compression.codec"
+    for ((name, codec) <- Seq("gzip" -> CompressionCodecName.GZIP,
+                              "none" -> CompressionCodecName.UNCOMPRESSED)) {
+      spark.conf.set(key, name)
+      try {
+        val driverFile = new HPath(s"$dir/driver-$name.parquet")
+        ParquetFiles.write(spark, driverFile, LineageSink.manifestSchema, rows)
+        spark.createDataFrame(rows.asJava, LineageSink.manifestSchema)
+          .coalesce(1).write.parquet(s"$dir/spark-$name")
+        val part = new java.io.File(s"$dir/spark-$name").listFiles()
+          .filter(_.getName.endsWith(".parquet")).head
+        assert(codecs(driverFile) === Set(codec), name)
+        assert(codecs(new HPath(part.getPath)) === Set(codec), name)
+      } finally spark.conf.unset(key)
+    }
+  }
 }

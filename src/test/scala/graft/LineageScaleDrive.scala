@@ -45,6 +45,7 @@ object LineageScaleDrive {
     val perWindow = math.max(1, commits / windows)
     val windowMs = Array.fill(windows)(0L)
     val manifestProbes = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
+    val compactMs = scala.collection.mutable.ArrayBuffer.empty[Long]
 
     val t0 = System.nanoTime()
     var c = 0
@@ -54,7 +55,9 @@ object LineageScaleDrive {
       windowMs(math.min(windows - 1, c / perWindow)) += ms(tC)
       c += 1
       if (c % compactEvery == 0) {
+        val tK = System.nanoTime()
         LineageSink.compactManifest(spark, dir)
+        compactMs += ms(tK)
         val tM = System.nanoTime()
         val n = LineageSink.manifest(spark, dir).count()
         manifestProbes += ((c, ms(tM)))
@@ -93,6 +96,7 @@ object LineageScaleDrive {
       s""""compact_every":$compactEvery,"total_s":${totalCommitMs / 1000.0},""" +
       s""""per_commit_ms_first":${f"$firstW%.1f"},"per_commit_ms_last":${f"$lastW%.1f"},""" +
       s""""window_ms":[${windowMs.mkString(",")}],""" +
+      s""""compact_ms":[${compactMs.mkString(",")}],""" +
       s""""manifest_count_ms":[${manifestProbes.map(_._2).mkString(",")}],""" +
       s""""recover8_ms":$recoverMs,"clean_orphans_ms":$orphanMs,"orphans":$orphans,""" +
       s""""snapshot_ms":$snapshotMs,"snapshot_rows":$snapRows,"replay_ms":$replayMs}""")
