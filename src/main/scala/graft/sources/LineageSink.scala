@@ -1,8 +1,9 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
@@ -26,7 +27,6 @@ import org.apache.spark.sql.types._
   *   dir/manifest/v-<uuid>/      compacted manifest snapshots (any number)
   *   dir/manifest/seq/<n>        commit-sequence claims (exclusive create)
   *   dir/manifest/_expire_watermark        as-of floor after data expiry
-  *   dir/_sink_id                sink identity stamp (creation UUID)
   * }}}
   *
   * Commit protocol (all steps O(files written by THIS job), never a listing
@@ -107,10 +107,15 @@ import org.apache.spark.sql.types._
   *
   * File identity: manifest `files` entries and recovery paths are BOTH
   * derived from Hadoop listings (`Path.toUri.getPath`) — a single encoding,
-  * so bucket values that URI-escape (spaces, `%`, non-ASCII) round-trip.
+  * so bucket values that URI-escape (spaces, `%`) round-trip. Non-ASCII
+  * bucket values round-trip only where the JVM's file-name encoding
+  * (`sun.jnu.encoding`) can represent them: on an ASCII one
+  * (`ANSI_X3.4-1968`, a JVM started without a UTF-8 locale) the staging
+  * write of such a bucket throws `InvalidPathException`.
   *
   * All filesystem access goes through Hadoop [[FileSystem]] (works on HDFS /
-  * object stores, not only local disk). On object stores without atomic
+  * object stores, not only local disk), except the local-disk branch of the
+  * one exclusive create ([[createExclusive]]). On object stores without atomic
   * rename the per-file move in step 5 is a copy — still O(new); swap in a
   * real Iceberg catalog for a pure-metadata commit. Step 3 is a serial
   * driver-side loop of one footer open per new file, with no status lookup,
@@ -155,16 +160,42 @@ object LineageSink {
 
   // ------------------------------------------------- text files + leases ---
 
-  /** A small control file's whole UTF-8 text; a vanished file throws. */
+  /** A small control file's whole UTF-8 text; a vanished file throws.
+    * Read past any checksum layer: [[createExclusive]] writes no `.crc`
+    * sibling, so a stale one left by an older writer must not fail it. */
   private def readText(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
+    val raw = fs match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case other => other
+    }
+    val in = raw.open(p)
     try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
   }
 
-  /** Exclusive create of a small control file: throws if `p` exists. */
-  private def createText(fs: FileSystem, p: Path, text: String): Unit = {
-    val out = fs.create(p, false)
-    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
+  /** The sink's one exclusive create, under every lease, pending marker and
+    * sequence claim: writes `text` to `p` and returns true, or returns
+    * false when `p` already exists (another caller won). On the local
+    * filesystem (`file:`) it is `java.nio` `CREATE_NEW` (O_EXCL), atomic
+    * across threads and processes — Hadoop's local create(overwrite =
+    * false) is check-then-create. Elsewhere it is `fs.create(p, false)`:
+    * atomic on HDFS; on object stores without a conditional put it is
+    * check-then-create, so writers in several processes there need a store
+    * with atomic create. Missing parent directories are created, as
+    * Hadoop's create does; the file is visible empty until `text` lands. */
+  private[graft] def createExclusive(fs: FileSystem, p: Path, text: String): Boolean = {
+    val bytes = text.getBytes(StandardCharsets.UTF_8)
+    val q = fs.makeQualified(p)
+    if (q.toUri.getScheme == "file") {
+      val local = Paths.get(q.toUri)
+      Files.createDirectories(local.getParent)
+      try { Files.write(local, bytes, StandardOpenOption.CREATE_NEW); true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    } else
+      try {
+        val out = fs.create(p, false)
+        try out.write(bytes) finally out.close()
+        true
+      } catch { case _: java.io.IOException if fs.exists(p) => false }
   }
 
   private def leasePath(dir: String, name: String) =
@@ -190,18 +221,17 @@ object LineageSink {
     * something visible, turning a reaped-while-running holder into a loud
     * abort instead of a silent corruption.
     *
-    * Acquisition is exclusive create, read back by [[verify]] (the belt for
-    * filesystems whose create(overwrite = false) is check-then-create). A
-    * STALE lease is reaped by rename-to-unique, never by delete — a reaper
-    * delayed between its staleness check and the reap could otherwise
-    * destroy a lease a faster acquirer just created; rename is first-wins,
-    * and the winner re-checks the reaped file's liveness, restoring it and
-    * backing off loudly if it turns out fresh. Residual race: while the
-    * reaped file is renamed away the path is absent, so a third acquirer
-    * can create it before the restore; the restore then fails, the stolen
-    * lease is deleted, and the displaced live holder runs beside the new
-    * one until its next [[verify]] — loud, but after the work since its
-    * last verify. That is why every visible step verifies first. */
+    * Acquisition is [[createExclusive]]. A STALE lease is reaped by
+    * rename-to-unique, never by delete — a reaper delayed between its
+    * staleness check and the reap could otherwise destroy a lease a faster
+    * acquirer just created; rename is first-wins, and the winner re-checks
+    * the reaped file's liveness, restoring it and backing off loudly if it
+    * turns out fresh. Residual race: while the reaped file is renamed away
+    * the path is absent, so a third acquirer can create it before the
+    * restore; the restore then fails, the stolen lease is deleted, and the
+    * displaced live holder runs beside the new one until its next
+    * [[verify]] — loud, but after the work since its last verify. That is
+    * why every visible step verifies first. */
   private[graft] final class Lease private (fs: FileSystem, path: Path,
                                             scope: String, uuid: String) {
 
@@ -287,17 +317,11 @@ object LineageSink {
         } // rename lost: another reaper got there first — race on create
       }
       val uuid = java.util.UUID.randomUUID().toString
-      fs.mkdirs(p.getParent)
-      try createText(fs, p, uuid)
-      catch {
-        case e: java.io.IOException =>
-          throw new IllegalStateException(
-            s"another holder just took the $scope lease at $p; retry after " +
-              "it finishes or goes stale", e)
-      }
-      val lease = new Lease(fs, p, scope, uuid)
-      lease.verify()
-      lease
+      if (!createExclusive(fs, p, uuid))
+        throw new IllegalStateException(
+          s"another holder just took the $scope lease at $p; retry after " +
+            "it finishes or goes stale")
+      new Lease(fs, p, scope, uuid)
     }
 
     /** Run `body` holding lease `name`: acquire, heartbeat, and on exit
@@ -335,11 +359,12 @@ object LineageSink {
   private object Marker {
     private val Header = "#attempt="
 
-    /** Exclusive create: the marker is the per-jobId commit mutex. */
-    def write(fs: FileSystem, p: Path, attempt: String, paths: Seq[String]): Unit = {
-      fs.mkdirs(p.getParent)
-      createText(fs, p, (s"$Header$attempt" +: paths).mkString("\n"))
-    }
+    /** Exclusive create: the marker is the per-jobId commit mutex, and
+      * the loser of a race for it throws. */
+    def write(fs: FileSystem, p: Path, attempt: String, paths: Seq[String]): Unit =
+      if (!createExclusive(fs, p, (s"$Header$attempt" +: paths).mkString("\n")))
+        throw new IllegalStateException(
+          s"pending marker $p exists: another attempt is committing this job id")
 
     /** (owning attempt, listed paths), or None when the marker vanished (a
       * concurrent recover finished it). A HEADERLESS marker — created but
@@ -420,19 +445,6 @@ object LineageSink {
         .filterNot(s => Lease.live(fs, dir, s.getPath.getName, horizon))
         .foreach(s => { fs.delete(s.getPath, true)
           fs.delete(leasePath(dir, s.getPath.getName), false) })
-    // orphaned sink-id temp files (a stamper that died between write and
-    // rename) — dot-prefixed, invisible to readers; reap once stale. The
-    // age floor is NOT the configurable horizon: a spec running with
-    // staleMs=0 must not nuke a LIVE stamper's millisecond-wide
-    // write-to-rename window (these temps have no lease to check)
-    val sinkTmpFloor = math.max(horizon, 60000L)
-    val root = new Path(dir)
-    if (fs.exists(root))
-      fs.listStatus(root).foreach { s =>
-        if (s.getPath.getName.startsWith("._sink_id.tmp-") &&
-            System.currentTimeMillis() - s.getModificationTime > sinkTmpFloor)
-          fs.delete(s.getPath, false)
-      }
     val mroot = new Path(manifestDir(dir))
     if (fs.exists(mroot)) {
       fs.listStatus(mroot).foreach { s =>
@@ -475,39 +487,24 @@ object LineageSink {
 
   /** Claim the next commit sequence number: list `manifest/seq/`, take
     * max+1, exclusive-create the claim file (content = the claiming job,
-    * for forensics). The exclusive create is the same mutex primitive as
-    * the pending marker; a lost race re-lists and retries. Claims are
-    * MONOTONE (every claim exceeds all claims visible before it) and
-    * UNIQUE; a crash between claim and manifest landing burns a number
+    * for forensics) through [[createExclusive]], the same primitive as the
+    * pending marker and the leases; a lost race re-lists and retries.
+    * Claims are MONOTONE (every claim exceeds all claims visible before it)
+    * and UNIQUE; a crash between claim and manifest landing burns a number
     * (gaps are harmless — the sequence orders commits, it does not count
     * them). Reproducibility note: `snapshotAsOfSeq(n)` is stable once every
     * claim ≤ n has landed its manifest row or its claimant died — the
     * claim-to-land window is one small parquet write + rename inside a
-    * heartbeated commit, the tight bound wall-clock skew never had.
-    *
-    * FILESYSTEM REQUIREMENT (round-7 ADVICE): uniqueness rests on
-    * `fs.create(path, overwrite = false)` being ATOMIC — true on HDFS and
-    * on stores with conditional create. Hadoop's LOCAL filesystem
-    * (RawLocalFileSystem/ChecksumFileSystem — what a bare path resolves
-    * to, including every test here) implements it as check-then-create, as
-    * do object stores without conditional PUT: there, two committers in
-    * DIFFERENT processes racing the same sink could both claim one number.
-    * Single-process concurrency (this sandbox) is still safe — the claims
-    * race through one JVM's filesystem instance. For true multi-process
-    * writers, run the sink over a store with atomic create or front it
-    * with a coordination layer. */
-  private def claimSeq(fs: FileSystem, dir: String, jobId: String): Long = {
+    * heartbeated commit, the tight bound wall-clock skew never had. */
+  private[graft] def claimSeq(fs: FileSystem, dir: String, jobId: String): Long = {
     val seqDir = new Path(s"${manifestDir(dir)}/seq")
     fs.mkdirs(seqDir)
     var attempt = 0
     while (attempt < 10000) {
       val names = fs.listStatus(seqDir).map(_.getPath.getName).filter(_.forall(_.isDigit))
       val next = (if (names.isEmpty) 0L else names.map(_.toLong).max) + 1L
-      try {
-        createText(fs, new Path(seqDir, f"$next%020d"), jobId)
-        return next
-      } catch { case _: java.io.IOException => () } // lost the race: re-list
-      attempt += 1
+      if (createExclusive(fs, new Path(seqDir, f"$next%020d"), jobId)) return next
+      attempt += 1 // lost the race: re-list
     }
     throw new IllegalStateException(s"cannot claim a commit sequence under $seqDir")
   }
@@ -668,59 +665,15 @@ object LineageSink {
     manifest(spark, dir)
   }
 
-  // ---------------------------------------------------- sink identity ----
-
-  /** The sink's creation UUID, stamped on first use (exclusive create — a
-    * concurrent loser reads the winner's). A wiped-and-recreated sink dir
-    * gets a NEW id, which is what keys the seen-cache below: entries of the
-    * old incarnation can never satisfy a lookup against the new one.
-    * (Partial wipes that preserve `_sink_id` keep the identity — wipe the
-    * sink root, not its insides.) */
-  private def sinkId(fs: FileSystem, dir: String): String = {
-    val p = new Path(s"$dir/_sink_id")
-    var attempt = 0
-    while (attempt < 100) {
-      try {
-        val s = readText(fs, p).trim
-        if (s.length == 36) return s
-      } catch { case _: java.io.IOException => () }
-      // missing: stamp it via write-to-temp + RENAME. Never two concurrent
-      // create(overwrite=false) on the live path: on ChecksumFileSystem the
-      // racers' data and .crc streams can interleave into a PERMANENTLY
-      // unreadable file (observed in the concurrency spec). A rename either
-      // lands a complete file (local FS: atomic, last-wins) or fails
-      // against an existing one (HDFS) — both settle on one readable id;
-      // a transiently divergent read is only ever a seen-cache MISS, which
-      // falls through to the idempotent manifest check.
-      try {
-        fs.mkdirs(p.getParent)
-        val tmp = new Path(s"$dir/._sink_id.tmp-${java.util.UUID.randomUUID()}")
-        createText(fs, tmp, java.util.UUID.randomUUID().toString)
-        if (!fs.rename(tmp, p)) fs.delete(tmp, false)
-      } catch { case _: java.io.IOException => () }
-      attempt += 1
-      if (attempt > 1) Thread.sleep(5)
-    }
-    throw new IllegalStateException(s"cannot establish sink identity at $p")
-  }
-
-  /** Already-committed (sink incarnation, job id) pairs seen by THIS
-    * driver — short-circuits the per-batch manifest scan for a long-running
-    * stream (re-reading the growing manifest every micro-batch would make
-    * trigger overhead grow with stream age). Correctness never depends on
-    * the cache: a fresh driver falls through to the manifest read once per
-    * unseen id, and keys embed the sink's creation UUID, so a wiped and
-    * re-created sink (new UUID) can never produce a stale hit. Keys are
-    * NUL-separated so dirs/ids containing spaces cannot collide. */
-  private val seenJobIds = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private[graft] def resetSeenCache(): Unit = seenJobIds.clear()
-
   /** Idempotent commit under an EXPLICIT job id — the streaming
-    * exactly-once primitive: a commit whose `jobId` is already in the
-    * manifest is a no-op, so a REPLAYED micro-batch (restart from the same
-    * checkpoint, speculative rerun, a mid-commit crash rolled back by
-    * [[recover]]) can never duplicate rows.
+    * exactly-once primitive and the foreachBatch entry point: a commit
+    * whose `jobId` is already in the manifest is a no-op, so a REPLAYED
+    * micro-batch (restart from the same checkpoint, speculative rerun, a
+    * mid-commit crash rolled back by [[recover]]) can never duplicate rows.
+    * The manifest check is what makes a replay a no-op even when the
+    * earlier attempt landed its manifest row but died before deleting its
+    * marker, while its lease still looks live. Every call reads every
+    * manifest file [[compactManifest]] has not yet retired.
     * Contract: the same jobId always carries the same data. Structured
     * Streaming guarantees this for a given checkpoint (batchId → offsets is
     * recorded before processing); after a checkpoint LOSS the batch ids
@@ -728,26 +681,12 @@ object LineageSink {
     * the re-planned batches carry the same content, otherwise rows routed
     * into an already-committed id are skipped. Keep the checkpoint durable;
     * it is the source of the mapping this sink dedupes on. */
-  def writeBatch(df: DataFrame, dir: String, bucketCol: String,
-                 jobId: String): DataFrame = {
-    commitBatch(df, dir, bucketCol, jobId)
-    manifest(df.sparkSession, dir)
-  }
-
-  /** [[writeBatch]] without materializing the manifest afterwards — the
-    * foreachBatch entry point: a cache-hit replay costs one small
-    * `_sink_id` read instead of a manifest listing, so trigger overhead
-    * stays O(1) in stream age. */
   def commitBatch(df: DataFrame, dir: String, bucketCol: String,
                   jobId: String): Unit = {
     val spark = df.sparkSession
-    val fs = fileSystem(spark, dir)
-    val cacheKey = s"$dir\u0000${sinkId(fs, dir)}\u0000$jobId"
-    if (seenJobIds.contains(cacheKey)) return
     recover(spark, dir)
     if (manifest(spark, dir).where(col("job_id") === jobId).isEmpty)
       stageAndCommit(df, dir, bucketCol, jobId)
-    seenJobIds.add(cacheKey)
   }
 
   // ------------------------------------------------- manifest snapshots ---
@@ -843,13 +782,10 @@ object LineageSink {
     val target = s"${manifestDir(dir)}/v-${java.util.UUID.randomUUID()}"
     readManifest(spark, covered).coalesce(1)
       .write.mode(SaveMode.ErrorIfExists).parquet(target)
-    createText(fs, new Path(s"$target/_covers"), covered.map(_.getName).mkString("\n"))
+    require(createExclusive(fs, new Path(s"$target/_covers"),
+      covered.map(_.getName).mkString("\n")), s"$target/_covers already exists")
     manifest(spark, dir)
   }
-
-  /** Buckets already committed (partition-directory string values). */
-  def completed(spark: SparkSession, dir: String): DataFrame =
-    manifest(spark, dir).select("bucket").distinct()
 
   /** Rows of `m` not superseded by a data compaction WITHIN `m` itself:
     * a [[compactData]] commit lists the job_ids whose rows (for its own
@@ -1033,7 +969,7 @@ object LineageSink {
     val mts = math.max(ts, prev.map(_._1).getOrElse(Long.MinValue))
     val mseq = math.max(seq, prev.map(_._2).getOrElse(Long.MinValue))
     val tmp = new Path(s"${manifestDir(dir)}/.wm-${java.util.UUID.randomUUID()}")
-    createText(fs, tmp, s"$mts $mseq")
+    require(createExclusive(fs, tmp, s"$mts $mseq"), s"watermark temp $tmp exists")
     // local-FS rename-to-existing overwrites — here that is the WANTED
     // last-wins semantics (values only move up, and writers serialize on
     // the maintenance lease); on HDFS delete-then-rename — a crash between
@@ -1192,22 +1128,19 @@ object LineageSink {
   /** Resume a partially-completed job: recover from any crashed attempt,
     * anti-join the manifest to drop rows of buckets already committed,
     * write + commit only the remainder. Returns the updated manifest. */
-  def resumeWrite(df: DataFrame, dir: String, bucketCol: String): DataFrame = {
-    val spark = df.sparkSession
-    recover(spark, dir)
-    stageAndCommit(remainingOf(df, dir, bucketCol), dir, bucketCol)
-    manifest(spark, dir)
-  }
+  def resumeWrite(df: DataFrame, dir: String, bucketCol: String): DataFrame =
+    writeGrouped(df, dir, bucketCol, groups = 1)
 
-  /** Rows of `df` whose bucket has no committed manifest row yet. NULL
-    * buckets commit under Hive's default partition name, so the anti-join
-    * key must map null to that name too — a plain === would re-commit
-    * null-bucket rows on every resume. On an empty sink the optimizer drops
+  /** Rows of `df` whose bucket (partition-directory string value) has no
+    * committed manifest row yet. NULL buckets commit under Hive's default
+    * partition name, so the anti-join key must map null to that name too —
+    * a plain === would re-commit null-bucket rows on every resume. On an empty sink the optimizer drops
     * the anti-join against the empty manifest. */
   private def remainingOf(df: DataFrame, dir: String,
                           bucketCol: String): DataFrame =
     df.join(
-      broadcast(completed(df.sparkSession, dir).select(col("bucket").as("__done_bucket"))),
+      broadcast(manifest(df.sparkSession, dir).select(col("bucket").as("__done_bucket"))
+        .distinct()),
       coalesce(df(bucketCol).cast(StringType),
         lit(ExternalCatalogUtils.DEFAULT_PARTITION_NAME)) === col("__done_bucket"),
       "left_anti")

@@ -89,10 +89,9 @@ class LineageConcurrencySpec extends AnyFunSuite {
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val gate = new java.util.concurrent.CountDownLatch(1)
     def committer(): Thread = new Thread(() =>
-      try { gate.await(); LineageSink.writeBatch(df, dir, "bucket", "batch-7") }
+      try { gate.await(); LineageSink.commitBatch(df, dir, "bucket", "batch-7") }
       catch { case t: Throwable => errs.add(t) })
     val a = committer(); val b = committer()
-    LineageSink.resetSeenCache()
     a.start(); b.start(); gate.countDown(); a.join(); b.join()
 
     // at most one side may fail (the marker-create loser); rows land once
@@ -102,17 +101,17 @@ class LineageConcurrencySpec extends AnyFunSuite {
     assert(data.count() === 60)
     assert(data.select("id").distinct().count() === 60, "duplicate rows")
     // a replay of the same batch id is a no-op
-    LineageSink.writeBatch(df, dir, "bucket", "batch-7")
+    LineageSink.commitBatch(df, dir, "bucket", "batch-7")
     assert(spark.read.parquet(s"$dir/data").count() === 60)
   }
 
   test("LATE duplicate-jobId loser aborts at the marker re-check (no clobber)") {
     val dir = java.nio.file.Files.createTempDirectory("lineage-late").toString
     val df = slice(0, 60, "l")
-    LineageSink.writeBatch(df, dir, "bucket", "batch-9") // winner commits fully
+    LineageSink.commitBatch(df, dir, "bucket", "batch-9") // winner commits fully
     val before = spark.read.parquet(s"$dir/data").count()
     // a late second attempt that slipped past the manifest pre-check (the
-    // race writeBatch's check cannot close): call the commit path directly.
+    // race commitBatch's check cannot close): call the commit path directly.
     // It must re-check under the marker and abort WITHOUT touching data/
     // or the winner's manifest commit file.
     LineageSink.stageAndCommit(df, dir, "bucket", "batch-9")

@@ -323,7 +323,7 @@ class LineageDataCompactionSpec extends AnyFunSuite {
   test("the compaction job id is a fixed digest of its inventory") {
     val dir = freshDir("compact-digest")
     for ((job, k) <- Seq("j1" -> 0, "j2" -> 1))
-      LineageSink.writeBatch(slice(k, buckets = 2), dir, "bucket", job)
+      LineageSink.commitBatch(slice(k, buckets = 2), dir, "bucket", job)
     assert(LineageSink.compactData(spark, dir) === 2)
     val compactIds = LineageSink.manifest(spark, dir)
       .where(col("replaces").isNotNull).select("job_id").distinct()

@@ -2,7 +2,9 @@ package graft
 
 import java.net.URI
 
-import org.apache.hadoop.fs.{BlockLocation, FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{BlockLocation, FileStatus, FSDataOutputStream, Path,
+  RawLocalFileSystem}
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,9 +12,9 @@ import graft.sources.LineageSink
 
 /** Local filesystem that records every directory LISTING (the operation
   * whose count must not grow with table age — VERDICT r2 "what's wrong" #1)
-  * and every block-location lookup (what a located listing pays per file).
-  * Registered under the `counted://` scheme; all other behavior is
-  * RawLocalFileSystem. */
+  * and every block-location lookup (what a located listing pays per file),
+  * plus every `create(path, overwrite)`. Registered under the `counted://`
+  * scheme; all other behavior is RawLocalFileSystem. */
 class CountingFileSystem extends RawLocalFileSystem {
   override def getScheme: String = "counted"
   override def getUri: URI = URI.create("counted:///")
@@ -28,11 +30,18 @@ class CountingFileSystem extends RawLocalFileSystem {
     CountingFileSystem.located.add(file.getPath.toUri.getPath)
     super.getFileBlockLocations(file, start, len)
   }
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    CountingFileSystem.created.add(f.toUri.getPath)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
 }
 
 object CountingFileSystem {
   val listed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   val located = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  val created = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
 
 /** Commit cost is O(files written by the job): across many appends, no

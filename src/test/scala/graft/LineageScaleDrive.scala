@@ -85,7 +85,7 @@ object LineageScaleDrive {
     require(snapRows == commits.toLong * rowsPerCommit,
       s"snapshot rows $snapRows != ${commits.toLong * rowsPerCommit}")
 
-    // a replayed (already-committed) id must be a cache-hit no-op
+    // a replayed (already-committed) id must be a no-op (manifest check)
     val tDup = System.nanoTime()
     LineageSink.commitBatch(slice(1), dir, "bucket", "job-000001")
     val replayMs = ms(tDup)

@@ -245,10 +245,7 @@ class StreamingSpec extends AnyFunSuite {
     // is re-planned with the same batchId and identical data; the idempotent
     // manifest check must make the replay a no-op. (A lost checkpoint with
     // NEW data arrived meanwhile is outside the foreachBatch contract —
-    // documented on Streams.lineageSink.) The driver-side seen-job cache is
-    // CLEARED so this run exercises the manifest dedup path — the mechanism
-    // a genuinely fresh driver relies on.
-    graft.sources.LineageSink.resetSeenCache()
+    // documented on Streams.lineageSink.)
     val ckpt2 = java.nio.file.Files.createTempDirectory("ckpt2").toString
     val q2 = graft.streaming.Streams.lineageSink(stream, sinkDir, "bucket", ckpt2)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
@@ -260,8 +257,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(graft.sources.LineageSink.manifest(spark, sinkDir)
       .select("job_id").distinct().count() === 1)
 
-    // wiped sink dir: the seen-cache must invalidate (manifest gone), so a
-    // rerun RE-commits instead of silently skipping cached batch ids
+    // wiped sink dir: the manifest is gone, so a rerun RE-commits instead
+    // of silently skipping batch ids committed to the old sink
     import scala.jdk.CollectionConverters._
     java.nio.file.Files.walk(java.nio.file.Paths.get(sinkDir)).iterator()
       .asScala.toSeq.reverse.foreach(java.nio.file.Files.delete)

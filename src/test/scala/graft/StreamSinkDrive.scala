@@ -9,9 +9,9 @@ import graft.streaming.Streams
   * scale (VERDICT #7's rehearsal shape): the sf0.1 events table flows
   * through the REAL micro-batch engine (file source, one file per
   * trigger → real batch boundaries) into [[Streams.lineageSink]], then the
-  * last checkpoint commit marker is deleted, the driver-side seen cache is
-  * cleared (a fresh driver), and a restarted query replays the final
-  * batch — the sink's idempotent jobId commit must land it exactly once.
+  * last checkpoint commit marker is deleted and a restarted query replays
+  * the final batch — the sink's idempotent jobId commit must land it
+  * exactly once.
   *
   * Checks: streamed snapshot == the batch read (row count, distinct ids,
   * per-bucket event_id sums), duplicate-free after the forced replay.
@@ -70,12 +70,11 @@ object StreamSinkDrive {
     require(sums1 == truthSums, "per-bucket streamed sums != batch truth")
 
     // forced replay: drop the last commit marker (and its local-FS crc
-    // sibling), clear the seen cache, restart from the same checkpoint
+    // sibling), restart from the same checkpoint
     val last = new java.io.File(s"$ckpt/commits/${batches.max}")
     val crc = new java.io.File(last.getParentFile, s".${last.getName}.crc")
     if (crc.exists()) require(crc.delete())
     require(last.delete())
-    LineageSink.resetSeenCache()
     val tR = System.nanoTime()
     val q2 = start(); q2.awaitTermination()
     val replayMs = (System.nanoTime() - tR) / 1000000

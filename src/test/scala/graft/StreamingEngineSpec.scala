@@ -147,10 +147,9 @@ class StreamingEngineSpec extends AnyFunSuite with TimeLimits {
 
       // FORCE a replay of the last committed micro-batch: drop its commit
       // marker from the checkpoint (exactly the state a crash between
-      // foreachBatch and checkpoint-commit leaves), clear the driver-side
-      // seen cache (a fresh driver), restart from the same checkpoint —
-      // the batch re-fires and the sink's idempotent jobId commit must
-      // swallow it
+      // foreachBatch and checkpoint-commit leaves), restart from the same
+      // checkpoint — the batch re-fires and the sink's idempotent jobId
+      // commit (its manifest check) must swallow it
       val commits = new java.io.File(s"$checkpoint/commits")
         .listFiles().filter(_.getName.forall(_.isDigit))
       assert(commits.nonEmpty)
@@ -162,7 +161,6 @@ class StreamingEngineSpec extends AnyFunSuite with TimeLimits {
       val crc = new java.io.File(last.getParentFile, s".${last.getName}.crc")
       if (crc.exists()) assert(crc.delete())
       assert(last.delete())
-      LineageSink.resetSeenCache()
       val q2 = start()
       try q2.processAllAvailable() finally q2.stop()
 
