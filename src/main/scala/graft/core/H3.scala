@@ -821,29 +821,21 @@ object H3 {
     }.distinct.filterNot(_ == h)
   }
 
-  /** All cells within k hops (grid disk, filled), including the origin. */
+  /** All cells within k hops (grid disk, filled), including the origin, in
+    * BFS order. */
   def gridDisk(h: Long, k: Int): Seq[Long] = {
     require(k >= 0, "k must be >= 0")
-    var frontier = Set(h)
-    val seen = scala.collection.mutable.LinkedHashSet(h)
-    var d = 0
-    while (d < k) {
-      frontier = frontier.flatMap(neighbors).diff(seen.toSet)
-      seen ++= frontier
-      d += 1
-    }
-    seen.toSeq
+    gridDiskDistances(h, k).map(_._1)
   }
 
-  /** Hollow ring at exactly distance k. */
-  def gridRing(h: Long, k: Int): Seq[Long] =
-    if (k == 0) Seq(h)
-    else {
-      val inner = gridDisk(h, k - 1).toSet
-      gridDisk(h, k).filterNot(inner)
-    }
+  /** Hollow ring at exactly distance k, in BFS order. */
+  def gridRing(h: Long, k: Int): Seq[Long] = {
+    require(k >= 0, "k must be >= 0")
+    gridDiskDistances(h, k).collect { case (c, d) if d == k => c }
+  }
 
-  /** Grid distances from the origin out to max k: (cell, distance). */
+  /** Grid distances from the origin out to max k: (cell, distance), in BFS
+    * order — the one BFS behind gridDisk and gridRing. */
   def gridDiskDistances(h: Long, k: Int): Seq[(Long, Int)] = {
     var frontier = Set(h)
     val seen = scala.collection.mutable.LinkedHashMap(h -> 0)

@@ -1,16 +1,61 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.core.{S2, Slippy, Geo}
 
-/** Catalyst-typed kernels: same static-call pattern as [[GeoOps]] but
-  * returning Catalyst container types (ArrayData / UTF8String) so generated
-  * code can call them directly without row conversion. */
+/** Catalyst-typed kernels: the static methods [[KernelCall]] rows call when
+  * a value crosses the Catalyst boundary — they take and return Catalyst
+  * Java types (UTF8String / ArrayData / InternalRow) so generated code calls
+  * them directly without row conversion. The one-line adapters wrap the
+  * Scala-typed kernels of [[ImageOps]], [[MediaOps]], [[RiffOps]] and
+  * [[GeoMetrics]] that other code calls too. */
 object CatalystHelpers {
 
-  def dump(wkb: Array[Byte]): ArrayData =
-    new GenericArrayData(GeoOps.dump(wkb).asInstanceOf[Array[Any]])
+  // ---- trajectories ([lat, lng] paths) ----
+  private def path(d: ArrayData): Array[(Double, Double)] =
+    Array.tabulate(d.numElements()) { i => val p = d.getArray(i); (p.getDouble(0), p.getDouble(1)) }
+  /** Exact-DP DTW; the reference's `dtw_distance` is the fastdtw
+    * approximation, [[fastDtwLatLng]] (documented deviation). */
+  def dtwLatLng(a: ArrayData, b: ArrayData): Double = GeoMetrics.dtw(path(a), path(b))
+  def fastDtwLatLng(a: ArrayData, b: ArrayData, radius: Int): Double =
+    GeoMetrics.fastDtw(path(a), path(b), radius)
+
+  // ---- images ----
+  def imgReencode(bytes: Array[Byte], fmt: UTF8String): Array[Byte] =
+    ImageOps.reencode(bytes, fmt.toString)
+  def imgResize(bytes: Array[Byte], w: Int, h: Int, fmt: UTF8String): Array[Byte] =
+    ImageOps.resize(bytes, w, h, fmt.toString)
+
+  // ---- audio / video ----
+  def audioRmsWindows(pcm: Array[Byte], window: Int): ArrayData =
+    ArrayData.toArrayData(MediaOps.audioRmsWindows(pcm, window))
+  def videoFrameSample(container: Array[Byte], stride: Int): ArrayData =
+    ArrayData.toArrayData(MediaOps.videoFrameSample(container, stride))
+  def wavDecode(b: Array[Byte]): InternalRow = {
+    val w = RiffOps.wavDecode(b)
+    InternalRow(w.sampleRate, w.channels, w.pcm)
+  }
+  def wavPcm(b: Array[Byte]): Array[Byte] = RiffOps.wavDecode(b).pcm
+  def wavSampleRate(b: Array[Byte]): Int = RiffOps.wavDecode(b).sampleRate
+  def wavChannels(b: Array[Byte]): Int = RiffOps.wavDecode(b).channels
+  def aviHeader(b: Array[Byte]): InternalRow = {
+    val (w, h, n) = RiffOps.aviHeader(b)
+    InternalRow(w, h, n)
+  }
+  def aviFrames(b: Array[Byte]): ArrayData = ArrayData.toArrayData(RiffOps.aviFrames(b))
+  def aviMjpegEncode(frames: ArrayData, w: Int, h: Int, fps: Int): Array[Byte] = {
+    val fs = Array.tabulate(frames.numElements())(frames.getBinary)
+    // null propagation guards only the top-level array — a null ELEMENT
+    // must fail with a clear message, not an NPE inside the chunk writer
+    val bad = fs.indexWhere(_ == null)
+    if (bad >= 0) throw new IllegalArgumentException(
+      s"avi_mjpeg_encode: null frame at index $bad")
+    RiffOps.aviMjpegEncode(fs, w, h, fps)
+  }
+  def frameSynth(id: Long, f: Int, w: Int, h: Int, fmt: UTF8String): Array[Byte] =
+    RiffOps.frameSynth(id, f, w, h, fmt.toString)
 
   // ---- S2 ----
   def s2Cell(lng: Double, lat: Double, level: Int): Long =
@@ -67,8 +112,6 @@ object CatalystHelpers {
     org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
       keyed.sortBy(t => (t._1, t._2, t._3)).map(_._3))
   }
-
-  def s2Level(id: Long): Int = S2.level(id)
 
   /** GeoVex dense-grid fill: (2k+2)×(2k+2) row-major grid with cell value v
     * at [k+i, k−j] for each {ij: [i, j], v} entry, zeros elsewhere.

@@ -2,11 +2,14 @@ package graft.functions
 
 import org.locationtech.jts.geom.Geometry
 import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.core.Geo
 
-/** Static executor-side kernels behind the Catalyst expressions. Codegen
-  * emits direct static calls into this object, so the hot path stays inside
-  * whole-stage codegen with no closure/serialization overhead.
+/** Static executor-side kernels behind the geometry SQL functions
+  * ([[KernelCall]] rows of [[Gf]]). Codegen emits direct static calls into
+  * this object, so the hot path stays inside whole-stage codegen with no
+  * closure/serialization overhead.
   *
   * WKB parsing dominates predicate cost when one side repeats (the region /
   * broadcast side of the cell join), so prepared geometries are cached in a
@@ -99,9 +102,14 @@ object GeoOps {
       if (isWkbPoint(b)) pointGeom(b) else Geo.fromWkb(b).getCentroid)
 
   // ---- constructors / converters ----
-  def geomFromText(wkt: String): Array[Byte] = Geo.wktToWkb(wkt)
-  def asText(wkb: Array[Byte]): String = Geo.toWkt(Geo.fromWkb(wkb))
-  def asTextShapely(wkb: Array[Byte]): String = Geo.toWktShapely(Geo.fromWkb(wkb))
+  def geomFromText(wkt: UTF8String): Array[Byte] = Geo.wktToWkb(wkt.toString)
+  def asText(wkb: Array[Byte]): UTF8String =
+    UTF8String.fromString(Geo.toWkt(Geo.fromWkb(wkb)))
+  /** WKT in shapely `wkt.dumps` byte layout (fixed 16-decimal coordinates),
+    * so sha2(st_astext_shapely(g), 256) interchanges with the reference's
+    * get_geometry_hash (srai/geometry.py:133-138). */
+  def asTextShapely(wkb: Array[Byte]): UTF8String =
+    UTF8String.fromString(Geo.toWktShapely(Geo.fromWkb(wkb)))
   def makePoint(lng: Double, lat: Double): Array[Byte] = Geo.toWkb(Geo.point(lng, lat))
 
   /** Axis-aligned box polygon — the footprint hot path (no WKT round-trip). */
@@ -142,11 +150,11 @@ object GeoOps {
 
   def length(a: Array[Byte]): Double = Geo.fromWkb(a).getLength
 
-  def dump(a: Array[Byte]): Array[Array[Byte]] =
-    Geo.dump(Geo.fromWkb(a)).map(Geo.toWkb).toArray
+  def dump(a: Array[Byte]): ArrayData =
+    new GenericArrayData(Geo.dump(Geo.fromWkb(a)).map(Geo.toWkb).toArray[Any])
 
-  def envelope(a: Array[Byte]): Array[Double] = {
-    val e = Geo.fromWkb(a).getEnvelopeInternal
-    Array(e.getMinX, e.getMinY, e.getMaxX, e.getMaxY)
-  }
+  /** Envelope corners for the patch lexsort (P12: orderBy(desc(st_ymax),
+    * asc(st_xmin)) — reference s2vec/s2_utils.py:60-72). */
+  def xmin(a: Array[Byte]): Double = Geo.fromWkb(a).getEnvelopeInternal.getMinX
+  def ymax(a: Array[Byte]): Double = Geo.fromWkb(a).getEnvelopeInternal.getMaxY
 }

@@ -1,11 +1,22 @@
 package graft.functions
 
+import org.apache.spark.SPARK_DOC_ROOT
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.{AnalysisException, Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Function registration + Column-level API.
+  *
+  * `defs` is the table of every graft SQL function: its name, parameter
+  * count and builder. Most rows are a [[KernelCall]] — one static kernel
+  * call, named by owner object, method and result type; the rest build a
+  * hand-written expression (typed aggregates, literal-validating builders,
+  * analysis-time type checks, implicit input casts, nullable primitive
+  * results). A call with the wrong argument count fails analysis with the
+  * function name and the expected count.
   *
   * Functions are injected via [[GraftExtensions]]
   * (`spark.sql.extensions=graft.GraftExtensions`) or imperatively with
@@ -14,125 +25,158 @@ import org.apache.spark.sql.functions._
   */
 object Gf {
 
-  private val defs: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "st_intersects" -> (e => StIntersects(e(0), e(1))),
-    "st_contains" -> (e => StContains(e(0), e(1))),
-    "st_within" -> (e => StWithin(e(0), e(1))),
-    "st_touches" -> (e => StTouches(e(0), e(1))),
-    "st_contains_centroid" -> (e => StContainsCentroid(e(0), e(1))),
-    "st_intersection" -> (e => StIntersection(e(0), e(1))),
-    "st_geomfromtext" -> (e => StGeomFromText(e(0))),
-    "st_astext" -> (e => StAsText(e(0))),
-    "st_astext_shapely" -> (e => StAsTextShapely(e(0))),
-    "st_point" -> (e => StPoint(e(0), e(1))),
-    "st_box" -> (e => StBox(e(0), e(1), e(2), e(3))),
-    "st_area" -> (e => StArea(e(0))),
-    "st_remove_interiors" -> (e => StRemoveInteriors(e(0))),
-    "st_buffer_meters" -> (e => StBufferMeters(e(0), e(1))),
-    "st_centroid_x" -> (e => StCentroidX(e(0))),
-    "st_xmin" -> (e => StXMin(e(0))),
-    "st_ymax" -> (e => StYMax(e(0))),
-    "st_centroid_y" -> (e => StCentroidY(e(0))),
-    "st_dump" -> (e => StDump(e(0))),
-    "st_start_point" -> (e => StStartPoint(e(0))),
-    "st_end_point" -> (e => StEndPoint(e(0))),
-    "st_length" -> (e => StLength(e(0))),
-    "s2_cell" -> (e => S2CellId(e(0), e(1), e(2))),
-    "s2_token" -> (e => S2Token(e(0))),
-    "s2_from_token" -> (e => S2FromToken(e(0))),
-    "s2_children" -> (e => S2Children(e(0), e(1))),
-    "s2_sorted_children" -> (e => S2SortedChildren(e(0), e(1))),
-    "hex_dense_grid" -> (e => HexDenseGrid(e(0), e(1))),
-    "h3_seq_path" -> (e => H3SeqPath(e(0))),
-    "haversine_mean_path" -> (e => HaversineMeanPath(e(0), e(1))),
-    "seq_accuracy" -> (e => SeqAccuracy(e(0), e(1))),
-    "s2_cover" -> (e => S2Cover(e(0), e(1))),
-    "s2_cover_expanded" -> (e => S2CoverExpanded(e(0), e(1), e(2))),
-    "s2_boundary" -> (e => S2Boundary(e(0))),
-    "s2_parent" -> (e => S2Parent(e(0), e(1))),
-    "slippy_cover" -> (e => SlippyCover(e(0), e(1))),
-    "slippy_boundary" -> (e => SlippyBoundary(e(0), e(1), e(2))),
-    "img_psnr" -> (e => ImgPsnr(e(0), e(1))),
-    "img_phash" -> (e => ImgPhash(e(0))),
-    "img_width" -> (e => ImgWidth(e(0))),
-    "img_height" -> (e => ImgHeight(e(0))),
-    "img_reencode" -> (e => ImgReencode(e(0), e(1))),
-    "img_synth" -> (e => ImgSynth(e(0), e(1))),
-    "img_synth_phash" -> (e => ImgSynthPhash(e(0), e(1))),
-    "hamming64" -> (e => Hamming64(e(0), e(1))),
-    "img_resize" -> (e => ImgResize(e(0), e(1), e(2), e(3))),
-    "h3_cell" -> (e => H3CellExpr(e(0), e(1), e(2))),
-    "h3_str" -> (e => H3Str(e(0))),
-    "h3_from_str" -> (e => H3FromStr(e(0))),
-    "h3_cover" -> (e => H3Cover(e(0), e(1), e(2))),
-    "h3_boundary" -> (e => H3BoundaryExpr(e(0))),
-    "h3_grid_disk" -> (e => H3GridDisk(e(0), e(1))),
-    "h3_grid_ring" -> (e => H3GridRing(e(0), e(1))),
-    "h3_grid_disk_distances" -> (e => H3GridDiskDistances(e(0), e(1))),
-    "h3_parent" -> (e => H3ParentExpr(e(0), e(1))),
-    "h3_children" -> (e => H3ChildrenExpr(e(0), e(1))),
-    "h3_local_ij" -> (e => H3LocalIjExpr(e(0), e(1))),
-    "h3_local_ij_try" -> (e => H3LocalIjTryExpr(e(0), e(1))),
-    "vec_cosine" -> (e => VecCosine(e(0), e(1))),
-    "simhash64" -> (e => SimHash64(e(0))),
-    "word_shingles" -> (e => WordShingles(e(0), e(1))),
-    "minhash_sig" -> (e => MinhashSig(e(0), e(1))),
-    "hyperplane_sig" -> (e => HyperplaneSig(e(0), e(1), e(2))),
-    "h3_latlng" -> (e => H3LatLng(e(0))),
-    "dtw_latlng" -> (e => DtwLatLng(e(0), e(1))),
-    "fastdtw_latlng" -> (e => FastDtwLatLng(e(0), e(1), e(2))),
-    "synth_pcm16" -> (e => SynthPcm16(e(0), e(1))),
-    "audio_rms_windows" -> (e => AudioRmsWindows(e(0), e(1))),
-    "audio_zero_crossings" -> (e => AudioZeroCrossings(e(0))),
-    "synth_video" -> (e => SynthVideo(e(0), e(1), e(2), e(3))),
-    "video_frame_sample" -> (e => VideoFrameSample(e(0), e(1))),
-    "bytes_mean" -> (e => BytesMean(e(0))),
-    "wav_encode" -> (e => WavEncode(e(0), e(1), e(2))),
-    "wav_decode" -> (e => WavDecode(e(0))),
-    "avi_header" -> (e => AviHeader(e(0))),
-    "wav_pcm" -> (e => WavPcm(e(0))),
-    "wav_sample_rate" -> (e => WavSampleRate(e(0))),
-    "wav_channels" -> (e => WavChannels(e(0))),
-    "avi_mjpeg_encode" -> (e => AviMjpegEncode(e(0), e(1), e(2), e(3))),
-    "avi_frames" -> (e => AviFrames(e(0))),
-    "avi_width" -> (e => AviWidth(e(0))),
-    "avi_height" -> (e => AviHeight(e(0))),
-    "avi_frame_count" -> (e => AviFrameCount(e(0))),
-    "frame_synth" -> (e => FrameSynth(e(0), e(1), e(2), e(3), e(4))),
-    "warn_large_bucket" -> (e => {
+  /** One SQL function: name, parameter count and expression builder. */
+  private[graft] final case class Def(name: String, arity: Int,
+                                      build: Seq[Expression] => Expression) {
+    def builder(args: Seq[Expression]): Expression = {
+      if (args.length != arity) throw new AnalysisException(
+        "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+        Map("functionName" -> s"`$name`", "expectedNum" -> arity.toString,
+          "actualNum" -> args.length.toString, "docroot" -> SPARK_DOC_ROOT))
+      build(args)
+    }
+  }
+
+  private def kernel(name: String, owner: AnyRef, method: String, dataType: DataType,
+                     arity: Int, returnNullable: Boolean = false): Def =
+    Def(name, arity, KernelCall(name, owner.getClass, method, dataType, _, returnNullable))
+
+  private val G = GeoOps
+  private val C = CatalystHelpers
+  private val I = ImageOps
+  private val V = VecTextOps
+  private val M = MediaOps
+  private val R = RiffOps
+  private val longs = ArrayType(LongType, containsNull = false)
+  private val ints = ArrayType(IntegerType, containsNull = false)
+  private val doubles = ArrayType(DoubleType, containsNull = false)
+  private val binaries = ArrayType(BinaryType, containsNull = false)
+  private def struct(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) })
+
+  private[graft] val defs: Seq[Def] = Seq(
+    kernel("st_intersects", G, "intersects", BooleanType, 2),
+    kernel("st_contains", G, "contains", BooleanType, 2),
+    kernel("st_within", G, "within", BooleanType, 2),
+    kernel("st_touches", G, "touches", BooleanType, 2),
+    kernel("st_contains_centroid", G, "containsCentroid", BooleanType, 2),
+    kernel("st_intersection", G, "intersection", BinaryType, 2),
+    kernel("st_geomfromtext", G, "geomFromText", BinaryType, 1),
+    kernel("st_astext", G, "asText", StringType, 1),
+    kernel("st_astext_shapely", G, "asTextShapely", StringType, 1),
+    kernel("st_point", G, "makePoint", BinaryType, 2),
+    kernel("st_box", G, "makeBox", BinaryType, 4),
+    kernel("st_area", G, "area", DoubleType, 1),
+    kernel("st_remove_interiors", G, "removeInteriors", BinaryType, 1),
+    kernel("st_buffer_meters", G, "bufferMeters", BinaryType, 2),
+    kernel("st_centroid_x", G, "centroidX", DoubleType, 1),
+    kernel("st_xmin", G, "xmin", DoubleType, 1),
+    kernel("st_ymax", G, "ymax", DoubleType, 1),
+    kernel("st_centroid_y", G, "centroidY", DoubleType, 1),
+    kernel("st_dump", G, "dump", binaries, 1),
+    kernel("st_start_point", G, "startPoint", BinaryType, 1),
+    kernel("st_end_point", G, "endPoint", BinaryType, 1),
+    kernel("st_length", G, "length", DoubleType, 1),
+    kernel("s2_cell", C, "s2Cell", LongType, 3),
+    kernel("s2_token", C, "s2Token", StringType, 1),
+    kernel("s2_from_token", C, "s2FromToken", LongType, 1),
+    kernel("s2_children", C, "s2Children", longs, 2),
+    kernel("s2_sorted_children", C, "s2SortedChildren", longs, 2),
+    kernel("hex_dense_grid", C, "hexDenseGrid", ArrayType(doubles, containsNull = false), 2),
+    kernel("h3_seq_path", C, "h3SeqPath", ArrayType(doubles, containsNull = true), 1),
+    Def("haversine_mean_path", 2, e => HaversineMeanPath(e(0), e(1))),
+    Def("seq_accuracy", 2, e => SeqAccuracy(e(0), e(1))),
+    kernel("s2_cover", C, "s2Cover", longs, 2),
+    kernel("s2_cover_expanded", C, "s2CoverExpanded", longs, 3),
+    kernel("s2_boundary", C, "s2Boundary", BinaryType, 1),
+    kernel("s2_parent", C, "s2Parent", LongType, 2),
+    kernel("slippy_cover", C, "slippyCover",
+      ArrayType(struct("x" -> IntegerType, "y" -> IntegerType), containsNull = false), 2),
+    kernel("slippy_boundary", C, "slippyBoundary", BinaryType, 3),
+    kernel("img_psnr", I, "psnr", DoubleType, 2),
+    kernel("img_phash", I, "phash", LongType, 1),
+    kernel("img_width", I, "width", IntegerType, 1),
+    kernel("img_height", I, "height", IntegerType, 1),
+    kernel("img_reencode", C, "imgReencode", BinaryType, 2),
+    Def("img_synth", 2, e => ImgSynth(e(0), e(1))),
+    Def("img_synth_phash", 2, e => ImgSynthPhash(e(0), e(1))),
+    kernel("hamming64", I, "hamming", IntegerType, 2),
+    kernel("img_resize", C, "imgResize", BinaryType, 4),
+    kernel("h3_cell", C, "h3Cell", LongType, 3),
+    kernel("h3_str", C, "h3Str", StringType, 1),
+    kernel("h3_from_str", C, "h3FromStr", LongType, 1),
+    kernel("h3_cover", C, "h3Cover", longs, 3),
+    kernel("h3_boundary", C, "h3Boundary", BinaryType, 1),
+    kernel("h3_grid_disk", C, "h3GridDisk", longs, 2),
+    kernel("h3_grid_ring", C, "h3GridRing", longs, 2),
+    kernel("h3_grid_disk_distances", C, "h3GridDiskDistances",
+      ArrayType(struct("cell" -> LongType, "distance" -> IntegerType), containsNull = false), 2),
+    kernel("h3_parent", C, "h3Parent", LongType, 2),
+    kernel("h3_children", C, "h3Children", longs, 2),
+    kernel("h3_local_ij", C, "h3LocalIj", ints, 2),
+    // null on pentagon distortion: nullable, so downstream IsNotNull
+    // guards are kept and the affected anchors are dropped
+    kernel("h3_local_ij_try", C, "h3LocalIjTry", ints, 2, returnNullable = true),
+    kernel("vec_cosine", V, "cosineFF", DoubleType, 2),
+    kernel("simhash64", V, "simhash64", LongType, 1),
+    kernel("word_shingles", V, "wordShingles", ArrayType(StringType, containsNull = false), 2),
+    kernel("minhash_sig", V, "minhashSig", longs, 2),
+    kernel("hyperplane_sig", V, "hyperplaneSig", LongType, 3),
+    kernel("h3_latlng", C, "h3LatLng", doubles, 1),
+    kernel("dtw_latlng", C, "dtwLatLng", DoubleType, 2),
+    kernel("fastdtw_latlng", C, "fastDtwLatLng", DoubleType, 3),
+    kernel("synth_pcm16", M, "synthPcm16", BinaryType, 2),
+    kernel("audio_rms_windows", C, "audioRmsWindows", doubles, 2),
+    kernel("audio_zero_crossings", M, "audioZeroCrossings", LongType, 1),
+    kernel("synth_video", M, "synthVideo", BinaryType, 4),
+    kernel("video_frame_sample", C, "videoFrameSample", binaries, 2),
+    kernel("bytes_mean", M, "bytesMean", DoubleType, 1),
+    kernel("wav_encode", R, "wavEncode", BinaryType, 3),
+    kernel("wav_decode", C, "wavDecode", struct("sample_rate" -> IntegerType,
+      "channels" -> IntegerType, "pcm" -> BinaryType), 1),
+    kernel("avi_header", C, "aviHeader",
+      struct("w" -> IntegerType, "h" -> IntegerType, "n_frames" -> IntegerType), 1),
+    kernel("wav_pcm", C, "wavPcm", BinaryType, 1),
+    kernel("wav_sample_rate", C, "wavSampleRate", IntegerType, 1),
+    kernel("wav_channels", C, "wavChannels", IntegerType, 1),
+    kernel("avi_mjpeg_encode", C, "aviMjpegEncode", BinaryType, 4),
+    kernel("avi_frames", C, "aviFrames", binaries, 1),
+    kernel("avi_width", R, "aviWidth", IntegerType, 1),
+    kernel("avi_height", R, "aviHeight", IntegerType, 1),
+    kernel("avi_frame_count", R, "aviFrameCount", IntegerType, 1),
+    kernel("frame_synth", C, "frameSynth", BinaryType, 5),
+    Def("warn_large_bucket", 4, e => {
       // threshold/tag must be non-null literals — validated here with a
       // readable error instead of an analysis-time NPE or "cannot
       // evaluate" from an eager eval() on a column reference
-      require(e.length == 4 && e(2).foldable && e(3).foldable,
+      require(e(2).foldable && e(3).foldable,
         "warn_large_bucket(value, bucket_count, threshold, tag): threshold and tag must be literals")
       val thr = e(2).eval(); val tag = e(3).eval()
       require(thr != null && tag != null,
         "warn_large_bucket: threshold and tag must be non-null")
       WarnLargeBucket(e(0), e(1), thr.asInstanceOf[Number].longValue(), tag.toString)
     }),
-    "ivf_cells" -> (e => {
+    Def("ivf_cells", 4, e => {
       // centroids/dim/nprobe must be non-null literals: the matrix is a
       // plan-time constant (trained on a sample) baked into the kernel, and
       // the trained dim rides along so the per-row check is EXACT (a
       // divisibility check silently mis-assigned dim-compatible vectors —
       // ADVICE round 5)
-      require(e.length == 4 && e(1).foldable && e(2).foldable && e(3).foldable,
+      require(e(1).foldable && e(2).foldable && e(3).foldable,
         "ivf_cells(vec, centroids, dim, nprobe): centroids, dim and nprobe must be literals")
       val cents = e(1).eval(); val d = e(2).eval(); val np = e(3).eval()
       require(cents != null && d != null && np != null,
         "ivf_cells: centroids, dim and nprobe must be non-null")
-      IvfCells(e(0),
-        cents.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray(),
-        d.asInstanceOf[Number].intValue(),
-        np.asInstanceOf[Number].intValue())
+      IvfCells(e(0), cents.asInstanceOf[ArrayData].toDoubleArray(),
+        d.asInstanceOf[Number].intValue(), np.asInstanceOf[Number].intValue())
     }),
-    "topk_agg" -> (e => TopKAgg(e(0), e(1), e(2))),
-    "st_union_agg" -> (e => StUnionAgg(e(0))))
+    Def("topk_agg", 3, e => TopKAgg(e(0), e(1), e(2))),
+    Def("st_union_agg", 1, e => StUnionAgg(e(0))))
 
   /** SparkSessionExtensions hook (used by graft.GraftExtensions). */
-  def inject(ext: SparkSessionExtensions): Unit = defs.foreach { case (name, builder) =>
-    ext.injectFunction((FunctionIdentifier(name),
-      new ExpressionInfo("graft.functions", name), builder))
+  def inject(ext: SparkSessionExtensions): Unit = defs.foreach { d =>
+    ext.injectFunction((FunctionIdentifier(d.name),
+      new ExpressionInfo("graft.functions", d.name), d.builder))
   }
 
   /** Imperative registration for an existing session (idempotent): only
@@ -140,9 +184,9 @@ object Gf {
     * already populated — and every repeated call — is left untouched. */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    defs.foreach { case (name, builder) =>
-      if (!registry.functionExists(FunctionIdentifier(name)))
-        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
+    defs.foreach { d =>
+      if (!registry.functionExists(FunctionIdentifier(d.name)))
+        registry.createOrReplaceTempFunction(d.name, d.builder, "scala_udf")
     }
   }
 

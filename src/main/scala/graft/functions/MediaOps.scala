@@ -1,10 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
-
 /** Audio/video columns as opaque binary + typed metadata (SURVEY training-
   * data ops; the brief's multimodal contract). Audio is PCM16 mono
   * little-endian — decoding is pure byte math, so the feature extractors are
@@ -120,78 +115,4 @@ object MediaOps {
     while (i < b.length) { s += (b(i) & 0xff); i += 1 }
     if (b.length == 0) 0.0 else s.toDouble / b.length
   }
-}
-
-case class SynthPcm16(left: Expression, right: Expression)
-    extends BinaryExpression {
-  private val M = "graft.functions.MediaOps"
-  override def prettyName: String = "synth_pcm16"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(id: Any, n: Any): Any =
-    MediaOps.synthPcm16(id.asInstanceOf[Long], n.asInstanceOf[Int])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"$M.synthPcm16($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
-}
-
-case class AudioRmsWindows(left: Expression, right: Expression)
-    extends BinaryExpression with codegen.CodegenFallback {
-  override def prettyName: String = "audio_rms_windows"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullSafeEval(pcm: Any, w: Any): Any =
-    ArrayData.toArrayData(MediaOps.audioRmsWindows(
-      pcm.asInstanceOf[Array[Byte]], w.asInstanceOf[Int]))
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
-}
-
-case class AudioZeroCrossings(child: Expression) extends UnaryExpression {
-  private val M = "graft.functions.MediaOps"
-  override def prettyName: String = "audio_zero_crossings"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = LongType
-  override def nullSafeEval(pcm: Any): Any =
-    MediaOps.audioZeroCrossings(pcm.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"$M.audioZeroCrossings($v)")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
-}
-
-case class SynthVideo(first: Expression, second: Expression, third: Expression,
-                      fourth: Expression) extends QuaternaryExpression {
-  private val M = "graft.functions.MediaOps"
-  override def prettyName: String = "synth_video"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(id: Any, w: Any, h: Any, n: Any): Any =
-    MediaOps.synthVideo(id.asInstanceOf[Long], w.asInstanceOf[Int],
-      h.asInstanceOf[Int], n.asInstanceOf[Int])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c, d) => s"$M.synthVideo($a, $b, $c, $d)")
-  override protected def withNewChildrenInternal(a: Expression, b: Expression,
-      c: Expression, d: Expression) = copy(a, b, c, d)
-}
-
-case class VideoFrameSample(left: Expression, right: Expression)
-    extends BinaryExpression with codegen.CodegenFallback {
-  override def prettyName: String = "video_frame_sample"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-  override def nullSafeEval(bin: Any, s: Any): Any =
-    ArrayData.toArrayData(MediaOps.videoFrameSample(
-      bin.asInstanceOf[Array[Byte]], s.asInstanceOf[Int]))
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
-}
-
-case class BytesMean(child: Expression) extends UnaryExpression {
-  private val M = "graft.functions.MediaOps"
-  override def prettyName: String = "bytes_mean"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(b: Any): Any =
-    MediaOps.bytesMean(b.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"$M.bytesMean($v)")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
 }

@@ -3,11 +3,6 @@ package graft.functions
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
-
 /** Real public-spec A/V container formats, parsed with pure header math —
   * no codec jars. Closes the round-3 "done-with-caveat" multimodal row:
   * audio now arrives as RIFF/WAVE (PCM16) instead of headerless PCM, and
@@ -270,170 +265,4 @@ object RiffOps {
     }
     ImageOps.encode(px, w, h, fmt)
   }
-}
-
-case class WavEncode(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-  private val M = "graft.functions.RiffOps"
-  override def prettyName: String = "wav_encode"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(pcm: Any, rate: Any, ch: Any): Any =
-    RiffOps.wavEncode(pcm.asInstanceOf[Array[Byte]], rate.asInstanceOf[Int],
-      ch.asInstanceOf[Int])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c) => s"$M.wavEncode($a, $b, $c)")
-  override protected def withNewChildrenInternal(a: Expression, b: Expression,
-      c: Expression) = copy(a, b, c)
-}
-
-case class WavPcm(child: Expression) extends UnaryExpression {
-  private val M = "graft.functions.RiffOps"
-  override def prettyName: String = "wav_pcm"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(b: Any): Any =
-    RiffOps.wavDecode(b.asInstanceOf[Array[Byte]]).pcm
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"$M.wavDecode($v).pcm()")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
-}
-
-case class WavSampleRate(child: Expression) extends UnaryExpression {
-  private val M = "graft.functions.RiffOps"
-  override def prettyName: String = "wav_sample_rate"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(b: Any): Any =
-    RiffOps.wavDecode(b.asInstanceOf[Array[Byte]]).sampleRate
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"$M.wavDecode($v).sampleRate()")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
-}
-
-case class WavChannels(child: Expression) extends UnaryExpression {
-  private val M = "graft.functions.RiffOps"
-  override def prettyName: String = "wav_channels"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(b: Any): Any =
-    RiffOps.wavDecode(b.asInstanceOf[Array[Byte]]).channels
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"$M.wavDecode($v).channels()")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
-}
-
-case class WavDecode(child: Expression) extends UnaryExpression
-    with codegen.CodegenFallback {
-  override def prettyName: String = "wav_decode"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StructType(Seq(
-    StructField("sample_rate", IntegerType, nullable = false),
-    StructField("channels", IntegerType, nullable = false),
-    StructField("pcm", BinaryType, nullable = false)))
-  override def nullSafeEval(b: Any): Any = {
-    val w = RiffOps.wavDecode(b.asInstanceOf[Array[Byte]])
-    org.apache.spark.sql.catalyst.InternalRow(w.sampleRate, w.channels, w.pcm)
-  }
-  override protected def withNewChildInternal(c: Expression) = copy(c)
-}
-
-case class AviHeader(child: Expression) extends UnaryExpression
-    with codegen.CodegenFallback {
-  override def prettyName: String = "avi_header"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StructType(Seq(
-    StructField("w", IntegerType, nullable = false),
-    StructField("h", IntegerType, nullable = false),
-    StructField("n_frames", IntegerType, nullable = false)))
-  override def nullSafeEval(b: Any): Any = {
-    val (w, h, n) = RiffOps.aviHeader(b.asInstanceOf[Array[Byte]])
-    org.apache.spark.sql.catalyst.InternalRow(w, h, n)
-  }
-  override protected def withNewChildInternal(c: Expression) = copy(c)
-}
-
-case class AviMjpegEncode(first: Expression, second: Expression,
-    third: Expression, fourth: Expression) extends QuaternaryExpression
-    with codegen.CodegenFallback {
-  override def prettyName: String = "avi_mjpeg_encode"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(frames: Any, w: Any, h: Any, fps: Any): Any = {
-    val arr = frames.asInstanceOf[ArrayData]
-    val fs = Array.tabulate(arr.numElements())(arr.getBinary)
-    // nullIntolerant guards only the top-level array — a null ELEMENT must
-    // fail with a clear message, not an NPE inside the chunk writer
-    val bad = fs.indexWhere(_ == null)
-    if (bad >= 0) throw new IllegalArgumentException(
-      s"avi_mjpeg_encode: null frame at index $bad")
-    RiffOps.aviMjpegEncode(fs, w.asInstanceOf[Int], h.asInstanceOf[Int],
-      fps.asInstanceOf[Int])
-  }
-  override protected def withNewChildrenInternal(a: Expression, b: Expression,
-      c: Expression, d: Expression) = copy(a, b, c, d)
-}
-
-case class AviFrames(child: Expression) extends UnaryExpression
-    with codegen.CodegenFallback {
-  override def prettyName: String = "avi_frames"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-  override def nullSafeEval(b: Any): Any =
-    ArrayData.toArrayData(RiffOps.aviFrames(b.asInstanceOf[Array[Byte]]))
-  override protected def withNewChildInternal(c: Expression) = copy(c)
-}
-
-case class AviWidth(child: Expression) extends UnaryExpression {
-  private val M = "graft.functions.RiffOps"
-  override def prettyName: String = "avi_width"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(b: Any): Any =
-    RiffOps.aviWidth(b.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"$M.aviWidth($v)")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
-}
-
-case class AviHeight(child: Expression) extends UnaryExpression {
-  private val M = "graft.functions.RiffOps"
-  override def prettyName: String = "avi_height"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(b: Any): Any =
-    RiffOps.aviHeight(b.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"$M.aviHeight($v)")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
-}
-
-case class AviFrameCount(child: Expression) extends UnaryExpression {
-  private val M = "graft.functions.RiffOps"
-  override def prettyName: String = "avi_frame_count"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(b: Any): Any =
-    RiffOps.aviFrameCount(b.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"$M.aviFrameCount($v)")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
-}
-
-case class FrameSynth(first: Expression, second: Expression, third: Expression,
-    fourth: Expression, fifth: Expression) extends Expression
-    with codegen.CodegenFallback {
-  override def prettyName: String = "frame_synth"
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def dataType: DataType = BinaryType
-  override def children: Seq[Expression] = Seq(first, second, third, fourth, fifth)
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) null
-    else RiffOps.frameSynth(vs(0).asInstanceOf[Long], vs(1).asInstanceOf[Int],
-      vs(2).asInstanceOf[Int], vs(3).asInstanceOf[Int], vs(4).toString)
-  }
-  override protected def withNewChildrenInternal(
-      cs: IndexedSeq[Expression]): Expression =
-    copy(cs(0), cs(1), cs(2), cs(3), cs(4))
 }

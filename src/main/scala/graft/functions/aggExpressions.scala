@@ -178,66 +178,6 @@ case class StUnionAgg(
     copy(child = c(0))
 }
 
-/** h3_latlng(cell) → array<double> [lat, lng] — cell center (reference:
-  * h3.cell_to_latlng, used by srai/benchmark/_custom_metrics.py:45-100 for
-  * trajectory metrics). */
-case class H3LatLng(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "h3_latlng"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    CatalystHelpers.h3LatLng(v.asInstanceOf[Long])
-  override def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode): codegen.ExprCode =
-    defineCodeGen(ctx, ev, v => s"graft.functions.CatalystHelpers.h3LatLng($v)")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
-}
-
-/** dtw_latlng(a array<array<double>>, b array<array<double>>) → double.
-  * Exact dynamic-time-warping distance between two lat/lng paths with
-  * great-circle (haversine, R=6371009 m) point distance.
-  *
-  * Reference: srai/benchmark/_custom_metrics.py:71-88 (`dtw_distance`) uses
-  * the fastdtw APPROXIMATION; this is the exact O(nm) DP — same metric,
-  * no approximation error (documented deviation). Eval-only (driver of a
-  * per-row O(nm) loop — codegen buys nothing here). */
-case class DtwLatLng(left: Expression, right: Expression)
-  extends BinaryExpression with codegen.CodegenFallback {
-  override def prettyName: String = "dtw_latlng"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    def path(d: ArrayData): Array[(Double, Double)] =
-      (0 until d.numElements()).map { i =>
-        val p = d.getArray(i); (p.getDouble(0), p.getDouble(1))
-      }.toArray
-    GeoMetrics.dtw(path(a.asInstanceOf[ArrayData]), path(b.asInstanceOf[ArrayData]))
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
-}
-
-/** fastdtw_latlng(a, b, radius) → double: the reference's fastdtw
-  * APPROXIMATION (see [[GeoMetrics.fastDtw]]) for bit-parity consumers;
-  * `dtw_latlng` (exact DP) is the engine default. */
-case class FastDtwLatLng(left: Expression, right: Expression, radiusExpr: Expression)
-  extends TernaryExpression with codegen.CodegenFallback {
-  override def prettyName: String = "fastdtw_latlng"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = DoubleType
-  override def first: Expression = left
-  override def second: Expression = right
-  override def third: Expression = radiusExpr
-  override def nullSafeEval(a: Any, b: Any, r: Any): Any = {
-    def path(d: ArrayData): Array[(Double, Double)] =
-      (0 until d.numElements()).map { i =>
-        val p = d.getArray(i); (p.getDouble(0), p.getDouble(1))
-      }.toArray
-    GeoMetrics.fastDtw(path(a.asInstanceOf[ArrayData]),
-      path(b.asInstanceOf[ArrayData]), r.asInstanceOf[Int])
-  }
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression) = copy(f, s, t)
-}
-
 /** Shared scalar kernels for the trajectory metrics. */
 object GeoMetrics {
   /** Mean earth radius used by all graft great-circle math (geopy's

@@ -2,385 +2,17 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Catalyst expressions for the engine's geometry + cell-index functions.
-  *
-  * Each is a thin shell over a static kernel in [[GeoOps]] /
-  * [[CatalystHelpers]]: `doGenCode` emits a direct static call, so these stay
-  * inside whole-stage codegen (no ScalaUDF boxing, no kryo) — the reason we
-  * use native expressions instead of `functions.udf` (SURVEY.md §2.9).
+/** The hand-written scalar expressions of [[Gf]]'s table. Every function
+  * that is one static kernel call is a [[KernelCall]] row of `Gf.defs`;
+  * the shells here keep their own class because a [[KernelCall]] cannot
+  * express them: a primitive result that is null on non-null input
+  * (`haversine_mean_path`), an analysis-time type check (`seq_accuracy`),
+  * implicit input casts (`img_synth`, `img_synth_phash`) or a plan-time
+  * constant validated by the builder (`ivf_cells`).
   */
-object kernels {
-  final val G = "graft.functions.GeoOps"
-  final val C = "graft.functions.CatalystHelpers"
-}
-import kernels.{G, C}
-
-abstract class GeoBinaryPredicate extends BinaryExpression {
-  override def dataType: DataType = BooleanType
-  protected def method: String
-  override def nullSafeEval(a: Any, b: Any): Any =
-    evalKernel(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  protected def evalKernel(a: Array[Byte], b: Array[Byte]): Boolean
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"$G.$method($a, $b)")
-}
-
-/** st_intersects(region_wkb, feature_wkb) — J1 refinement predicate
-  * (reference: srai/joiners/intersection_joiner.py:104-106 uses STRtree
-  * `intersects`; here it's the exact refinement after the cell equi-join). */
-case class StIntersects(left: Expression, right: Expression) extends GeoBinaryPredicate {
-  override def prettyName: String = "st_intersects"
-  override def nullIntolerant: Boolean = true
-  protected def method = "intersects"
-  protected def evalKernel(a: Array[Byte], b: Array[Byte]): Boolean = GeoOps.intersects(a, b)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
-}
-
-case class StContains(left: Expression, right: Expression) extends GeoBinaryPredicate {
-  override def prettyName: String = "st_contains"
-  override def nullIntolerant: Boolean = true
-  protected def method = "contains"
-  protected def evalKernel(a: Array[Byte], b: Array[Byte]): Boolean = GeoOps.contains(a, b)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
-}
-
-case class StWithin(left: Expression, right: Expression) extends GeoBinaryPredicate {
-  override def prettyName: String = "st_within"
-  override def nullIntolerant: Boolean = true
-  protected def method = "within"
-  protected def evalKernel(a: Array[Byte], b: Array[Byte]): Boolean = GeoOps.within(a, b)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
-}
-
-case class StTouches(left: Expression, right: Expression) extends GeoBinaryPredicate {
-  override def prettyName: String = "st_touches"
-  override def nullIntolerant: Boolean = true
-  protected def method = "touches"
-  protected def evalKernel(a: Array[Byte], b: Array[Byte]): Boolean = GeoOps.touches(a, b)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
-}
-
-/** ContainsCentroid mode of the H3 regionalizer (srai/h3.py:78, buffer=False). */
-case class StContainsCentroid(left: Expression, right: Expression) extends GeoBinaryPredicate {
-  override def prettyName: String = "st_contains_centroid"
-  override def nullIntolerant: Boolean = true
-  protected def method = "containsCentroid"
-  protected def evalKernel(a: Array[Byte], b: Array[Byte]): Boolean = GeoOps.containsCentroid(a, b)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
-}
-
-/** st_intersection — J2's intersection geometry (intersection_joiner.py:76-87). */
-case class StIntersection(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def prettyName: String = "st_intersection"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    GeoOps.intersection(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"$G.intersection($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
-}
-
-case class StGeomFromText(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "st_geomfromtext"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(v: Any): Any = GeoOps.geomFromText(v.toString)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"$G.geomFromText($v.toString())")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
-}
-
-case class StAsText(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "st_astext"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StringType
-  override def nullSafeEval(v: Any): Any =
-    org.apache.spark.unsafe.types.UTF8String.fromString(
-      GeoOps.asText(v.asInstanceOf[Array[Byte]]))
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      v => s"org.apache.spark.unsafe.types.UTF8String.fromString($G.asText($v))")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
-}
-
-/** st_astext_shapely(geom) — WKT in shapely `wkt.dumps` byte layout
-  * (fixed 16-decimal coordinates), so sha2(st_astext_shapely(g), 256)
-  * interchanges with the reference's get_geometry_hash
-  * (srai/geometry.py:133-138) on non-integer coordinates too. */
-case class StAsTextShapely(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "st_astext_shapely"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StringType
-  override def nullSafeEval(v: Any): Any =
-    org.apache.spark.unsafe.types.UTF8String.fromString(
-      GeoOps.asTextShapely(v.asInstanceOf[Array[Byte]]))
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      v => s"org.apache.spark.unsafe.types.UTF8String.fromString($G.asTextShapely($v))")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
-}
-
-case class StPoint(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def prettyName: String = "st_point"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(lng: Any, lat: Any): Any =
-    GeoOps.makePoint(lng.asInstanceOf[Double], lat.asInstanceOf[Double])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"$G.makePoint($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
-}
-
-/** st_box(xmin, ymin, xmax, ymax) — direct WKB box construction (footprint
-  * hot path; avoids the format_string → WKT parse round-trip). */
-case class StBox(first: Expression, second: Expression, third: Expression,
-                 fourth: Expression) extends QuaternaryExpression {
-  override def prettyName: String = "st_box"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
-    GeoOps.makeBox(a.asInstanceOf[Double], b.asInstanceOf[Double],
-      c.asInstanceOf[Double], d.asInstanceOf[Double])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c, d) => s"$G.makeBox($a, $b, $c, $d)")
-  override protected def withNewChildrenInternal(a: Expression, b: Expression,
-      c: Expression, d: Expression): Expression = copy(a, b, c, d)
-}
-
-/** st_remove_interiors(geom) — drop polygon holes (P3; geometry.py:50-64). */
-case class StRemoveInteriors(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "st_remove_interiors"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(v: Any): Any =
-    GeoOps.removeInteriors(v.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"$G.removeInteriors($v)")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
-}
-
-/** st_buffer_meters(geom, m) — geodesic buffer via the spherical AEQD
-  * round-trip (P4; geometry.py:67-94). */
-case class StBufferMeters(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def prettyName: String = "st_buffer_meters"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(g: Any, m: Any): Any =
-    GeoOps.bufferMeters(g.asInstanceOf[Array[Byte]], m.asInstanceOf[Double])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"$G.bufferMeters($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
-}
-
-case class StArea(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "st_area"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(v: Any): Any = GeoOps.area(v.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"$G.area($v)")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
-}
-
-/** Envelope corner accessors (patch lexsort P12: orderBy(desc(st_ymax),
-  * asc(st_xmin)) — reference s2vec/s2_utils.py:60-72). */
-case class StXMin(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "st_xmin"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(v: Any): Any = GeoOps.envelope(v.asInstanceOf[Array[Byte]])(0)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"$G.envelope($v)[0]")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
-}
-
-case class StYMax(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "st_ymax"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(v: Any): Any = GeoOps.envelope(v.asInstanceOf[Array[Byte]])(3)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"$G.envelope($v)[3]")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
-}
-
-case class StCentroidX(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "st_centroid_x"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(v: Any): Any = GeoOps.centroidX(v.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"$G.centroidX($v)")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
-}
-
-case class StCentroidY(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "st_centroid_y"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(v: Any): Any = GeoOps.centroidY(v.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"$G.centroidY($v)")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
-}
-
-case class StStartPoint(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "st_start_point"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(v: Any): Any = GeoOps.startPoint(v.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"$G.startPoint($v)")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
-}
-
-case class StEndPoint(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "st_end_point"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(v: Any): Any = GeoOps.endPoint(v.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"$G.endPoint($v)")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
-}
-
-case class StLength(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "st_length"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(v: Any): Any = GeoOps.length(v.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"$G.length($v)")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
-}
-
-/** st_dump — multipolygon explode (reference: regionalizers/_base.py:26-36). */
-case class StDump(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "st_dump"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-  override def nullSafeEval(v: Any): Any = CatalystHelpers.dump(v.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"$C.dump($v)")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
-}
-
-// ---------------- S2 ----------------
-
-/** s2_cell(lng, lat, level) → cell id. The scalar point fast-path of the
-  * engine (SURVEY.md J4): tile assignment for points is a projection, not a
-  * join. */
-case class S2CellId(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-  override def prettyName: String = "s2_cell"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = LongType
-  override def nullSafeEval(lng: Any, lat: Any, lvl: Any): Any =
-    CatalystHelpers.s2Cell(lng.asInstanceOf[Double], lat.asInstanceOf[Double],
-      lvl.asInstanceOf[Int])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c) => s"$C.s2Cell($a, $b, $c)")
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression) =
-    copy(a, b, c)
-}
-
-/** Token form of a cell id — srai's S2 region ids are tokens
-  * (s2_regionalizer.py:98-102). */
-case class S2Token(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "s2_token"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StringType
-  override def nullSafeEval(v: Any): Any = CatalystHelpers.s2Token(v.asInstanceOf[Long])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"$C.s2Token($v)")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
-}
-
-case class S2FromToken(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "s2_from_token"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = LongType
-  override def nullSafeEval(v: Any): Any =
-    CatalystHelpers.s2FromToken(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"$C.s2FromToken($v)")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
-}
-
-/** s2_children(cell, target_level) — the raster↔vector patch expansion
-  * (reference: s2vec/s2_utils.py:31-37 BFS; here a generator-feeding array). */
-case class S2Children(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def prettyName: String = "s2_children"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(id: Any, lvl: Any): Any =
-    CatalystHelpers.s2Children(id.asInstanceOf[Long], lvl.asInstanceOf[Int])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"$C.s2Children($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
-}
-
-/** s2_cover(geom_wkb, level) — all level-`level` cells intersecting the
-  * geometry (reference: s2_regionalizer.py polyfill+refine ≡ this). */
-case class S2Cover(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def prettyName: String = "s2_cover"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(wkb: Any, lvl: Any): Any =
-    CatalystHelpers.s2Cover(wkb.asInstanceOf[Array[Byte]], lvl.asInstanceOf[Int])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"$C.s2Cover($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
-}
-
-/** s2_cover_expanded(geom, level, h) — cover of the geometry's envelope
-  * dilated by h degrees (see CatalystHelpers.s2CoverExpanded). */
-case class S2CoverExpanded(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-  override def prettyName: String = "s2_cover_expanded"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(wkb: Any, lvl: Any, h: Any): Any =
-    CatalystHelpers.s2CoverExpanded(wkb.asInstanceOf[Array[Byte]],
-      lvl.asInstanceOf[Int], h.asInstanceOf[Double])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c) => s"$C.s2CoverExpanded($a, $b, $c)")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression) = copy(f, s, t)
-}
-
-/** s2_boundary(cell) — planar 4-vertex cell polygon (s2_regionalizer.py:98-102). */
-case class S2SortedChildren(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def prettyName: String = "s2_sorted_children"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(id: Any, lvl: Any): Any =
-    CatalystHelpers.s2SortedChildren(id.asInstanceOf[Long], lvl.asInstanceOf[Int])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"$C.s2SortedChildren($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
-}
-
-case class H3SeqPath(child: Expression) extends UnaryExpression
-    with codegen.CodegenFallback {
-  override def prettyName: String = "h3_seq_path"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType =
-    ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = true)
-  override def nullSafeEval(seq: Any): Any =
-    CatalystHelpers.h3SeqPath(
-      seq.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def withNewChildInternal(c: Expression) = copy(c)
-}
 
 case class HaversineMeanPath(left: Expression, right: Expression)
     extends BinaryExpression with codegen.CodegenFallback {
@@ -422,68 +54,57 @@ case class SeqAccuracy(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
 }
 
-case class HexDenseGrid(left: Expression, right: Expression)
-    extends BinaryExpression with codegen.CodegenFallback {
-  override def prettyName: String = "hex_dense_grid"
+/** img_synth(k, patterns) — encoded bytes of the deterministic synthetic
+  * image for key k (the Images table's `bytes` column as a prunable,
+  * codegen projection: consumers that never read the bytes never pay the
+  * encode). */
+case class ImgSynth(left: Expression, right: Expression)
+    extends BinaryExpression with ImplicitCastInputTypes {
+  override def prettyName: String = "img_synth"
   override def nullIntolerant: Boolean = true
-  override def dataType: DataType =
-    ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
-  override def nullSafeEval(cells: Any, k: Any): Any =
-    CatalystHelpers.hexDenseGrid(
-      cells.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      k.asInstanceOf[Int])
+  // declared input types so a SQL call with integer literals coerces
+  // instead of CCE-ing in the interpreted path (round-7 review)
+  override def inputTypes: Seq[DataType] = Seq(LongType, IntegerType)
+  override def dataType: DataType = BinaryType
+  override def nullSafeEval(k: Any, p: Any): Any =
+    ImageOps.synthBytes(k.asInstanceOf[Long], p.asInstanceOf[Int])
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (k, p) => s"graft.functions.ImageOps.synthBytes($k, $p)")
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
 }
 
-case class S2Boundary(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "s2_boundary"
+/** img_synth_phash(k, patterns) — perceptual hash of the synthetic image
+  * for key k (the Images table's `phash` column, prunable like img_synth). */
+case class ImgSynthPhash(left: Expression, right: Expression)
+    extends BinaryExpression with ImplicitCastInputTypes {
+  override def prettyName: String = "img_synth_phash"
   override def nullIntolerant: Boolean = true
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(v: Any): Any = CatalystHelpers.s2Boundary(v.asInstanceOf[Long])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"$C.s2Boundary($v)")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
-}
-
-case class S2Parent(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def prettyName: String = "s2_parent"
-  override def nullIntolerant: Boolean = true
+  override def inputTypes: Seq[DataType] = Seq(LongType, IntegerType)
   override def dataType: DataType = LongType
-  override def nullSafeEval(id: Any, lvl: Any): Any =
-    CatalystHelpers.s2Parent(id.asInstanceOf[Long], lvl.asInstanceOf[Int])
+  override def nullSafeEval(k: Any, p: Any): Any =
+    ImageOps.synthPhash(k.asInstanceOf[Long], p.asInstanceOf[Int])
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"$C.s2Parent($a, $b)")
+    defineCodeGen(ctx, ev, (k, p) => s"graft.functions.ImageOps.synthPhash($k, $p)")
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
 }
 
-// ---------------- slippy ----------------
-
-/** slippy_cover(geom_wkb, zoom) → array<struct<x:int,y:int>>
-  * (reference: slippy_map_regionalizer.py:77-103). */
-case class SlippyCover(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def prettyName: String = "slippy_cover"
+/** ivf_cells(array<float>) → array<int>: the `nprobe` nearest IVF centroid
+  * indices by dot product. The centroid matrix is a plan-time constant
+  * (trained driver-side on a bounded sample — [[graft.operators.Similarity.trainIvf]])
+  * carried as a constructor field and shipped to codegen as a reference
+  * object, so the kernel reads a raw double[] — no per-row ArrayData
+  * re-extraction of a 4096-element literal. */
+case class IvfCells(child: Expression, centroids: Array[Double], dim: Int,
+                    nprobe: Int)
+    extends UnaryExpression {
+  override def prettyName: String = "ivf_cells"
   override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("x", IntegerType, false), StructField("y", IntegerType, false))),
-    containsNull = false)
-  override def nullSafeEval(wkb: Any, zoom: Any): Any =
-    CatalystHelpers.slippyCover(wkb.asInstanceOf[Array[Byte]], zoom.asInstanceOf[Int])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"$C.slippyCover($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
-}
-
-case class SlippyBoundary(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-  override def prettyName: String = "slippy_boundary"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(x: Any, y: Any, z: Any): Any =
-    CatalystHelpers.slippyBoundary(x.asInstanceOf[Int], y.asInstanceOf[Int], z.asInstanceOf[Int])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c) => s"$C.slippyBoundary($a, $b, $c)")
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression) =
-    copy(a, b, c)
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def nullSafeEval(v: Any): Any =
+    VecTextOps.ivfCells(v.asInstanceOf[ArrayData], centroids, dim, nprobe)
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cRef = ctx.addReferenceObj("ivfCentroids", centroids, "double[]")
+    defineCodeGen(ctx, ev, v => s"graft.functions.VecTextOps.ivfCells($v, $cRef, $dim, $nprobe)")
+  }
+  override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }

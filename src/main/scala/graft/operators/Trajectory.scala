@@ -76,7 +76,7 @@ object Trajectory {
 
   /** Exact DTW distance between [lat, lng] paths (haversine point metric);
     * reference `dtw_distance` uses the fastdtw approximation — this is the
-    * exact DP (documented deviation, see [[graft.functions.DtwLatLng]]). */
+    * exact DP (documented deviation, see [[graft.functions.GeoMetrics.dtw]]). */
   def dtwDistance(a: Column, b: Column): Column = Gf.dtwLatLng(a, b)
 
   /** H3-sequence variants: decode cell ids to [lat, lng] centers first

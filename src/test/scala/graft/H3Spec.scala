@@ -55,6 +55,38 @@ class H3Spec extends AnyFunSuite {
       "862bac527ffffff", "862bac52fffffff", "862bac537ffffff"))
   }
 
+  test("gridDisk / gridRing from one BFS match the two-BFS forms element for element") {
+    // the former implementations: a disk BFS of its own, and a ring as the
+    // difference of two disks
+    def diskBfs(h: Long, k: Int): Seq[Long] = {
+      var frontier = Set(h)
+      val seen = scala.collection.mutable.LinkedHashSet(h)
+      for (_ <- 0 until k) {
+        frontier = frontier.flatMap(H3.neighbors).diff(seen.toSet)
+        seen ++= frontier
+      }
+      seen.toSeq
+    }
+    def ringOfDisks(h: Long, k: Int): Seq[Long] =
+      if (k == 0) Seq(h) else diskBfs(h, k).filterNot(diskBfs(h, k - 1).toSet)
+    // every pentagon at res 2 and 4 with its neighbours, plus a hex field
+    val nearPentagons = for {
+      bc <- (0 until 122).filter(H3.isPentagon)
+      res <- Seq(2, 4)
+      pent = H3.children((1L << 59) | (bc.toLong << 45) | 0x1FFFFFFFFFFFL, res)
+        .find(H3.isPentagonCell).get
+      c <- pent +: H3.neighbors(pent)
+    } yield c
+    val field = for (i <- 0 until 10; j <- 0 until 10)
+      yield H3.latLngToCell(51.0 + i * 0.05, 16.9 + j * 0.08, 7)
+    val cells = (nearPentagons ++ field).distinct
+    assert(cells.size >= 200)
+    for (c <- cells; k <- 0 to 3) {
+      assert(H3.gridDisk(c, k) === diskBfs(c, k), s"disk ${H3.toHexString(c)} k=$k")
+      assert(H3.gridRing(c, k) === ringOfDisks(c, k), s"ring ${H3.toHexString(c)} k=$k")
+    }
+  }
+
   test("neighbors of 811e3ffffffffff contain the reference's 5 named neighbours") {
     val ns = H3.neighbors(H3.fromHexString("811e3ffffffffff")).map(H3.toHexString).toSet
     val expected5 = Set("811f3ffffffffff", "811fbffffffffff", "811ebffffffffff",

@@ -133,7 +133,7 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     import org.apache.spark.sql.execution.window.WindowExec
-    import graft.functions.{Gf, ImgPhash}
+    import graft.functions.Gf
     Gf.register(spark)
     // a cached leaf: AQE reuses a repeated exchange only over file scans,
     // so a self-join here evaluates the banded input once per side
@@ -148,7 +148,7 @@ class PlanSpec extends AnyFunSuite {
       def nodes(pf: PartialFunction[SparkPlan, SparkPlan]) =
         new AdaptiveSparkPlanHelper {}.collect(plan)(pf)
       val phash = nodes {
-        case p if p.expressions.exists(_.exists(_.isInstanceOf[ImgPhash])) => p
+        case p if p.expressions.exists(_.exists(_.prettyName == "img_phash")) => p
       }
       assert(phash.size === 1, s"img_phash evaluated in ${phash.size} nodes:\n$plan")
       assert(nodes { case j: SortMergeJoinExec => j }.isEmpty, s"self-join:\n$plan")
