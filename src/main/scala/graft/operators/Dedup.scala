@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Gf
 
@@ -13,9 +14,9 @@ import graft.functions.Gf
   *    row into `bands` NARROW rows (id, band, band_hash) — no shingle/text
   *    payload rides the band shuffle. Candidates are paired inside each
   *    (band, band_hash) bucket by one aggregate ([[bucketPairs]]) — linear
-  *    in bucket sizes, never all-pairs. Shingles are joined back ONCE per
-  *    unique candidate pair, and exact Jaccard verification runs only on
-  *    those pairs;
+  *    in bucket sizes, never all-pairs, each pair once with no pair dedup.
+  *    Shingles are joined back ONCE per candidate pair, and exact Jaccard
+  *    verification runs only on those pairs;
   *  - SimHash: same banding trick over 4×16-bit chunks of the 64-bit hash
   *    (two near-dup hashes with hamming ≤ 3 share ≥ 1 exact chunk by
   *    pigeonhole — recall 1.0 at the hamming threshold, not probabilistic).
@@ -49,58 +50,76 @@ object Dedup {
       col(idCol).as("id"),
       TextOps.shingles(col(textCol), shingleK).as("sh"))
 
-  /** Candidate pairs of a banded frame in ONE pass, for every pair
-    * generator here. Rows with a null bucket key are dropped (a null key
-    * matches nothing; a null group would square). One `groupBy(keys)`
-    * lists each bucket's narrow `struct(payload)` members — one exchange
-    * with partial aggregation, so the banded input is evaluated and
-    * shuffled once whatever its leaf (AQE reuses a repeated exchange only
-    * over file scans, not over a cache or `spark.range`). Members sorted
-    * by id (`payload` starts with "id") pair with the ones after them:
-    * `keys ++ <p>_a ++ <p>_b` rows, id_a < id_b, once per shared bucket.
+  /** Candidate pairs of a banded frame, each EXACTLY ONCE: the one pair
+    * generator behind this object and [[Similarity.cosineNearDupPairs]].
+    * `banded` has one row per (member, band): `band` in [0, bands), the
+    * bucket `key` (a null key matches nothing) and the `payload` columns,
+    * "id" first. A bucket's members, sorted by id, pair with the ones
+    * after them: (band, key, <p>_a.., <p>_b..) rows, id_a < id_b. A pair
+    * is emitted only at its lowest band that both members share and the
+    * cap kept, so no pair dedup follows; the veto is a literal-index OR
+    * chain, since higher-order functions evaluate interpreted per row
+    * (15.4 s vs 1.45 s over 15.8M candidates, round 4). Two plans:
+    *  - uncapped with `sameAt`: one `groupBy(band, key)` lists each
+    *    bucket's members — one exchange with partial aggregation, so the
+    *    banded input is evaluated once whatever its leaf — and `sameAt(t)`
+    *    reads off the `_a`/`_b` payload whether their band-t keys agree;
+    *  - otherwise a first `groupBy(band, key)` keeps the buckets of 2 to
+    *    `maxBucketSize` (if > 0) members: n identical rows yield n²/2
+    *    pairs, and such clusters are for [[Dedup.exact]] upstream. Only
+    *    those buckets' rows, the ones that can pair, go on: a window over id
+    *    gives each row its id's kept band keys (null for a dropped bucket),
+    *    and a second `groupBy(band, key)` pairs them; two members share a
+    *    kept band t iff their band-t keys there are equal.
+    * Uncapped with `warnTag` set, [[graft.functions.WarnLargeBucket]] logs
+    * a bucket over 10⁴ rows once per JVM per tag. A bucket's pairs come
+    * from the one task holding its group (AQE does not split an aggregate).
     *
-    * `maxBucketSize > 0` drops larger buckets: n identical-signature rows
-    * yield n²/2 pairs, so a boilerplate cluster of 10⁵ rows would emit
-    * 5·10⁹ — such clusters are for [[Dedup.exact]] upstream. Uncapped with
-    * `warnTag` set, the member list passes through
-    * [[graft.functions.WarnLargeBucket]], logging (once per JVM per tag) a
-    * bucket over 10⁴ rows so the n² blowup is diagnosable. A bucket's pairs
-    * come from the one task holding its group: AQE's skew-join splitting
-    * does not apply to an aggregate, so a hot uncapped bucket is one task. */
-  private def bucketPairs(banded: DataFrame, keys: Seq[String],
-                          payload: Seq[String], maxBucketSize: Int,
-                          warnTag: String = null): DataFrame = {
+    * Contract: one row per id — equal ids in one member list fail the
+    * query, naming the id. */
+  private[operators] def bucketPairs(banded: DataFrame, key: String,
+                                     payload: Seq[String], bands: Int,
+                                     maxBucketSize: Int, sameAt: Int => Column = null,
+                                     warnTag: String = null): DataFrame = {
+    val keys = Seq(col("band"), col(key))
+    val live = banded.where(col(key).isNotNull)
+    val kept = (0 until bands - 1).map(t => s"__k$t")
+    val cap = if (maxBucketSize > 0) maxBucketSize else Int.MaxValue
+    val (rows, members, shared) =
+      if (maxBucketSize <= 0 && sameAt != null) (live, payload, sameAt)
+      else (live.groupBy(keys: _*)
+        .agg(collect_list(struct(payload.map(col): _*)).as("__l"))
+        .where(size(col("__l")).between(2, cap))
+        .select(keys :+ explode(col("__l")).as("__r"): _*)
+        .select(keys ++ payload.map(p => col(s"__r.$p").as(p)): _*)
+        .select(payload.map(col) ++ keys ++ kept.indices.map(t =>
+          max(when(col("band") === t, col(key))).over(Window.partitionBy("id"))
+            .as(kept(t))): _*),
+        payload ++ kept,
+        (t: Int) => coalesce(col(s"${kept(t)}_a") === col(s"${kept(t)}_b"), lit(false)))
     val m = col("__m")
     val n = size(m)
     // sort_array orders the structs by their first field, the id
-    val buckets = banded.where(keys.map(col(_).isNotNull).reduce(_ && _))
-      .groupBy(keys.map(col): _*)
-      .agg(sort_array(collect_list(struct(payload.map(col): _*))).as("__m"))
+    val buckets = rows.groupBy(keys: _*)
+      .agg(sort_array(collect_list(struct(members.map(col): _*))).as("__m"))
       .where(n >= 2)
-    val kept =
-      if (maxBucketSize > 0) buckets.where(n <= maxBucketSize)
-      else if (warnTag == null) buckets
+    val listed =
+      if (maxBucketSize > 0 || warnTag == null) buckets
       else buckets.withColumn("__m", call_function("warn_large_bucket",
         m, n.cast("long"), lit(10000L), lit(warnTag)))
-    def side(s: String) = payload.map(p => col(s"$s.$p").as(s"${p}_$s"))
+    def side(s: String) = members.map(p => col(s"$s.$p").as(s"${p}_$s"))
+    val repeated = raise_error(concat(lit("bucketPairs: id "),
+      col("a.id").cast("string"), lit(" appears in more than one input row; " +
+        "the near-dup operators take one row per id")))
     // slice is 1-based: the members after 0-based position p start at p + 2
-    kept.select(keys.map(col) :+ m :+ posexplode(m).as(Seq("__p", "a")): _*)
-      .select(keys.map(col) :+ col("a") :+
-        explode(slice(m, col("__p") + 2, n)).as("b"): _*)
-      .where(col("a.id") < col("b.id"))
-      .select(keys.map(col) ++ side("a") ++ side("b"): _*)
+    listed.select(keys :+ m :+ posexplode(m).as(Seq("__p", "a")): _*)
+      .select(keys :+ col("a") :+ explode(slice(m, col("__p") + 2, n)).as("b"): _*)
+      .where(when(col("a.id") === col("b.id"), repeated)
+        .otherwise(col("a.id") < col("b.id")))
+      .select(keys ++ side("a") ++ side("b"): _*)
+      .where(!(0 until bands - 1).map(t => col("band") > t && shared(t))
+        .foldLeft(lit(false))(_ || _))
   }
-
-  /** Drop buckets over `maxBucketSize` rows (if > 0) by a count window over
-    * the keys — for [[Similarity.cosineNearDupPairs]] only, whose capped
-    * exactly-once mask needs the surviving rows per id. */
-  private[operators] def capBuckets(banded: DataFrame, keys: Seq[String],
-                                    maxBucketSize: Int): DataFrame =
-    if (maxBucketSize <= 0) banded
-    else banded.withColumn("__bsz",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)))
-      .where(col("__bsz") <= maxBucketSize)
-      .drop("__bsz")
 
   /** The LOSSLESS size prefilter: Jaccard(A, B) ≥ t implies |A∩B| ≤ min and
     * |A∪B| ≥ max, hence min(|A|,|B|) ≥ t·max(|A|,|B|) — so the filter can
@@ -153,10 +172,10 @@ object Dedup {
         posexplode(array((0 until bands).map(b =>
           xxhash64(lit(b), slice(col("sig"), lit(b * rows + 1), lit(rows)))): _*)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
-    val candidates = bucketPairs(banded, Seq("band", "band_hash"),
-        Seq("id", "n"), maxBucketSize)
+    val candidates = bucketPairs(banded, "band_hash", Seq("id", "n"), bands,
+        maxBucketSize)
       .where(sizeCompatible(threshold))
-      .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
+      .select("id_a", "id_b")
     verifyJaccard(candidates, sh, threshold)
   }
 
@@ -215,10 +234,9 @@ object Dedup {
     * volume-aware width; finer widths strengthen that bound while
     * SHRINKING the chunk key space, the trade documented on
     * [[simhashJaccardPairs]]. The one-long hash rides the band shuffle.
-    * Uncapped, a pair is emitted only at its LOWEST band whose chunks
-    * agree (read off `h_a XOR h_b`): exactly once per pair of rows, with no
-    * pair-dedup exchange. Capped runs dedupe instead — a later bucket
-    * cannot see that an earlier shared one was dropped. */
+    * A pair is emitted once, at its LOWEST band whose chunks agree (read
+    * off `h_a XOR h_b` when uncapped) and whose bucket the cap kept
+    * ([[bucketPairs]]). */
   private def hammingPairs(hashed: DataFrame, maxHamming: Int, bands: Int,
                            maxBucketSize: Int, warnTag: String,
                            nHint: Long): DataFrame = {
@@ -232,19 +250,10 @@ object Dedup {
         s"hammingPairs: maxHamming=$maxHamming >= bands=$chosenBands — the " +
           "pigeonhole recall guarantee at this threshold is void; only " +
           "pairs sharing a full chunk (e.g. identical hashes) are candidates")
-    val pairs = bucketPairs(bandChunks(hashed, "h", chosenBands),
-      Seq("band", "chunk"), Seq("id", "h"), maxBucketSize, warnTag)
-    val unique =
-      if (maxBucketSize > 0)
-        pairs.select("id_a", "id_b", "h_a", "h_b").dropDuplicates("id_a", "id_b")
-      else {
-        // literal-index OR chain, not a higher-order function: HOFs
-        // evaluate interpreted per row (see Similarity.cosineNearDupPairs)
-        val x = col("h_a").bitwiseXOR(col("h_b"))
-        pairs.where(!(0 until chosenBands - 1).map(b => col("band") > b &&
-          chunk(x, b, chosenBands) === 0L).foldLeft(lit(false))(_ || _))
-      }
-    unique.withColumn("hamming", Gf.hamming64(col("h_a"), col("h_b")))
+    val x = col("h_a").bitwiseXOR(col("h_b"))
+    bucketPairs(bandChunks(hashed, "h", chosenBands), "chunk", Seq("id", "h"),
+        chosenBands, maxBucketSize, chunk(x, _, chosenBands) === 0L, warnTag)
+      .withColumn("hamming", Gf.hamming64(col("h_a"), col("h_b")))
       .where(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming")
   }
@@ -261,7 +270,8 @@ object Dedup {
     * [[simhashJaccardPairs]] does by default. Uncapped blocks beyond the
     * old 10k bound log a loud executor-side warning (round-5, see
     * [[bucketPairs]]) so the n² blowup is diagnosable, never silent.
-    * Contract: one row per id — uncapped, a repeated id repeats its pairs. */
+    * Contract: one row per id — a repeated id fails the query, naming the
+    * id, once its rows share a kept bucket (an exact repeat shares every one). */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 3,
                    maxBucketSize: Int = 0): DataFrame =
@@ -285,7 +295,8 @@ object Dedup {
     * (id, phash) — 16 bytes/row — never the image bytes, in one bucket
     * aggregate; at 10¹² images the band shuffle is the narrow one the
     * 100-TB plan needs. Rows with a null hash pair with nothing. Contract:
-    * one row per id — uncapped, a repeated id repeats its pairs. */
+    * one row per id — a repeated id fails the query, naming the id, once
+    * its rows share a kept bucket (an exact repeat shares every one). */
   def phashPairs(df: DataFrame, idCol: String, hashCol: String,
                  maxHamming: Int = 3, bands: Int = 4,
                  maxBucketSize: Int = 0, nHint: Long = 0L): DataFrame =
@@ -297,7 +308,8 @@ object Dedup {
     * codegen decode+hash projection — [[graft.functions.Gf.imgPhash]]);
     * [[spread]] widens a small single-file input so the decode kernel
     * parallelizes. The decode runs once per row whatever the input's leaf.
-    * Contract: one row per id — uncapped, a repeated id repeats its pairs. */
+    * Contract: one row per id — a repeated id fails the query, naming the
+    * id, once its rows share a kept bucket (an exact repeat shares every one). */
   def phashPairsFromBytes(df: DataFrame, idCol: String, bytesCol: String,
                           maxHamming: Int = 3, bands: Int = 4,
                           maxBucketSize: Int = 0, nHint: Long = 0L): DataFrame =
@@ -344,9 +356,9 @@ object Dedup {
     val candidates = bucketPairs(
         bandChunks(proj.select(col("id"), col("hash"), size(col("sh")).as("n")),
           "hash", chosenBands),
-        Seq("band", "chunk"), Seq("id", "n"), maxBucketSize)
+        "chunk", Seq("id", "n"), chosenBands, maxBucketSize)
       .where(sizeCompatible(threshold))
-      .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
+      .select("id_a", "id_b")
     verifyJaccard(candidates, proj.select(col("id"), col("sh")), threshold)
   }
 }

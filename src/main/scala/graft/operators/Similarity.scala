@@ -15,7 +15,9 @@ import graft.functions.Gf
   * scale-killer at 10⁹ vectors). The LSH path is the 100-TB shape:
   * hyperplane-signature buckets bound candidate generation; only
   * (bucket, id) pairs ride the bucket join — vectors are joined back once
-  * per surviving candidate. */
+  * per surviving candidate. Near-dup pairs ([[cosineNearDupPairs]]) come
+  * from the banded generator of the text and image dedup,
+  * [[Dedup.bucketPairs]]. */
 object Similarity {
 
   /** Auto-tuned LSH parameters (see [[suggestLsh]]): `sampledOccupancy` is
@@ -645,21 +647,16 @@ object Similarity {
     * verification. Identical directions always collide (sign pattern equal),
     * so exact-dup recall is 1.0 by construction.
     *
-    * Scale shape: bucket join on (t, sig, id, sigs) — the full per-table
-    * signature vector rides the shuffle (8·tables extra bytes/row) so each
-    * pair can be emitted from the FIRST table whose signatures agree and
-    * only there: exactly-once by construction, which deletes the pair
-    * dropDuplicates exchange entirely (on a clustered corpus — boilerplate
-    * embeddings, the realistic web-scale case — the candidate set itself is
-    * the dominant volume, and a whole extra exchange of it is pure waste:
-    * the round-4 CosProbe measured the full op at 16.1 s before / 5-7 s
-    * after on a 15.8M-candidate corpus at local[8]). Vectors are joined
-    * back once per candidate. Capping composes exactly: each row carries a
-    * bitmask of the tables whose bucket SURVIVED the cap (one narrow window
-    * over the banded rows), and a pair is emitted at its earliest shared
-    * table among the surviving ones — identical recall to the old
-    * dropDuplicates form (a pair sharing a capped early bucket is still
-    * recovered through an uncapped later table), still exactly-once. */
+    * Scale shape: the banded rows are (id, band, sig) only, and
+    * [[Dedup.bucketPairs]] emits each pair at its FIRST table whose
+    * signatures agree and whose bucket survived the cap, and only there:
+    * exactly-once by construction, no pair-dedup exchange (on a clustered
+    * corpus — boilerplate embeddings, the realistic web-scale case — the
+    * candidate set itself is the dominant volume: the round-4 CosProbe
+    * measured the full op at 16.1 s with that exchange, 5-7 s without, on
+    * a 15.8M-candidate corpus at local[8]). A pair sharing a capped early
+    * bucket is still recovered through an uncapped later table. Vectors
+    * are joined back once per candidate. */
   def cosineNearDupPairs(corpus: DataFrame, threshold: Double,
                          planes: Int = 16, tables: Int = 4,
                          idCol: String = "vec_id", vecCol: String = "embedding",
@@ -668,34 +665,9 @@ object Similarity {
     val sigArr = array((0 until tables).map(t =>
       Gf.hyperplaneSig(col("v"), planes, 2000L + t)): _*)
     // oversized buckets (zero/duplicate vectors all share a signature)
-    // would square in the self-join — same explicit cap as Dedup
-    val capped = Dedup.capBuckets(ids
-      .select(col("id"), sigArr.as("sigs"))
-      .select(col("id"), col("sigs"), posexplode(col("sigs")))
-      .select(col("id"), col("sigs"), col("pos").as("t"), col("col").as("sig")),
-      Seq("t", "sig"), maxBucketSize)
-    // bitmask of tables whose bucket survived the cap for THIS id. Two rows
-    // with equal signatures at table t sit in the SAME bucket there, so one
-    // side's bit answers "was that shared bucket capped" for both.
-    val banded = capped.withColumn("mask",
-      sum(expr("shiftleft(CAST(1 AS BIGINT), t)")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("id")))
-    val a = banded.select(col("t"), col("sig"), col("id").as("id_a"),
-      col("sigs").as("sigs_a"), col("mask").as("mask_a"))
-    val b = banded.select(col("t"), col("sig"), col("id").as("id_b"),
-      col("sigs").as("sigs_b"))
-    // veto only when an EARLIER table both matches and survived capping —
-    // a literal-index OR chain, NOT slice/zip_with/exists: higher-order
-    // functions evaluate interpreted per row — measured 15.4 s vs 1.45 s
-    // for this filter over a 15.8M-row candidate join (CosProbe, round 4)
-    val earlierMatch =
-      if (tables <= 1) lit(false)
-      else (0 until tables - 1).map(tp =>
-        col("t") > tp && col("sigs_a")(tp) === col("sigs_b")(tp) &&
-          col("mask_a").bitwiseAND(lit(1L << tp)) =!= 0L)
-        .reduce(_ || _)
-    val candidates = a.join(b, Seq("t", "sig"))
-      .where(col("id_a") < col("id_b") && !earlierMatch)
+    // would square — same explicit cap as Dedup
+    val banded = ids.select(col("id"), posexplode(sigArr).as(Seq("band", "sig")))
+    val candidates = Dedup.bucketPairs(banded, "sig", Seq("id"), tables, maxBucketSize)
       .select("id_a", "id_b")
     candidates
       .join(ids.select(col("id").as("id_a"), col("v").as("v_a")), Seq("id_a"))

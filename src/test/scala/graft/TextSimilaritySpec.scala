@@ -119,9 +119,9 @@ class TextSimilaritySpec extends AnyFunSuite {
         case d: org.apache.spark.sql.catalyst.plans.logical.Deduplicate => d
       }
     assert(dedups(out).isEmpty, "pair dedup exchange crept back into the plan")
-    // control: the assertion CAN fail — minhashPairs still deduplicates
-    val ctrl = Seq((1L, "a b c d"), (2L, "a b c e")).toDF("doc_id", "text")
-    assert(dedups(Dedup.minhashPairs(ctrl, "doc_id", "text")).nonEmpty,
+    // control: the assertion CAN fail — lshTopK still deduplicates its
+    // query-vs-corpus candidates
+    assert(dedups(Similarity.lshTopK(vecs, vecs.limit(1), 5)).nonEmpty,
       "control lost its Deduplicate — the assertion is vacuous again")
   }
 
