@@ -5,9 +5,11 @@ package graft
   * in OPTIMIZATION_r*.md are checkable without running Spark.
   *
   *   sbt "runMain graft.PlanDump r07 before"
+  *   sbt "runMain graft.PlanDump r07 before q19_embed_neardup q21_ann_lsh"
   *
-  * Not part of the measured surface: Bench.scala stays the only timing
-  * harness.
+  * Names after the suffix select `SparkEntry.queries` entries instead of
+  * the bench's headline queries. Not part of the measured surface:
+  * Bench.scala stays the only timing harness.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -18,13 +20,10 @@ object PlanDump {
     val spark = GraftSession.local(cpus, "graft-plandump")
     val outDir = java.nio.file.Paths.get(s"plans/$round")
     java.nio.file.Files.createDirectories(outDir)
-    // "extra" mode: the non-bench queries the round touched (image-table
-    // consumers outside the bench) — same files, "<name>_<suffix>.txt"
+    val names = args.drop(2)
     val queries: Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame)] =
-      if (args.length > 2 && args(2) == "extra")
-        Seq("q12_patch_grid", "q42_intersection_geom", "q65_image_phash_neardup")
-          .map(n => n -> SparkEntry.queries(n))
+      if (names.nonEmpty) names.toSeq.map(n => n -> SparkEntry.queries(n))
       else Bench.headline
     queries.foreach { case (name, fn) =>
       try {

@@ -189,6 +189,37 @@ object Geo {
     inv.transform(buffered)
   }
 
+  /** The cells of one grid whose shape intersects the prepared geometry:
+    * a BFS flood through `neighbors`, seeded from the cells of the bbox
+    * center and corners and of every vertex, so thin and disconnected
+    * (multi-part) shapes each get an entry point. `cellAt(lng, lat)`
+    * locates a point, `shape` is a cell's planar polygon. Cells come back
+    * in flood order. The cover of [[S2.cover]] and [[H3.cover]]. */
+  def floodCover(prep: org.locationtech.jts.geom.prep.PreparedGeometry,
+                 cellAt: (Double, Double) => Long,
+                 shape: Long => Geometry, neighbors: Long => Iterable[Long]): Seq[Long] = {
+    val g = prep.getGeometry
+    val env = g.getEnvelopeInternal
+    val seeds = (Seq(
+      ((env.getMinX + env.getMaxX) / 2, (env.getMinY + env.getMaxY) / 2),
+      (env.getMinX, env.getMinY), (env.getMaxX, env.getMinY),
+      (env.getMinX, env.getMaxY), (env.getMaxX, env.getMaxY)) ++
+      g.getCoordinates.toSeq.map(c => (c.x, c.y)))
+      .map { case (lng, lat) => cellAt(lng, lat) }
+    val visited = scala.collection.mutable.HashSet[Long]()
+    val hits = scala.collection.mutable.LinkedHashSet[Long]()
+    val queue = scala.collection.mutable.Queue[Long](seeds.distinct: _*)
+    visited ++= seeds
+    while (queue.nonEmpty) {
+      val c = queue.dequeue()
+      if (prep.intersects(shape(c))) {
+        hits += c
+        neighbors(c).foreach(n => if (visited.add(n)) queue.enqueue(n))
+      }
+    }
+    hits.toSeq
+  }
+
   def union(gs: Iterable[Geometry]): Geometry =
     org.locationtech.jts.operation.union.UnaryUnionOp.union(
       scala.jdk.CollectionConverters.IterableHasAsJava(gs).asJavaCollection)

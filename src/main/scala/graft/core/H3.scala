@@ -232,9 +232,6 @@ object H3 {
   private def rotate60ccw(c: IJK): IJK =
     normalize(IJK(1, 1, 0) * c.i + IJK(0, 1, 1) * c.j + IJK(1, 0, 1) * c.k)
 
-  private def rotate60cw(c: IJK): IJK =
-    normalize(IJK(1, 0, 1) * c.i + IJK(1, 1, 0) * c.j + IJK(0, 1, 1) * c.k)
-
   private def neighborIjk(c: IJK, digit: Int): IJK = normalize(c + unitVecs(digit))
 
   // digit rotations (coordijk.c _rotate60ccw/cw)
@@ -899,31 +896,13 @@ object H3 {
     * shapely-based refinement). `containsCentroid=true` keeps only cells
     * whose center lies in `g` — the two ContainmentModes of the reference
     * H3 regionalizer (srai/h3.py:78: Covers when buffer else
-    * ContainsCentroid). BFS flood through neighbors, seeded from geometry
-    * vertices + bbox points. */
+    * ContainsCentroid). Flooded through neighbors ([[Geo.floodCover]]). */
   def cover(g: org.locationtech.jts.geom.Geometry, res: Int,
             containsCentroid: Boolean = false): Seq[Long] = {
     require(res >= 0 && res <= MaxRes, s"resolution must be in [0, $MaxRes], got $res")
-    val env = g.getEnvelopeInternal
     val prep = org.locationtech.jts.geom.prep.PreparedGeometryFactory.prepare(g)
-    val seeds = (Seq(
-      ((env.getMinX + env.getMaxX) / 2, (env.getMinY + env.getMaxY) / 2),
-      (env.getMinX, env.getMinY), (env.getMaxX, env.getMinY),
-      (env.getMinX, env.getMaxY), (env.getMaxX, env.getMaxY)) ++
-      g.getCoordinates.toSeq.map(c => (c.x, c.y)))
-      .map { case (lng, lat) => latLngToCell(lat, lng, res) }
-    val visited = scala.collection.mutable.HashSet[Long]()
-    val hits = scala.collection.mutable.LinkedHashSet[Long]()
-    val queue = scala.collection.mutable.Queue[Long](seeds.distinct: _*)
-    visited ++= seeds
-    while (queue.nonEmpty) {
-      val c = queue.dequeue()
-      if (prep.intersects(cellGeometry(c))) {
-        hits += c
-        neighbors(c).foreach { n => if (visited.add(n)) queue.enqueue(n) }
-      }
-    }
-    val all = hits.toSeq
+    val all = Geo.floodCover(prep, (lng, lat) => latLngToCell(lat, lng, res),
+      cellGeometry, neighbors)
     if (!containsCentroid) all
     else all.filter { c =>
       val (lat, lng) = cellToLatLng(c)

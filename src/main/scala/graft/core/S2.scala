@@ -273,36 +273,14 @@ object S2 {
       parent(fromFaceIJSame(f, i - size, j, i - size >= 0), l))
   }
 
-  /** All level-`level` cells whose planar lon/lat quad intersects `g` (JTS).
-    * BFS flood from the cells of the geometry's bbox corners/center through
-    * edge neighbors. Combined with exact refinement this equals the
-    * reference's polyfill + sjoin pipeline (s2_regionalizer.py:69-102):
-    * polyfill ∩ refine(intersects) == all intersecting cells. */
+  /** All level-`level` cells whose planar lon/lat quad intersects `g` (JTS),
+    * flooded through edge neighbors ([[Geo.floodCover]]). Combined with
+    * exact refinement this equals the reference's polyfill + sjoin pipeline
+    * (s2_regionalizer.py:69-102): polyfill ∩ refine(intersects) == all
+    * intersecting cells. */
   def cover(g: org.locationtech.jts.geom.Geometry, level: Int): Seq[Long] = {
     require(level >= 0 && level <= MaxLevel, s"level must be in [0, $MaxLevel], got $level")
-    val env = g.getEnvelopeInternal
-    val prep = org.locationtech.jts.geom.prep.PreparedGeometryFactory.prepare(g)
-    // Seed from bbox center/corners plus every geometry vertex, so thin and
-    // disconnected (multi-part) shapes each get a BFS entry point.
-    val seeds = (Seq(
-      ((env.getMinX + env.getMaxX) / 2, (env.getMinY + env.getMaxY) / 2),
-      (env.getMinX, env.getMinY), (env.getMaxX, env.getMinY),
-      (env.getMinX, env.getMaxY), (env.getMaxX, env.getMaxY)) ++
-      g.getCoordinates.toSeq.map(c => (c.x, c.y)))
-      .map { case (lng, lat) => lngLatToCell(lng, lat, level) }
-    val visited = scala.collection.mutable.HashSet[Long]()
-    val hits = scala.collection.mutable.LinkedHashSet[Long]()
-    val queue = scala.collection.mutable.Queue[Long](seeds.distinct: _*)
-    visited ++= seeds
-    while (queue.nonEmpty) {
-      val c = queue.dequeue()
-      if (prep.intersects(cellGeometry(c))) {
-        hits += c
-        edgeNeighbors(c).foreach { n =>
-          if (visited.add(n)) queue.enqueue(n)
-        }
-      }
-    }
-    hits.toSeq
+    Geo.floodCover(org.locationtech.jts.geom.prep.PreparedGeometryFactory.prepare(g),
+      lngLatToCell(_, _, level), cellGeometry, c => edgeNeighbors(c))
   }
 }

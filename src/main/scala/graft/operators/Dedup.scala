@@ -139,16 +139,25 @@ object Dedup {
     least(col("n_a"), col("n_b")).cast("double") >=
       lit(threshold) * greatest(col("n_a"), col("n_b"))
 
-  /** Join shingle arrays back to (id_a, id_b) candidate pairs and verify
-    * exact Jaccard ≥ threshold. The two id-keyed joins shuffle each shingle
-    * array at most once — candidate pairs are tiny next to the corpus.
-    * Shingle arrays are DISTINCT by construction, so |A∪B| = |A|+|B|−|A∩B|:
-    * one intersect pass instead of intersect + union (identical values). */
+  /** (id_a, id_b) pairs with the `payload` column of `rows` (id, payload)
+    * joined back as `<payload>_a` and `<payload>_b`: two id-keyed joins
+    * shuffle each payload at most once — pairs are tiny next to the corpus. */
+  private[operators] def withPayloads(pairs: DataFrame, rows: DataFrame,
+                                      payload: String): DataFrame =
+    Seq("a", "b").foldLeft(pairs)((df, s) => df.join(
+      rows.select(col("id").as(s"id_$s"), col(payload).as(s"${payload}_$s")),
+      Seq(s"id_$s")))
+
+  /** The verify of [[minhashPairs]] and [[simhashJaccardPairs]]: keep the
+    * size-compatible (id_a, id_b, n_a, n_b) candidates ([[sizeCompatible]]),
+    * dedup them, join the shingle arrays back and keep exact Jaccard ≥
+    * threshold. Shingle arrays are DISTINCT by construction, so |A∪B| =
+    * |A|+|B|−|A∩B|: one intersect pass instead of intersect + union
+    * (identical values). */
   private def verifyJaccard(candidates: DataFrame, sh: DataFrame,
                             threshold: Double): DataFrame =
-    candidates
-      .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
+    withPayloads(candidates.where(sizeCompatible(threshold))
+      .select("id_a", "id_b").dropDuplicates("id_a", "id_b"), sh, "sh")
       .withColumn("__i", size(array_intersect(col("sh_a"), col("sh_b"))).cast("double"))
       .withColumn("jaccard",
         col("__i") / (size(col("sh_a")) + size(col("sh_b")) - col("__i")))
@@ -178,11 +187,8 @@ object Dedup {
         posexplode(array((0 until bands).map(b =>
           xxhash64(lit(b), slice(col("sig"), lit(b * rows + 1), lit(rows)))): _*)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
-    val candidates = bucketPairs(banded, "band_hash", Seq("id", "n"), bands,
-        maxBucketSize)
-      .where(sizeCompatible(threshold))
-      .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
-    verifyJaccard(candidates, sh, threshold)
+    verifyJaccard(bucketPairs(banded, "band_hash", Seq("id", "n"), bands, maxBucketSize),
+      sh, threshold)
   }
 
   /** Volume-aware simhash chunk count: the FINEST chunking (most bands —
@@ -368,8 +374,6 @@ object Dedup {
         bandChunks(proj.select(col("id"), col("hash"), size(col("sh")).as("n")),
           "hash", chosenBands),
         "chunk", Seq("id", "n"), chosenBands, maxBucketSize)
-      .where(sizeCompatible(threshold))
-      .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
     verifyJaccard(candidates, proj.select(col("id"), col("sh")), threshold)
   }
 }

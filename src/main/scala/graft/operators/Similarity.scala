@@ -1,23 +1,26 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import graft.functions.Gf
+import graft.functions.{Gf, VecTextOps}
+import graft.sources.LineageSink
 
 /** Similarity search over an embedding column (array<float>).
   *
   * Brute-force top-k is the exactness baseline: broadcast the (small) query
-  * set against the corpus — one pass, no shuffle on the corpus side. The
-  * finisher is a BOUNDED distributed top-k aggregate ([[graft.functions.TopKAgg]]):
-  * every partition ships at most k candidates per query to the final
-  * hash-aggregate, so no single partition ever has to hold the whole
-  * corpus×query candidate set (the round-1 `row_number` window did — a
-  * scale-killer at 10⁹ vectors). The LSH path is the 100-TB shape:
-  * hyperplane-signature buckets bound candidate generation; only
-  * (bucket, id) pairs ride the bucket join — vectors are joined back once
-  * per surviving candidate. Near-dup pairs ([[cosineNearDupPairs]]) come
-  * from the banded generator of the text and image dedup,
-  * [[Dedup.bucketPairs]]. */
+  * set against the corpus — one pass, no shuffle on the corpus side. Every
+  * top-k operator ends in one finisher, [[rankTopK]]: a BOUNDED distributed
+  * top-k aggregate ([[graft.functions.TopKAgg]]) ships at most k candidates
+  * per query and partition to the final hash-aggregate, so no partition
+  * holds the whole corpus×query candidate set (the round-1 `row_number`
+  * window did — a scale-killer at 10⁹ vectors). The LSH path is the 100-TB
+  * shape: hyperplane-signature buckets ([[signatureRows]]) bound candidate
+  * generation; only (bucket, id) pairs ride the bucket join — vectors are
+  * joined back once per surviving candidate. Both IVF searches run
+  * [[searchCells]]. Near-dup pairs ([[cosineNearDupPairs]]) come from the
+  * banded generator of the text and image dedup, [[Dedup.bucketPairs]]. */
 object Similarity {
 
   /** Auto-tuned LSH parameters (see [[suggestLsh]]): `sampledOccupancy` is
@@ -55,18 +58,13 @@ object Similarity {
                  vecCol: String = "embedding"): LshParams = {
     require(designCos > -1.0 && designCos < 1.0, s"designCos out of (-1,1): $designCos")
     require(recallTarget > 0.0 && recallTarget < 1.0, s"recallTarget out of (0,1)")
-    // null embeddings (failed-embed rows, routine at scale) are skipped by
-    // the operators' null-intolerant kernels — skip them in the sample too
-    val rows = corpus.select(col(vecCol)).where(col(vecCol).isNotNull)
-      .orderBy(rand(20260817L)).limit(sampleSize).collect()
-    require(rows.nonEmpty, "suggestLsh: empty corpus (no non-null embeddings)")
-    val vecs = rows.map(r => r.getSeq[Float](0).toArray)
+    val vecs = sampleVectors(corpus, vecCol, sampleSize, 20260817L)
+    require(vecs.nonEmpty, "suggestLsh: empty corpus (no non-null embeddings)")
 
     def occupancy(p: Int): Double = {
       val counts = new java.util.HashMap[java.lang.Long, Integer]()
       vecs.foreach { v =>
-        val sig = graft.functions.VecTextOps.hyperplaneSig(
-          org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(v), p, 2000L)
+        val sig = VecTextOps.hyperplaneSig(ArrayData.toArrayData(v), p, 2000L)
         counts.merge(sig, Integer.valueOf(1), (a, b) => Integer.valueOf(a + b))
       }
       var s2 = 0.0
@@ -147,29 +145,19 @@ object Similarity {
     val model = trainIvf(corpus, nlist, iters, sampleSize, vecCol)
 
     // held-out evaluation sample (different seed than training)
-    val rows = corpus.select(col(vecCol)).where(col(vecCol).isNotNull)
-      .orderBy(rand(20260817L)).limit(sampleSize).collect()
-    val sample: Array[Array[Float]] = rows.iterator
-      .map(_.getSeq[Float](0).toArray).filter(_.exists(_ != 0f)).toArray
+    val sample = sampleVectors(corpus, vecCol, sampleSize, 20260817L)
+      .filter(_.exists(_ != 0f))
     require(sample.length > k,
       s"suggestIvf: evaluation sample too small (${sample.length} <= k=$k)")
-    val cells = sample.map(v =>
-      graft.functions.VecTextOps.ivfCells(
-        org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(v),
-        model.centroids, model.dim, model.nlist).toIntArray())
-    def cosine(a: Array[Float], b: Array[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) {
-        dot += a(i).toDouble * b(i); na += a(i).toDouble * a(i)
-        nb += b(i).toDouble * b(i); i += 1
-      }
-      dot / (math.sqrt(na) * math.sqrt(nb))
-    }
+    val data = sample.map(v => ArrayData.toArrayData(v))
+    val cells = data.map(v =>
+      VecTextOps.ivfCells(v, model.centroids, model.dim, model.nlist).toIntArray())
     val nq = math.min(256, sample.length)
-    // true top-k per query within the sample (exact cosine, ids by index)
+    // true top-k per query within the sample (exact cosine, the vec_cosine
+    // kernel's arithmetic; ids by index)
     val trueTop: Array[Array[Int]] = Array.tabulate(nq) { qi =>
       sample.indices.filter(_ != qi)
-        .sortBy(ci => (-cosine(sample(qi), sample(ci)), ci)).take(k).toArray
+        .sortBy(ci => (-VecTextOps.cosineFF(data(qi), data(ci)), ci)).take(k).toArray
     }
     def recallAt(nprobe: Int): Double = {
       var hit = 0; var total = 0
@@ -196,6 +184,16 @@ object Similarity {
     (model, IvfParams(model.nlist, nprobe, rec))
   }
 
+  /** Up to `n` non-null vectors of `vecCol`, a seeded sample: deterministic
+    * across retries, planned as a per-partition top-K, never a global sort.
+    * Null embeddings (failed-embed rows, routine at scale) are skipped, as
+    * the operators' null-intolerant kernels skip them. */
+  private def sampleVectors(corpus: DataFrame, vecCol: String, n: Int,
+                            seed: Long): Array[Array[Float]] =
+    corpus.select(col(vecCol)).where(col(vecCol).isNotNull)
+      .orderBy(rand(seed)).limit(n).collect()
+      .map(_.getSeq[Float](0).toArray)
+
   private def dotD(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0; var i = 0
     while (i < a.length) { s += a(i) * b(i); i += 1 }
@@ -218,21 +216,13 @@ object Similarity {
                vecCol: String = "embedding"): IvfModel = {
     require(nlist >= 1, s"trainIvf: nlist must be >= 1, got $nlist")
     require(iters >= 1 && sampleSize >= 1, "trainIvf: iters/sampleSize must be >= 1")
-    val rows = corpus.select(col(vecCol)).where(col(vecCol).isNotNull)
-      .orderBy(rand(20260905L)).limit(sampleSize).collect()
-    val sample: Array[Array[Double]] = rows.iterator
-      .map(_.getSeq[Float](0))
-      .flatMap { s =>
-        val a = new Array[Double](s.length)
-        var i = 0; var n2 = 0.0
-        while (i < a.length) { a(i) = s(i); n2 += a(i) * a(i); i += 1 }
-        if (n2 == 0.0 || a.length == 0) None
-        else {
-          val inv = 1.0 / math.sqrt(n2)
-          i = 0; while (i < a.length) { a(i) *= inv; i += 1 }
-          Some(a)
-        }
-      }.toArray
+    val sample: Array[Array[Double]] =
+      sampleVectors(corpus, vecCol, sampleSize, 20260905L).flatMap { s =>
+        val a = s.map(_.toDouble)
+        val n2 = dotD(a, a)
+        if (n2 == 0.0) None
+        else { val inv = 1.0 / math.sqrt(n2); Some(a.map(_ * inv)) }
+      }
     require(sample.nonEmpty,
       "trainIvf: empty corpus (no non-null, non-zero embeddings)")
     val dim = sample(0).length
@@ -344,28 +334,34 @@ object Similarity {
       corpus, queries, k, nprobe, idCol, vecCol)
 
   /** [[ivfTopK]] with a pre-trained quantizer (reuse one model across many
-    * query batches — the production pattern). */
+    * query batches — the production pattern). Cells are assigned and
+    * searched as in the persisted index ([[searchIvfIndex]]). */
   def ivfTopKWith(model: IvfModel, corpus: DataFrame, queries: DataFrame,
                   k: Int, nprobe: Int = 8,
                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(nprobe >= 1, s"ivfTopKWith: nprobe must be >= 1, got $nprobe")
-    val cand = corpus
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("v"))
-      .withColumn("cell",
-        element_at(Gf.ivfCells(col("v"), model.centroids, model.dim, 1), 1))
-    val q = broadcast(queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("cell",
-        explode(Gf.ivfCells(col("qv"), model.centroids, model.dim, nprobe))))
-    // one broadcast hash join on the cell id: a corpus row meets a query at
-    // most once (a query's probed cells are distinct), so no pair dedup
-    val grouped = cand.join(q, Seq("cell"))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine", Gf.vecCosine(col("v"), col("qv")))
-      .groupBy("query_id")
-      .agg(Gf.topKAgg(col("cosine"), col("neighbor_id"), k).as("top"))
-    explodeTopK(grouped)
+    searchCells(corpusSide(corpus, idCol, vecCol).withColumn("cell", topCell(col("v"), model)),
+      probeRows(queries, model, nprobe, idCol, vecCol), k)
   }
+
+  /** The probe side of an IVF search: (query_id, qv, cell), one row per
+    * query and probed cell, the query's `nprobe` nearest cells. */
+  private def probeRows(queries: DataFrame, model: IvfModel, nprobe: Int,
+                        idCol: String, vecCol: String): DataFrame =
+    querySide(queries, idCol, vecCol).withColumn("cell",
+      explode(Gf.ivfCells(col("qv"), model.centroids, model.dim, nprobe)))
+
+  /** A vector's top-1 quantizer cell: the cell a corpus row is assigned. */
+  private def topCell(v: Column, model: IvfModel): Column =
+    element_at(Gf.ivfCells(v, model.centroids, model.dim, 1), 1)
+
+  /** Rank (neighbor_id, v, cell) corpus rows against the `probe` rows: one
+    * broadcast hash join on the cell id — a corpus row meets a query at
+    * most once (a query's probed cells are distinct), so no pair dedup —
+    * then [[rankTopK]]. */
+  private def searchCells(cells: DataFrame, probe: DataFrame, k: Int): DataFrame =
+    rankTopK(cells.join(broadcast(probe), Seq("cell"))
+      .where(col("neighbor_id") =!= col("query_id")), k)
 
   // ---------------- persisted IVF index (LineageSink-bucketed layout) ----
 
@@ -380,52 +376,43 @@ object Similarity {
     * resume that passes the SAME model is a no-op, a DIFFERENT model is a
     * loud error — silently mixing quantizers would split twins across
     * cells and quietly zero recall). */
-  private def saveIvfModel(spark: org.apache.spark.sql.SparkSession,
-                           dir: String, model: IvfModel): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$IvfModelFile")
+  private def saveIvfModel(spark: SparkSession, dir: String, model: IvfModel): Unit = {
+    val (fs, p) = modelFile(spark, dir)
+    // nlist, dim AND centroids: centroids alone would pass two models with
+    // identical flat values but a different (nlist, dim) factorization
+    def sameModel(m: IvfModel) = m.nlist == model.nlist && m.dim == model.dim &&
+      java.util.Arrays.equals(m.centroids, model.centroids)
     if (fs.exists(p)) {
       val existing = readIvfModel(spark, dir)
-      require(existing.nlist == model.nlist && existing.dim == model.dim &&
-        java.util.Arrays.equals(existing.centroids, model.centroids),
+      require(sameModel(existing),
         s"writeIvfIndex: $dir already holds a DIFFERENT quantizer " +
           s"(${existing.nlist}x${existing.dim}); refusing to mix models in one index")
       return
     }
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$dir/.${IvfModelFile}.${java.util.UUID.randomUUID()}")
+    val tmp = new Path(s"$dir/.${IvfModelFile}.${java.util.UUID.randomUUID()}")
     val out = fs.create(tmp, false)
     try {
       val sb = new StringBuilder
       sb.append(model.nlist).append(' ').append(model.dim).append('\n')
-      var i = 0
-      while (i < model.centroids.length) {
-        // java Double toString round-trips exactly
-        sb.append(java.lang.Double.toString(model.centroids(i))).append('\n')
-        i += 1
-      }
+      // java Double toString round-trips exactly
+      model.centroids.foreach(c => sb.append(java.lang.Double.toString(c)).append('\n'))
       out.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } finally out.close()
-    // lost rename race against a concurrent builder: verify FULL equality —
-    // the same three-field check as the exists path above (centroids alone
-    // would pass two models with identical flat values but a different
-    // (nlist, dim) factorization — ADVICE round 5)
+    // lost rename race against a concurrent builder: verify full equality
     if (!fs.rename(tmp, p)) {
       fs.delete(tmp, false)
-      val existing = readIvfModel(spark, dir)
-      require(existing.nlist == model.nlist && existing.dim == model.dim &&
-        java.util.Arrays.equals(existing.centroids, model.centroids),
+      require(sameModel(readIvfModel(spark, dir)),
         s"writeIvfIndex: concurrent builder wrote a different quantizer to $dir")
     }
   }
 
+  private def modelFile(spark: SparkSession, dir: String): (FileSystem, Path) =
+    (new Path(dir).getFileSystem(spark.sessionState.newHadoopConf()),
+      new Path(s"$dir/$IvfModelFile"))
+
   /** Read the quantizer persisted by [[writeIvfIndex]]. */
-  def readIvfModel(spark: org.apache.spark.sql.SparkSession,
-                   dir: String): IvfModel = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$IvfModelFile")
+  def readIvfModel(spark: SparkSession, dir: String): IvfModel = {
+    val (fs, p) = modelFile(spark, dir)
     require(fs.exists(p), s"readIvfModel: no $IvfModelFile under $dir — not an IVF index")
     val in = fs.open(p)
     val lines =
@@ -448,7 +435,7 @@ object Similarity {
 
   /** Build a PERSISTED IVF index: assign each corpus row its top-1 cell
     * (one codegen kernel pass) and write through the lineage sink bucketed
-    * by cell — crash-resumable in `groups` slices ([[graft.sources.LineageSink.writeGrouped]]),
+    * by cell — crash-resumable in `groups` slices ([[LineageSink.writeGrouped]]),
     * exactly-once per bucket, quantizer persisted alongside. The 100-TB
     * point of an IVF index is the LAYOUT: the corpus lands partitioned by
     * cell once, and every later search reads only its probed cells' files
@@ -471,8 +458,7 @@ object Similarity {
   def writeIvfIndex(corpus: DataFrame, dir: String, model: IvfModel,
                     vecCol: String = "embedding", groups: Int = 8): DataFrame = {
     saveIvfModel(corpus.sparkSession, dir, model)
-    graft.sources.LineageSink.writeGrouped(
-      assignCells(corpus, model, vecCol), dir, IvfCellCol, groups)
+    LineageSink.writeGrouped(assignCells(corpus, model, vecCol), dir, IvfCellCol, groups)
   }
 
   /** Append NEW rows to an index built by [[writeIvfIndex]]: assignment
@@ -490,24 +476,23 @@ object Similarity {
   def appendIvfIndex(newRows: DataFrame, dir: String,
                      vecCol: String = "embedding"): DataFrame = {
     val model = readIvfModel(newRows.sparkSession, dir)
-    graft.sources.LineageSink.write(
-      assignCells(newRows, model, vecCol), dir, IvfCellCol)
+    LineageSink.write(assignCells(newRows, model, vecCol), dir, IvfCellCol)
   }
 
-  private def assignCells(df: DataFrame, model: IvfModel,
-                          vecCol: String): DataFrame =
-    df.withColumn(IvfCellCol,
-      element_at(Gf.ivfCells(col(vecCol), model.centroids, model.dim, 1), 1))
+  private def assignCells(df: DataFrame, model: IvfModel, vecCol: String): DataFrame =
+    df.withColumn(IvfCellCol, topCell(col(vecCol), model))
 
   /** Search a persisted IVF index: explode each query into its `nprobe`
-    * nearest cells, prune the sink manifest to the probed buckets (the
-    * probed-cell set is at most `nlist` small ints — a bounded driver
-    * collect), and run the broadcast probe join + bounded top-k over ONLY
-    * those buckets' files. Same output shape as [[bruteForceTopK]];
-    * `nprobe = nlist` reads the whole index and is exact.
+    * nearest cells ([[probeRows]]), prune the sink manifest to the probed
+    * buckets (the probed-cell set is at most `nlist` small ints — a bounded
+    * driver collect), and run the broadcast probe join + bounded top-k
+    * ([[searchCells]], the search of [[ivfTopKWith]]) over ONLY those
+    * buckets' files. Same output shape as [[bruteForceTopK]], the same
+    * schema whether or not a probed bucket holds rows; `nprobe = nlist`
+    * reads the whole index and is exact.
     *
     * `asOfSeq` (round-6): POINT-IN-TIME search — candidates restricted to
-    * commits at or below the given [[graft.sources.LineageSink.latestSeq]]
+    * commits at or below the given [[LineageSink.latestSeq]]
     * boundary, composed WITH the bucket pruning (the manifest is filtered
     * before any file is planned, so a historical pruned search stays
     * O(nprobe/nlist) of the boundary's corpus). Appends never touch the
@@ -537,9 +522,7 @@ object Similarity {
     // fetch means an oversized frame aborts after maxQueryBatch+1 rows, not
     // after OOM. A larger batch should be split by the caller (each slice
     // re-prunes its own cell set — results compose by union).
-    val qPlan = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("cell", explode(Gf.ivfCells(col("qv"), model.centroids,
-        model.dim, nprobe)))
+    val qPlan = probeRows(queries, model, nprobe, idCol, vecCol)
     val qRows = qPlan.limit(maxQueryBatch + 1).collect()
     require(qRows.length <= maxQueryBatch,
       s"searchIvfIndex: query batch exceeds maxQueryBatch=$maxQueryBatch probe " +
@@ -547,40 +530,37 @@ object Similarity {
         s"broadcast; split the query frame into smaller batches and union the " +
         s"results, or raise maxQueryBatch if the driver can hold it")
     val cellAt = qPlan.schema.fieldIndex("cell")
-    val q = spark.createDataFrame(
-      java.util.Arrays.asList(qRows: _*), qPlan.schema)
+    val q = spark.createDataFrame(java.util.Arrays.asList(qRows: _*), qPlan.schema)
     val probed = qRows.map(_.getInt(cellAt)).distinct
     val bucketPred = col("bucket").isin(probed.map(_.toString): _*)
     val cand = asOfSeq match {
-      case Some(seq) => graft.sources.LineageSink
-        .snapshotWhereAsOfSeq(spark, dir, seq, bucketPred)
-      case None => graft.sources.LineageSink.snapshotWhere(spark, dir, bucketPred)
+      case Some(seq) => LineageSink.snapshotWhereAsOfSeq(spark, dir, seq, bucketPred)
+      case None => LineageSink.snapshotWhere(spark, dir, bucketPred)
     }
-    if (cand.columns.isEmpty) {
-      // schema-faithful empty result: id columns keep the QUERY frame's id
-      // type (ids need not be longs), so callers can union/compare against
-      // a non-empty search without a cast
-      val idT = queries.schema(idCol).dataType
-      return queries.limit(0).select(
-        col(idCol).cast(idT).as("query_id"),
-        col(idCol).cast(idT).as("neighbor_id"),
-        lit(0.0).as("cosine"), lit(0).as("rank"))
-    }
-    val grouped = cand
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("v"),
-        col(IvfCellCol).cast("int").as("cell"))
-      .join(broadcast(q), Seq("cell"))
-      .where(col("neighbor_id") =!= col("query_id"))
+    // no probed bucket holds rows: an empty corpus-shaped frame takes the
+    // same path, so the result schema is the non-empty one
+    val cells = if (cand.columns.isEmpty) assignCells(queries.limit(0), model, vecCol) else cand
+    searchCells(cells.select(col(idCol).as("neighbor_id"), col(vecCol).as("v"),
+      col(IvfCellCol).cast("int").as("cell")), q, k)
+  }
+
+  /** The two sides of a top-k search: (neighbor_id, v) and (query_id, qv). */
+  private def corpusSide(corpus: DataFrame, idCol: String, vecCol: String): DataFrame =
+    corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("v"))
+  private def querySide(queries: DataFrame, idCol: String, vecCol: String): DataFrame =
+    queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+
+  /** The one top-k finisher: score each (query_id, qv, neighbor_id, v)
+    * candidate row by cosine, keep each query's k best in the bounded
+    * `topk_agg`, and rank them: (query_id, neighbor_id, cosine, rank) with
+    * rank 1..k by (cosine desc, neighbor_id asc). `topk_agg` returns ids as
+    * longs, so `neighbor_id` is a long whatever the id type. */
+  private def rankTopK(candidates: DataFrame, k: Int): DataFrame =
+    candidates
       .withColumn("cosine", Gf.vecCosine(col("v"), col("qv")))
       .groupBy("query_id")
       .agg(Gf.topKAgg(col("cosine"), col("neighbor_id"), k).as("top"))
-    explodeTopK(grouped)
-  }
-
-  /** Rank rows of a bounded `topk_agg` result array: (query_id, neighbor_id,
-    * cosine, rank) with rank 1..k by (cosine desc, neighbor_id asc). */
-  private def explodeTopK(grouped: DataFrame): DataFrame =
-    grouped.select(col("query_id"), posexplode(col("top")))
+      .select(col("query_id"), posexplode(col("top")))
       .select(col("query_id"), col("col.id").as("neighbor_id"),
         col("col.score").as("cosine"),
         (col("pos") + 1).cast("int").as("rank"))
@@ -588,15 +568,18 @@ object Similarity {
   /** Exact top-k cosine neighbours for each query row.
     * Output: (query_id, neighbor_id, cosine, rank). */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")))
-    val grouped = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("v"))
-      .join(q, col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine", Gf.vecCosine(col("v"), col("qv")))
-      .groupBy("query_id")
-      .agg(Gf.topKAgg(col("cosine"), col("neighbor_id"), k).as("top"))
-    explodeTopK(grouped)
-  }
+                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    rankTopK(corpusSide(corpus, idCol, vecCol)
+      .join(broadcast(querySide(queries, idCol, vecCol)),
+        col("neighbor_id") =!= col("query_id")), k)
+
+  /** One row per input row and table: (`id`, band, sig), `sig` the
+    * `planes`-plane hyperplane signature of the `v` column under seed
+    * `seed + band`, band in [0, tables). */
+  private def signatureRows(rows: DataFrame, id: String, v: String, planes: Int,
+                            tables: Int, seed: Long): DataFrame =
+    rows.select(col(id), posexplode(array((0 until tables).map(t =>
+      Gf.hyperplaneSig(col(v), planes, seed + t)): _*)).as(Seq("band", "sig")))
 
   /** LSH-bucketed approximate top-k: candidates limited to rows sharing the
     * query's hyperplane-signature bucket (multi-probe via `tables`
@@ -607,40 +590,25 @@ object Similarity {
     * planes; weak top-k regimes (cos ≈ 0.4, like random embeddings) need few
     * planes and more tables.
     *
-    * Scale shape: the bucket join carries (neighbor_id, t, sig) only —
-    * 24 bytes/row instead of the embedding payload ×tables; embeddings are
+    * Scale shape: the bucket join carries (neighbor_id, band, sig) only —
+    * 16 bytes/row instead of the embedding payload ×tables; embeddings are
     * joined back ONCE per unique surviving candidate, then the bounded
     * top-k aggregate finishes (no global window). */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               planes: Int = 6, tables: Int = 8,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val sigs = (0 until tables).map(t =>
-      (t, (c: org.apache.spark.sql.Column) => Gf.hyperplaneSig(c, planes, 1000L + t)))
+    val corpusRows = corpusSide(corpus, idCol, vecCol)
+    val queryRows = querySide(queries, idCol, vecCol)
     // bucket rows: ids only — the narrow shuffle
-    val corpusSig = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("v"))
-      .select(col("neighbor_id"),
-        explode(array(sigs.map { case (t, f) =>
-          struct(lit(t).as("t"), f(col("v")).as("sig")) }: _*)).as("b"))
-      .select(col("neighbor_id"), col("b.t").as("t"), col("b.sig").as("sig"))
-    val querySig = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .select(col("query_id"),
-        explode(array(sigs.map { case (t, f) =>
-          struct(lit(t).as("t"), f(col("qv")).as("sig")) }: _*)).as("b"))
-      .select(col("query_id"), col("b.t").as("t"), col("b.sig").as("sig")))
-    val candidates = corpusSig.join(querySig, Seq("t", "sig"))
+    val candidates = signatureRows(corpusRows, "neighbor_id", "v", planes, tables, 1000L)
+      .join(broadcast(signatureRows(queryRows, "query_id", "qv", planes, tables, 1000L)),
+        Seq("band", "sig"))
       .where(col("neighbor_id") =!= col("query_id"))
       .select("query_id", "neighbor_id")
       .dropDuplicates("query_id", "neighbor_id")
     // join the payload back once per candidate
-    val qv = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")))
-    val grouped = candidates
-      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("v")),
-        Seq("neighbor_id"))
-      .join(qv, Seq("query_id"))
-      .withColumn("cosine", Gf.vecCosine(col("v"), col("qv")))
-      .groupBy("query_id")
-      .agg(Gf.topKAgg(col("cosine"), col("neighbor_id"), k).as("top"))
-    explodeTopK(grouped)
+    rankTopK(candidates.join(corpusRows, Seq("neighbor_id"))
+      .join(broadcast(queryRows), Seq("query_id")), k)
   }
 
   /** Embedding near-duplicate pairs via signature buckets + exact cosine
@@ -655,24 +623,21 @@ object Similarity {
     * candidate set itself is the dominant volume: the round-4 CosProbe
     * measured the full op at 16.1 s with that exchange, 5-7 s without, on
     * a 15.8M-candidate corpus at local[8]). A pair sharing a capped early
-    * bucket is still recovered through an uncapped later table. Vectors
-    * are joined back once per candidate. */
+    * bucket is still recovered through an uncapped later table. The
+    * signature rows are [[lshTopK]]'s ([[signatureRows]]) under seeds
+    * 2000 + t. Vectors are joined back once per candidate
+    * ([[Dedup.withPayloads]], the join-back of the text verify). */
   def cosineNearDupPairs(corpus: DataFrame, threshold: Double,
                          planes: Int = 16, tables: Int = 4,
                          idCol: String = "vec_id", vecCol: String = "embedding",
                          maxBucketSize: Int = 10000): DataFrame = {
     val ids = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val sigArr = array((0 until tables).map(t =>
-      Gf.hyperplaneSig(col("v"), planes, 2000L + t)): _*)
     // oversized buckets (zero/duplicate vectors all share a signature)
     // would square — same explicit cap as Dedup
-    val banded = ids.select(col("id"), posexplode(sigArr).as(Seq("band", "sig")))
-    val candidates = Dedup.bucketPairs(banded, "sig", Seq("id"), tables, maxBucketSize,
-        keptKeys = true)
+    val candidates = Dedup.bucketPairs(signatureRows(ids, "id", "v", planes, tables, 2000L),
+        "sig", Seq("id"), tables, maxBucketSize, keptKeys = true)
       .select("id_a", "id_b")
-    candidates
-      .join(ids.select(col("id").as("id_a"), col("v").as("v_a")), Seq("id_a"))
-      .join(ids.select(col("id").as("id_b"), col("v").as("v_b")), Seq("id_b"))
+    Dedup.withPayloads(candidates, ids, "v")
       .withColumn("cosine", Gf.vecCosine(col("v_a"), col("v_b")))
       .where(col("cosine") >= threshold)
       .select("id_a", "id_b")

@@ -114,8 +114,18 @@ object DedupScaleDrive {
       emb.select((col("vec_id") + lit(r.toLong * 10000000L)).as("vec_id"),
         transform(col("embedding"), flip).as("embedding"))
     }.reduce(_ unionAll _)
+    // every 5th vector gets a planted copy under a new id, scaled ×2 (the
+    // cosine is 1.0 and every signature agrees), the way the phash probe
+    // plants its copies, so the verify always has pairs to confirm. The
+    // count is not one pair per copy: with the copies unioned in, the
+    // replica sign flips above read back unapplied (cross-replica cosine
+    // 1.0), so at M=4 it is 20,800 where a DuckDB recount of the intended
+    // corpus finds 1,600
+    val planted = vecs.unionAll(vecs.where(col("vec_id") % 5 === 0).select(
+      (col("vec_id") + lit(1000000000L)).as("vec_id"),
+      transform(col("embedding"), x => x * 2).as("embedding")))
     run("cosine_neardup") {
-      graft.operators.Similarity.cosineNearDupPairs(vecs, 0.95).count()
+      graft.operators.Similarity.cosineNearDupPairs(planted, 0.95).count()
     }
     // ANN probes over the replicated corpus: 200 fixed queries against the
     // M×-grown corpus — per-query work grows linearly in corpus size for

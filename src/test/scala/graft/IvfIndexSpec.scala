@@ -172,6 +172,18 @@ class IvfIndexSpec extends AnyFunSuite {
       "grouped build write must keep per-cell exactly-once (resume) semantics")
   }
 
+  test("an as-of search before the first commit has the schema of a non-empty search") {
+    val dir = freshDir()
+    val intIds = corpus.select(col("vec_id").cast("int").as("vec_id"), col("embedding"))
+    val intQueries = queries.select(col("vec_id").cast("int").as("vec_id"), col("embedding"))
+    Similarity.writeIvfIndex(intIds, dir, model, groups = 1)
+    val empty = Similarity.searchIvfIndex(intQueries, dir, 5, asOfSeq = Some(0))
+    val full = Similarity.searchIvfIndex(intQueries, dir, 5)
+    assert(empty.collect().isEmpty && full.collect().nonEmpty)
+    def fields(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => (f.name, f.dataType))
+    assert(fields(empty) === fields(full))
+  }
+
   test("model round-trips exactly through the persisted file") {
     val dir = freshDir()
     Similarity.writeIvfIndex(corpus.limit(50), dir, model, groups = 1)
