@@ -299,19 +299,4 @@ object Gf {
       s"pow(sin(radians(($lat2) - ($lat1)) / 2), 2) + " +
       s"cos(radians($lat1)) * cos(radians($lat2)) * " +
       s"pow(sin(radians(($lng2) - ($lng1)) / 2), 2))))"
-
-  /** Slippy tile (x, y) for a point — pure built-in column math, fully
-    * codegen'd, zero custom code in the hot path (reference math:
-    * slippy_map_regionalizer.py:105-117). The formula is also directly
-    * expressible in ANSI SQL for the DuckDB oracle. */
-  def slippyX(lng: Column, zoom: Int): Column =
-    least(lit((1 << zoom) - 1), greatest(lit(0),
-      floor((lng + 180.0) / 360.0 * (1 << zoom)).cast("int")))
-
-  def slippyY(lat: Column, zoom: Int): Column =
-    least(lit((1 << zoom) - 1), greatest(lit(0),
-      floor((lit(1.0) - asinh(tan(radians(lat))) / math.Pi) / 2.0 * (1 << zoom)).cast("int")))
-
-  def slippyId(lng: Column, lat: Column, zoom: Int): Column =
-    concat_ws("_", slippyX(lng, zoom), slippyY(lat, zoom), lit(zoom))
 }

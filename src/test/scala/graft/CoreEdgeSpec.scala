@@ -76,6 +76,36 @@ class CoreEdgeSpec extends AnyFunSuite {
     assert(Geo.toWktShapely(Geo.fromWkt("POLYGON EMPTY")) === "POLYGON EMPTY")
   }
 
+  test("the level-5 pole cell is one cell at every longitude, with the pole as a vertex") {
+    // lat 90 is face 2's centre, (i, j) = (2^29, 2^29): Hilbert position 2
+    // at level 1, then 0 — token 5004, as the reference S2CellId gives
+    val pole = S2.lngLatToCell(0, 90, 5)
+    assert(S2.toToken(pole) === "5004")
+    for (lng <- Seq(-180.0, -90.0, 45.0, 90.0, 180.0))
+      assert(S2.lngLatToCell(lng, 90, 5) === pole, s"lng $lng")
+    assert(S2.cellVertices(pole).count(_._2 > 90 - 1e-9) === 1)
+  }
+
+  test("lng 180 and -180 on the equator land in the two edge-adjacent cells cornered there") {
+    // (±180, 0) is face 3's centre, a corner of four cells. sin(±π) is
+    // ±1.2e-16, not 0, so the two longitudes fall on either side of the
+    // antimeridian edge, as in the reference's S2LatLng.ToPoint: both
+    // cells hold the point as a vertex
+    val east = S2.lngLatToCell(180, 0, 5)
+    val west = S2.lngLatToCell(-180, 0, 5)
+    assert((S2.toToken(east), S2.toToken(west)) === (("6ffc", "7004")))
+    assert(S2.edgeNeighbors(east).contains(west))
+    for (c <- Seq(east, west))
+      assert(S2.cellVertices(c).exists { case (lng, lat) =>
+        math.abs(lng) == 180.0 && lat == 0.0 })
+  }
+
+  test("the cover of POLYGON EMPTY is empty") {
+    val empty = Geo.fromWkt("POLYGON EMPTY")
+    assert(S2.cover(empty, 7).isEmpty)
+    assert(H3.cover(empty, 7).isEmpty)
+  }
+
   test("image dims are header-only and fail clearly on undecodable bytes") {
     val px = Array.tabulate(12)(i => i * 1000)
     val png = ImageOps.encode(px, 4, 3, "png")

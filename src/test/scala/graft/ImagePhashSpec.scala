@@ -11,8 +11,8 @@ import graft.sources.Images
   * detector the md5 exact pass cannot express. Ground truth comes from the
   * deterministic synthetic corpus: images sharing a pattern are
   * byte-identical (phash hamming 0), a jpeg re-encode moves the phash by at
-  * most 1 bit on every one of the 512 patterns (PhashProbe), and distinct
-  * patterns differ visually. */
+  * most 1 bit on every one of the 512 patterns (the "PhashProbe ground
+  * truth" test below), and distinct patterns differ visually. */
 class ImagePhashSpec extends AnyFunSuite {
   import SparkTestSession.spark
 
@@ -20,7 +20,6 @@ class ImagePhashSpec extends AnyFunSuite {
     Images.synthesize(spark, n.toLong, patterns).toDF()
 
   test("phashPairsFromBytes finds every planted re-encoded copy at hamming <= 3") {
-    Gf.register(spark)
     val base = images(120).select(col("image_id"), col("bytes"))
     val aug = base.unionAll(
       base.where(Images.key(col("image_id")) % 3 === 0)
@@ -38,7 +37,6 @@ class ImagePhashSpec extends AnyFunSuite {
   }
 
   test("phashPairs on the precomputed column matches the bytes path exactly") {
-    Gf.register(spark)
     val withHash = images(90)
       .select(col("image_id"), col("bytes"), col("phash"))
     val fromBytes = Dedup.phashPairsFromBytes(withHash, "image_id", "bytes",
@@ -60,7 +58,6 @@ class ImagePhashSpec extends AnyFunSuite {
     }).toSet
 
   test("far pairs are rejected and pigeonhole recall is exhaustive vs brute force") {
-    Gf.register(spark)
     val n = 80
     val df = images(n, patterns = 40).select(col("image_id"), col("phash"))
     val rows = df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
@@ -108,7 +105,6 @@ class ImagePhashSpec extends AnyFunSuite {
   }
 
   test("null hashes pair with nothing; the non-null rows' pairs are unchanged") {
-    Gf.register(spark)
     val df = images(80, patterns = 40)
       .select(col("image_id"),
         when(Images.key(col("image_id")) % 4 =!= 0, col("phash")).as("phash"))
@@ -124,7 +120,6 @@ class ImagePhashSpec extends AnyFunSuite {
   }
 
   test("bands=0 volume-aware width still finds identical-hash pairs") {
-    Gf.register(spark)
     val df = images(60, patterns = 30).select(col("image_id"), col("phash"))
     // identical-copy recall is width-independent: pattern twins share the
     // hash, hence every chunk at every width
@@ -140,5 +135,17 @@ class ImagePhashSpec extends AnyFunSuite {
     val re = ImageOps.reencode(r.bytes, "jpeg")
     assert(!java.util.Arrays.equals(r.bytes, re))
     assert(java.lang.Long.bitCount(r.phash ^ ImageOps.phash(re)) <= 1)
+  }
+
+  test("PhashProbe ground truth: a jpeg re-encode moves the phash <= 1 bit on all 512 patterns") {
+    // q65 and the benchmark's planted-pair check rely on this bound
+    val dist = (0 until 512).map { pat =>
+      val r = Images.row(pat.toLong, 512)
+      pat -> java.lang.Long.bitCount(r.phash ^
+        ImageOps.phash(ImageOps.reencode(r.bytes, "jpeg")))
+    }
+    assert(dist.filter(_._2 > 1) === Seq.empty, "patterns moved by more than 1 bit")
+    assert(dist.groupBy(_._2).map { case (d, ps) => d -> ps.size } ===
+      Map(0 -> 493, 1 -> 19))
   }
 }

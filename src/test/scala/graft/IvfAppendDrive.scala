@@ -38,8 +38,6 @@ object IvfAppendDrive {
         (pmod(xxhash64(col("id"), j), lit(2000L)).cast("double") / lit(1000.0)
           - lit(1.0)).cast("float")).as("embedding"))
 
-  private def ms(t0: Long): Long = (System.nanoTime() - t0) / 1000000
-
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(256000L)
     val appends = args.drop(1).headOption.map(_.toInt).getOrElse(16)
@@ -59,13 +57,10 @@ object IvfAppendDrive {
           math.rint(r.getDouble(2) * 1e9) / 1e9)).toSeq.sortBy(_._1)
 
     // ---- build at N/2 ----
-    val t0 = System.nanoTime()
-    val model = Similarity.trainIvf(vecs(spark, 0L, base), nlist,
-      iters = 5, sampleSize = 16384)
-    val trainMs = ms(t0)
-    val tB = System.nanoTime()
-    Similarity.writeIvfIndex(vecs(spark, 0L, base), dir, model, groups = 4)
-    val buildMs = ms(tB)
+    val (model, trainS) = Drive.timed("train")(Similarity.trainIvf(
+      vecs(spark, 0L, base), nlist, iters = 5, sampleSize = 16384))
+    val (_, buildS) = Drive.timed("build")(
+      Similarity.writeIvfIndex(vecs(spark, 0L, base), dir, model, groups = 4))
 
     val fileCounts = scala.collection.mutable.ArrayBuffer.empty[Int]
     val searchMs = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -79,10 +74,8 @@ object IvfAppendDrive {
       // The batched 20-query search amortizes; the RATIO is measured on a
       // 2-query slice (a 20-query × 8-probe union can legitimately touch
       // most of a small cell space — that is batching, not a pruning miss)
-      val tS = System.nanoTime()
-      val pruned = Similarity.searchIvfIndex(queries, dir, 10, nprobe = 8)
-      pruned.count()
-      searchMs += ms(tS)
+      searchMs += Drive.ms(Drive.timed("search")(
+        Similarity.searchIvfIndex(queries, dir, 10, nprobe = 8).count())._2)
       val planned = Similarity.searchIvfIndex(queries.limit(2), dir, 10,
         nprobe = 8).inputFiles.length
       pruneRatios += planned.toDouble / total
@@ -98,40 +91,34 @@ object IvfAppendDrive {
     }
 
     afterState(base)
-    val tA = System.nanoTime()
-    for (b <- 0 until appends) {
-      Similarity.appendIvfIndex(
-        vecs(spark, base + b * batch, base + (b + 1) * batch), dir)
-      afterState(base + (b + 1) * batch)
-    }
-    val appendTotalMs = ms(tA)
+    val (_, appendTotalS) = Drive.timed("append")(
+      for (b <- 0 until appends) {
+        Similarity.appendIvfIndex(
+          vecs(spark, base + b * batch, base + (b + 1) * batch), dir)
+        afterState(base + (b + 1) * batch)
+      })
 
     // ---- round-6 maintenance against the append-grown shape ----
     // the VERDICT #1 "Done =" measurement: full-snapshot read time at the
     // many-small-files state vs after compaction (>= 5x drop expected)
-    val tSnapB = System.nanoTime()
-    val snapRowsBefore = LineageSink.snapshot(spark, dir).count()
-    val snapshotBeforeMs = ms(tSnapB)
+    val (snapRowsBefore, snapshotBeforeS) = Drive.timed("snapshot")(
+      LineageSink.snapshot(spark, dir).count())
     val before = topOf(Similarity.searchIvfIndex(queries, dir, 10, nprobe = 8))
     val beforeExact = topOf(
       Similarity.searchIvfIndex(queries, dir, 10, nprobe = nlist))
-    val tC = System.nanoTime()
-    val compacted = LineageSink.compactData(spark, dir)
-    val compactMs = ms(tC)
+    val (compacted, compactS) = Drive.timed("compact")(
+      LineageSink.compactData(spark, dir))
     val filesAfterCompact = LineageSink.snapshot(spark, dir).inputFiles.length
-    val tS2 = System.nanoTime()
-    val prunedAfter = Similarity.searchIvfIndex(queries, dir, 10, nprobe = 8)
-    val after = topOf(prunedAfter)
-    val searchAfterCompactMs = ms(tS2)
+    val (after, searchAfterCompactS) = Drive.timed("search")(
+      topOf(Similarity.searchIvfIndex(queries, dir, 10, nprobe = 8)))
     val plannedAfter = Similarity.searchIvfIndex(queries.limit(2), dir, 10,
       nprobe = 8).inputFiles.length
     require(after == before, "compaction changed the pruned search")
     require(topOf(Similarity.searchIvfIndex(queries, dir, 10,
       nprobe = nlist)) == beforeExact, "compaction changed the exact search")
 
-    val tSnapA = System.nanoTime()
-    val snapRowsAfter = LineageSink.snapshot(spark, dir).count()
-    val snapshotAfterMs = ms(tSnapA)
+    val (snapRowsAfter, snapshotAfterS) = Drive.timed("snapshot")(
+      LineageSink.snapshot(spark, dir).count())
     require(snapRowsAfter == snapRowsBefore && snapRowsAfter == n,
       s"compaction changed the row count: $snapRowsBefore -> $snapRowsAfter")
 
@@ -145,19 +132,19 @@ object IvfAppendDrive {
       catch { case e: IllegalArgumentException =>
         e.getMessage.contains("expiry watermark") }
 
-    println(s"""{"drive":"ivf-append","n":$n,"appends":$appends,""" +
-      s""""nlist":$nlist,"train_ms":$trainMs,"build_ms":$buildMs,""" +
-      s""""append_total_ms":$appendTotalMs,"exact_rounds":$exactRounds,""" +
-      s""""file_counts":[${fileCounts.mkString(",")}],""" +
-      s""""search_ms":[${searchMs.mkString(",")}],""" +
-      s""""prune_ratios":[${pruneRatios.map(r => f"$r%.4f").mkString(",")}],""" +
-      s""""snapshot_before_ms":$snapshotBeforeMs,""" +
-      s""""snapshot_after_ms":$snapshotAfterMs,""" +
-      s""""compacted_buckets":$compacted,"compact_ms":$compactMs,""" +
-      s""""files_after_compact":$filesAfterCompact,""" +
-      s""""planned_after_compact":$plannedAfter,""" +
-      s""""search_after_compact_ms":$searchAfterCompactMs,""" +
-      s""""expired_files":$deleted,"below_watermark_refused":$refused}""")
+    Drive.report("ivf-append", "n" -> n, "appends" -> appends,
+      "nlist" -> nlist, "train_ms" -> Drive.ms(trainS),
+      "build_ms" -> Drive.ms(buildS),
+      "append_total_ms" -> Drive.ms(appendTotalS), "exact_rounds" -> exactRounds,
+      "file_counts" -> fileCounts, "search_ms" -> searchMs,
+      "prune_ratios" -> pruneRatios.map(r => math.rint(r * 1e4) / 1e4),
+      "snapshot_before_ms" -> Drive.ms(snapshotBeforeS),
+      "snapshot_after_ms" -> Drive.ms(snapshotAfterS),
+      "compacted_buckets" -> compacted, "compact_ms" -> Drive.ms(compactS),
+      "files_after_compact" -> filesAfterCompact,
+      "planned_after_compact" -> plannedAfter,
+      "search_after_compact_ms" -> Drive.ms(searchAfterCompactS),
+      "expired_files" -> deleted, "below_watermark_refused" -> refused)
     spark.stop()
   }
 }

@@ -21,8 +21,6 @@ import graft.sources.LineageSink
   * (defaults 1100, 4 → ~4,400 files). Prints one JSON line for BASELINE.md.
   */
 object LineageCompactionDrive {
-  private def ms(t0: Long): Long = (System.nanoTime() - t0) / 1000000
-
   def main(args: Array[String]): Unit = {
     val tasks = args.headOption.map(_.toInt).getOrElse(1100)
     val buckets = args.drop(1).headOption.map(_.toInt).getOrElse(4)
@@ -39,20 +37,17 @@ object LineageCompactionDrive {
 
     def probe(): (Int, Long, Long, Long) = {
       // fresh plans each call: plan (driver file-listing term) vs read
-      val tP = System.nanoTime()
-      val files = LineageSink.snapshot(spark, dir).inputFiles.length
-      val planMs = ms(tP)
-      val tR = System.nanoTime()
-      val n = LineageSink.snapshot(spark, dir).count()
-      (files, planMs, ms(tR), n)
+      val (files, planS) = Drive.timed("plan")(
+        LineageSink.snapshot(spark, dir).inputFiles.length)
+      val (n, readS) = Drive.timed("read")(LineageSink.snapshot(spark, dir).count())
+      (files, Drive.ms(planS), Drive.ms(readS), n)
     }
 
     val (files0, plan0, read0, n0) = probe()
     require(n0 == rows, s"row count $n0 != $rows before compaction")
 
-    val tC = System.nanoTime()
-    val compacted = LineageSink.compactData(spark, dir)
-    val compactMs = ms(tC)
+    val (compacted, compactS) = Drive.timed("compact")(
+      LineageSink.compactData(spark, dir))
     val (files1, plan1, read1, n1) = probe()
     require(n1 == rows, s"row count $n1 != $rows after compaction")
     require(compacted == buckets, s"compacted $compacted != $buckets buckets")
@@ -63,14 +58,14 @@ object LineageCompactionDrive {
     val (files2, plan2, read2, n2) = probe()
     require(n2 == rows, s"row count $n2 != $rows after expiry")
 
-    println(s"""{"drive":"lineage-compaction","tasks":$tasks,""" +
-      s""""buckets":$buckets,"rows":$rows,""" +
-      s""""files_before":$files0,"plan_before_ms":$plan0,"read_before_ms":$read0,""" +
-      s""""compacted_buckets":$compacted,"compact_ms":$compactMs,""" +
-      s""""files_after":$files1,"plan_after_ms":$plan1,"read_after_ms":$read1,""" +
-      s""""expired_files":$deleted,""" +
-      s""""files_post_expiry":$files2,"plan_post_expiry_ms":$plan2,""" +
-      s""""read_post_expiry_ms":$read2}""")
+    Drive.report("lineage-compaction", "tasks" -> tasks,
+      "buckets" -> buckets, "rows" -> rows,
+      "files_before" -> files0, "plan_before_ms" -> plan0, "read_before_ms" -> read0,
+      "compacted_buckets" -> compacted, "compact_ms" -> Drive.ms(compactS),
+      "files_after" -> files1, "plan_after_ms" -> plan1, "read_after_ms" -> read1,
+      "expired_files" -> deleted,
+      "files_post_expiry" -> files2, "plan_post_expiry_ms" -> plan2,
+      "read_post_expiry_ms" -> read2)
     spark.stop()
   }
 }

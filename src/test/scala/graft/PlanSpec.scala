@@ -133,8 +133,6 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     import org.apache.spark.sql.execution.window.WindowExec
-    import graft.functions.Gf
-    Gf.register(spark)
     // a cached leaf: AQE reuses a repeated exchange only over file scans,
     // so a self-join here evaluates the banded input once per side
     val imgs = graft.sources.Images.synthesize(spark, 60L, 30).toDF()

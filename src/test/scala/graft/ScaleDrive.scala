@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 /** Scale probe (not a test): runs the image pipeline on a synthesized table
   * N× the bench volume to show throughput HOLDS as data grows — the
   * plan has no term that scales worse than linearly (generator →
-  * per-row encode → broadcast cell join → partial agg).
+  * per-row encode → broadcast cell join → partial agg). Prints one JSON
+  * line per pass and one for the total.
   *
   *   sbt "Test/runMain graft.ScaleDrive [nImages] [cpus]"
   */
@@ -20,10 +21,9 @@ object ScaleDrive {
     Images.synthesize(spark, 4000).toDF.select(md5(col("bytes"))).distinct().count()
 
     def run(name: String)(f: => Long): Double = {
-      val t0 = System.nanoTime()
-      val rows = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[scale] $name%-22s n=$n rows=$rows sec=$sec%8.2f imgs/s=${n / sec}%10.0f")
+      val (rows, sec) = Drive.timed(name)(f)
+      Drive.report("scale", "op" -> name, "n" -> n, "rows" -> rows, "sec" -> sec,
+        "imgs/s" -> n / sec)
       sec
     }
 
@@ -47,7 +47,8 @@ object ScaleDrive {
     val t3 = run("exact_dedup") {
       img.groupBy(md5(col("bytes"))).agg(count(lit(1))).count()
     }
-    println(f"[scale] TOTAL images/sec = ${n * 3 / (t1 + t2 + t3)}%10.0f over 3 passes of $n images")
+    Drive.report("scale", "op" -> "TOTAL", "n" -> n, "passes" -> 3,
+      "images/sec" -> n * 3 / (t1 + t2 + t3))
     spark.stop()
   }
 }

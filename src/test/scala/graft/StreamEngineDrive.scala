@@ -100,22 +100,22 @@ object StreamEngineDrive {
       .option("checkpointLocation", checkpoint)
       .start()
 
-    val t0 = System.nanoTime()
-    for (batch <- batches) {
-      source.addData(batch: _*)
+    val (_, drainedS) = Drive.timed("drain") {
+      for (batch <- batches) {
+        source.addData(batch: _*)
+        query.processAllAvailable()
+      }
+      // close every open session: a far-future sentinel event pushes the
+      // watermark past end+gap for all real users (watermarks only advance
+      // with data)
+      val flushTs = events.map(_.ts.getTime).max + Gap + 7200000L + 3600000L
+      source.addData(SessEventTs(SentinelUser, new java.sql.Timestamp(flushTs), 999999L))
+      query.processAllAvailable()
+      // one more empty-ish cycle so EventTimeTimeout fires for keys with no data
+      source.addData(SessEventTs(SentinelUser,
+        new java.sql.Timestamp(flushTs + 600000L), 999998L))
       query.processAllAvailable()
     }
-    // close every open session: a far-future sentinel event pushes the
-    // watermark past end+gap for all real users (watermarks only advance
-    // with data)
-    val flushTs = events.map(_.ts.getTime).max + Gap + 7200000L + 3600000L
-    source.addData(SessEventTs(SentinelUser, new java.sql.Timestamp(flushTs), 999999L))
-    query.processAllAvailable()
-    // one more empty-ish cycle so EventTimeTimeout fires for keys with no data
-    source.addData(SessEventTs(SentinelUser,
-      new java.sql.Timestamp(flushTs + 600000L), 999998L))
-    query.processAllAvailable()
-    val drainedMs = (System.nanoTime() - t0) / 1000000
     // the engine has drained — disarm the watchdog BEFORE comparison and
     // teardown, so a slow stop() near the deadline can't be halt(3)-ed
     // into a false "hang" verdict
@@ -143,8 +143,9 @@ object StreamEngineDrive {
 
     query.stop()
     val ok = got == want
-    println(s"""{"drive":"stream-engine","mode":"$mode","drained_ms":$drainedMs,""" +
-      s""""sessions_got":${got.size},"sessions_want":${want.size},"match":$ok}""")
+    Drive.report("stream-engine", "mode" -> mode,
+      "drained_ms" -> Drive.ms(drainedS), "sessions_got" -> got.size,
+      "sessions_want" -> want.size, "match" -> ok)
     if (!ok) {
       (want -- got).take(5).foreach(r => println(s"MISSING: $r"))
       (got -- want).take(5).foreach(r => println(s"EXTRA:   $r"))

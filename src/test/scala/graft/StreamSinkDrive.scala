@@ -43,9 +43,7 @@ object StreamSinkDrive {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
 
-    val t0 = System.nanoTime()
-    val q1 = start(); q1.awaitTermination()
-    val streamMs = (System.nanoTime() - t0) / 1000000
+    val (_, streamS) = Drive.timed("stream")(start().awaitTermination())
 
     val batches = new java.io.File(s"$ckpt/commits")
       .listFiles().filter(_.getName.forall(_.isDigit)).map(_.getName.toLong).sorted
@@ -75,16 +73,14 @@ object StreamSinkDrive {
     val crc = new java.io.File(last.getParentFile, s".${last.getName}.crc")
     if (crc.exists()) require(crc.delete())
     require(last.delete())
-    val tR = System.nanoTime()
-    val q2 = start(); q2.awaitTermination()
-    val replayMs = (System.nanoTime() - tR) / 1000000
+    val (_, replayS) = Drive.timed("replay")(start().awaitTermination())
     val (n2, d2, sums2) = state()
     require(n2 == truthN && d2 == truthN && sums2 == truthSums,
       s"replayed batch duplicated or lost rows: $n2 rows / $d2 distinct")
 
-    println(s"""{"drive":"stream-sink","rows":$truthN,"batches":${batches.length},""" +
-      s""""stream_ms":$streamMs,"replay_ms":$replayMs,""" +
-      s""""exactly_once":true}""")
+    Drive.report("stream-sink", "rows" -> truthN, "batches" -> batches.length,
+      "stream_ms" -> Drive.ms(streamS), "replay_ms" -> Drive.ms(replayS),
+      "exactly_once" -> true)
     spark.stop()
   }
 }
